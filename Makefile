@@ -9,8 +9,10 @@ zip:
 	rm -f refimage_spark.zip
 	zip -r refimage_spark.zip refimage_spark -x '*/__pycache__/*' -x '*.pyc'
 
+# the ROADMAP tier-1 command: every test runs, collection errors included
 test:
-	python -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 bench:
 	python bench.py

@@ -6,7 +6,7 @@ Runs the headline workload at $SPARK_GRAFT_SF_DIR (default
 - index_build          : segment-index build over a deterministic
                          synthetic pages corpus (BASELINE.json metric:
                          docs/sec; also postings/sec + bytes)
-- index query p95      : BM25 top-10 via the segment/WAND engine over
+- index query p95      : BM25 top-10 via the segment engine over
                          the FIXTURES.md §3 reference query set
 - oracle query set     : the same queries as DataFrame plans
 - dedup / ann / text   : training-data pipeline headliners
@@ -153,17 +153,16 @@ def main() -> None:
     extras["query_spark_df_sec"] = timed(
         lambda: search_index(spark, idx_dir, INDEX_QUERIES[0], k=10).collect()
     )
-    # WAND opt-in instrumentation on the head-term query: wall time vs the
-    # vectorized default + decoded/total block counters. Kept auditable
-    # every round because the serving default (vectorized) is a MEASURED
-    # choice — see BENCH/BASELINE.md "WAND regime": at cache-sized
-    # segments the numpy sweep wins on wall time, and on this flat-score
-    # corpus rank-safe pruning cannot skip blocks at k=10.
+    # Block-pruning instrumentation on the head-term query: wall time of
+    # the text scorer + decoded/total block counters. The wand_* keys
+    # keep the names they had when a separate document-at-a-time WAND
+    # loop produced them; one term gives MaxScore nothing to skip, so
+    # every block is decoded and the lap times the plain scan.
     wand_ctr: dict = {}
 
     def _wand_lap():
         wand_ctr.clear()  # counters accumulate; report one lap's worth
-        search_local(idx_dir, "car", k=10, use_wand=True, counters=wand_ctr)
+        search_local(idx_dir, "car", k=10, counters=wand_ctr)
 
     extras["wand_head_term_sec"] = timed(_wand_lap)
     extras["vec_head_term_sec"] = timed(

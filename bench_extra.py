@@ -192,14 +192,15 @@ def main() -> None:
             spark, "ann_ivf", lambda: SIM.ivf_topk(spark, ann_dir, qv, k=10)
         )
 
-    # --- WAND in the regime it wins (VERDICT r5 #4) --------------------------
+    # --- block-max pruning in the regime it wins (VERDICT r5 #4) -------------
     # The headline corpus is flat-score by construction (uniform tf/dl),
-    # where rank-safe WAND cannot skip blocks at k=10 — bench.py records
+    # where rank-safe pruning cannot skip blocks at k=10 — bench.py records
     # that honestly (wand_block_skip_pct 0.0). This section measures the
     # idf-skewed regime the pytest pins (test_wand_skips_block_decode),
     # at serving size: a 2.56M-posting head term plus a rare high-idf
     # term. Published so the block-max machinery's benefit is a number,
-    # not only a test.
+    # not only a test. wand_skew_wand_sec times the block-pruned scorer,
+    # wand_skew_vec_sec the full scan.
     if not only or "wand_skew" in only:
         import numpy as np
         import pyarrow as pa

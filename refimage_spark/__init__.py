@@ -7,7 +7,7 @@ Spark engine over web-page text:
 - ingest / dedup / metadata table ops   (reference: src/refimage/storage.py)
 - lexical inverted index (segments: delta+varbyte postings, block-max)
   replacing the FAISS flat index        (reference: src/refimage/search/__init__.py)
-- BM25 top-k query engine with block-max WAND pruning, thresholds,
+- BM25 top-k query engine with block-max pruning, thresholds,
   per-clause weights                    (reference: src/refimage/search/__init__.py:202-266)
 - boolean query DSL AND/OR/NOT/#tag/^w  (reference: src/refimage/dsl.py)
 - training-data pipeline operators: dedup (exact/minhash/simhash/

@@ -1,4 +1,4 @@
-"""The from-scratch inverted-index engine (segments, codec, WAND query).
+"""The from-scratch inverted-index engine (segments, codec, BM25 query).
 
 Replaces the reference's FAISS flat index + pickle sidecar
 (/root/reference/src/refimage/search/__init__.py) with:
@@ -11,7 +11,8 @@ Replaces the reference's FAISS flat index + pickle sidecar
   story is structural, not a patch.
 - a manifest of committed segments = checkpoint + lineage unit; builds
   resume by skipping committed partitions.
-- query: per-segment exact BM25 top-k (vectorized term-at-a-time or
-  block-max WAND), then a global top-k merge. Docs live in exactly one
+- query: per-segment exact BM25 top-k (one vectorized term-at-a-time
+  scorer; text queries decode only the blocks a block-max MaxScore
+  step keeps), then a global top-k merge. Docs live in exactly one
   segment, so merging per-segment top-ks is exact.
 """

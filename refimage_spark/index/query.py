@@ -1,4 +1,4 @@
-"""Query engine over segment files: BM25 top-k with block-max WAND.
+"""Query engine over segment files: BM25 top-k with block-max pruning.
 
 Rebuild of the reference's query path (exact FAISS scan + set algebra,
 /root/reference/src/refimage/search/__init__.py:202-266 +
@@ -10,15 +10,12 @@ Rebuild of the reference's query path (exact FAISS scan + set algebra,
   per-segment results are disjoint and exact) with a bounded top-k ->
   global TakeOrdered merge of <= P*k candidate rows.
 
-Two scorers, both exact, rank-identical to the DataFrame oracle:
-- vectorized term-at-a-time (numpy union-sum) — default; fastest when
-  query terms' postings fit comfortably in memory (they always do: a
-  segment's posting list is corpus/P sized);
-- document-at-a-time block-max WAND — skips whole 128-posting blocks
-  whose upper bound can't reach the running top-k threshold; wins on
-  conjunctive / long-postings / high-k-threshold workloads. Used for
-  pure text queries; pruning is rank-safe (block max_q is a true upper
-  bound on the tf factor).
+One scorer, exact and rank-identical to the DataFrame oracle: the
+vectorized term-at-a-time scan (numpy union-sum). A text query first
+runs a MaxScore block selection over the columnar block-max metadata
+(last_doc, max_tf, min_dl per 128 postings) and decodes only the blocks
+that can hold a top-k doc (``wand_topk_segment``); a boolean tree
+evaluates every leaf in full (``eval_node``).
 
 Score spec mirrors operators/bm25.py expression-for-expression so
 float64 results agree with the oracle to the last few ulps.
@@ -26,7 +23,6 @@ float64 results agree with the oracle to the last few ulps.
 
 from __future__ import annotations
 
-import heapq
 import json
 import os
 import threading
@@ -42,7 +38,6 @@ if TYPE_CHECKING:  # pyspark is imported lazily (inside search_index):
     # processes import this module and must not pay the pyspark import.
 
 from refimage_spark import dsl
-from refimage_spark.index.codec import varbyte_decode
 from refimage_spark.index.segment import SegmentReader, read_manifest
 from refimage_spark.tokenizer import BM25_B, BM25_K1, py_tokens
 
@@ -214,7 +209,7 @@ def _union_scores(
     dense, base = reader.dense_ids()
     if not dense:
         return _union_sum(ids_list, sc_list)
-    n = reader.norms()[0].size
+    n = reader.doc_lengths()[0].size
     acc = np.zeros(n, dtype=np.float64)
     matched = np.zeros(n, dtype=bool)
     for d, c in zip(ids_list, sc_list):
@@ -225,16 +220,26 @@ def _union_scores(
     return nz + base, acc[nz]
 
 
-def _term_contrib(
-    reader: SegmentReader, entry: dict, idf: float, weight: float, avgdl: float
-):
-    docs, tfs = reader.read_postings(entry)
-    dl = reader.dl_for(docs).astype(np.float64)
-    tf = tfs.astype(np.float64)
-    contrib = ((weight * idf) * (tf * K1P1)) / (
+def _bm25(w_idf: float, tf: np.ndarray, dl: np.ndarray, avgdl: float):
+    """One term's BM25 contribution, elementwise over float64 tf/dl. Term
+    bounds evaluate this SAME expression at (max_tf, min_dl): rounding is
+    monotone in dl, and consecutive tf values differ by far more than
+    rounding, so a bound is never below a posting's COMPUTED value."""
+    return (w_idf * (tf * K1P1)) / (
         tf + BM25_K1 * ((1.0 - BM25_B) + (BM25_B * dl) / avgdl)
     )
-    return docs, contrib
+
+
+def _term_contrib(
+    reader: SegmentReader,
+    entry: dict,
+    w_idf: float,
+    avgdl: float,
+    blocks: np.ndarray | None = None,
+):
+    docs, tfs = reader.read_postings(entry, blocks)
+    dl = reader.dl_for(docs).astype(np.float64)
+    return docs, _bm25(w_idf, tfs.astype(np.float64), dl, avgdl)
 
 
 def eval_node(
@@ -247,20 +252,9 @@ def eval_node(
     """Evaluate a DSL node within one segment -> (sorted doc_ids, scores)."""
     empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
     if isinstance(node, dsl.TextQuery):
-        terms = list(dict.fromkeys(py_tokens(node.text)))
-        present = reader.lookup_terms([t for t in terms if t in idfs])
-        if not present:
-            return empty
-        ids_l, sc_l = [], []
-        for t, entry in present.items():
-            d, c = _term_contrib(reader, entry, idfs[t], node.weight, avgdl)
-            ids_l.append(d)
-            sc_l.append(c)
-        ids, sc = _union_scores(reader, ids_l, sc_l)
-        if threshold > 0.0:
-            m = sc >= threshold
-            ids, sc = ids[m], sc[m]
-        return ids, sc
+        return _text_scores(
+            reader, py_tokens(node.text), idfs, avgdl, node.weight, threshold
+        )
     if isinstance(node, dsl.TagFilter):
         # full tag set per doc (lang + source + ...), matching the
         # DataFrame compiler's any=overlap / all=containment semantics
@@ -308,94 +302,7 @@ def topk_arrays(ids: np.ndarray, sc: np.ndarray, k: int):
     return sid[order], ssc[order]
 
 
-# ---- block-max WAND (document-at-a-time) --------------------------------------
-
-
-_SENTINEL = 1 << 62
-
-
-class _Cursor:
-    """Block-lazy posting cursor: holds the term's RAW encoded regions
-    (one sequential read each) and decodes a 128-posting block only when
-    the WAND loop actually lands on it — blocks skipped by seek() or
-    pruned by the block-max bound are never decoded (gap resets at block
-    boundaries make each block self-contained)."""
-
-    __slots__ = (
-        "docs_blob", "tfs_blob", "block_last", "block_maxq", "dboff",
-        "tboff", "idf_w", "bi", "li", "bdocs", "btfs", "decoded_blocks",
-    )
-
-    def __init__(self, docs_blob, tfs_blob, block_last, block_maxq,
-                 dboff, tboff, idf_w):
-        self.docs_blob = docs_blob
-        self.tfs_blob = tfs_blob
-        self.block_last = block_last
-        self.block_maxq = block_maxq
-        self.dboff = dboff.astype(np.int64)
-        self.tboff = tboff.astype(np.int64)
-        self.idf_w = idf_w
-        self.bi = 0  # current block
-        self.li = 0  # index within current block
-        self.bdocs: np.ndarray | None = None
-        self.btfs: np.ndarray | None = None
-        self.decoded_blocks = 0
-
-    def _n_blocks(self) -> int:
-        return self.block_last.size
-
-    def _decode(self) -> None:
-        if self.bdocs is None:
-            nb = self._n_blocks()
-            dlo = self.dboff[self.bi]
-            dhi = self.dboff[self.bi + 1] if self.bi + 1 < nb else len(self.docs_blob)
-            tlo = self.tboff[self.bi]
-            thi = self.tboff[self.bi + 1] if self.bi + 1 < nb else len(self.tfs_blob)
-            gaps = varbyte_decode(self.docs_blob[dlo:dhi])
-            self.bdocs = np.cumsum(gaps.astype(np.int64))
-            self.btfs = varbyte_decode(self.tfs_blob[tlo:thi]).astype(np.int64)
-            self.decoded_blocks += 1
-
-    def exhausted(self) -> bool:
-        return self.bi >= self._n_blocks()
-
-    def cur(self) -> int:
-        if self.exhausted():
-            return _SENTINEL
-        self._decode()
-        return int(self.bdocs[self.li])
-
-    def tf(self) -> float:
-        return float(self.btfs[self.li])
-
-    def advance(self) -> None:
-        self.li += 1
-        if self.li >= self.bdocs.size:
-            self.bi += 1
-            self.li = 0
-            self.bdocs = self.btfs = None
-
-    def seek(self, target: int) -> None:
-        """Skip to the first posting >= target. Whole blocks are skipped
-        via the block_last skip pointers WITHOUT decoding them."""
-        if self.exhausted():
-            return
-        nb = int(np.searchsorted(self.block_last, target, side="left"))
-        if nb > self.bi:
-            self.bi = nb
-            self.li = 0
-            self.bdocs = self.btfs = None
-        if self.exhausted():
-            return
-        self._decode()
-        self.li = int(np.searchsorted(self.bdocs, target, side="left"))
-
-    def max_score(self) -> float:
-        return self.idf_w * float(self.block_maxq.max()) if self._n_blocks() else 0.0
-
-    def block_bound_at(self) -> float:
-        b = min(self.bi, self.block_maxq.size - 1)
-        return self.idf_w * float(self.block_maxq[b])
+# ---- block-max pruning --------------------------------------------------------
 
 
 def wand_topk_segment(
@@ -409,124 +316,101 @@ def wand_topk_segment(
     counters: dict | None = None,
     tomb: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Exact top-k for a bag-of-terms query via block-max WAND pruning.
+    """Exact top-k of a bag-of-terms query within one segment: the
+    vectorized scan over only the blocks that can hold a top-k doc
+    (``_text_scores`` with ``k``), rank- and score-identical to the full
+    scan. ``counters`` accumulates decoded_blocks/total_blocks; ``tomb``
+    (doc ids) are masked before the cut, so they free their slots."""
+    ids, sc = _text_scores(
+        reader, terms, idfs, avgdl, weight, threshold, k, tomb, counters
+    )
+    if tomb is not None and ids.size:
+        m = ~np.isin(ids, tomb)
+        ids, sc = ids[m], sc[m]
+    return topk_arrays(ids, sc, k)
 
-    Rank-identical to the vectorized scorer (regression-tested, including
-    the BMW pivot-extension case). ``counters`` (optional) receives
-    decoded_blocks/total_blocks instrumentation. ``tomb`` (sorted or
-    unsorted doc ids) makes the loop TOMBSTONE-AWARE: a tombstoned pivot
-    is skipped without scoring, so it never occupies a top-k slot — the
-    same invariant the vectorized path enforces by masking before topk —
-    and WAND no longer has to disable itself while deletes are pending
-    compaction."""
+
+def _text_scores(
+    reader: SegmentReader,
+    terms: list[str],
+    idfs: dict[str, float],
+    avgdl: float,
+    weight: float,
+    threshold: float,
+    k: int | None = None,
+    tomb: np.ndarray | None = None,
+    counters: dict | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """(sorted doc ids, scores >= threshold) of a bag of terms within one
+    segment: per-term contributions union-summed in query-term order.
+
+    Given ``k`` (a top-k of this text alone), MaxScore over the block-max
+    metadata skips blocks. The rarest term is decoded first: a live
+    doc's contribution from one term is a lower bound on its score, so
+    their kth best is a lower bound θ on the kth best score (tombstoned
+    docs never set it). Any other term's bound is ``_bm25`` at its
+    largest block max_tf and smallest block min_dl under the CURRENT
+    avgdl. The lowest-bound terms whose bounds sum STRICTLY below floor
+    = max(θ, threshold) are non-essential: a doc found in them alone
+    scores below the kth, while a tie with it stays for the doc-id
+    tie-break. They decode only the blocks whose doc range (last_doc)
+    holds a doc of an essential term, so every doc that can reach the
+    top-k scores exactly as in the full scan. This needs a term with
+    more blocks than the rarest term has postings (else those alone
+    may reach every block), a test on the dict entries that costs a
+    segment with nothing to skip nothing."""
     present = reader.lookup_terms([t for t in dict.fromkeys(terms) if t in idfs])
     if not present:
-        return np.empty(0, np.int64), np.empty(0, np.float64)
-    # the serving/spark paths pass tomb pre-sorted (_load_tombstones);
-    # the O(T) monotonicity check keeps direct callers correct without
-    # paying a per-segment O(T log T) re-sort on the hot path
-    tomb_sorted = None
-    if tomb is not None and tomb.size:
-        tomb_sorted = (
-            tomb if bool(np.all(tomb[1:] >= tomb[:-1])) else np.sort(tomb)
-        )
-    norm_ids, norm_dls, _ = reader.norms()
-    cursors: list[_Cursor] = []
-    for t, entry in present.items():
-        docs_blob, tfs_blob = reader.read_term_blobs(entry)
-        bl, btf, bdl, dboff, tboff = reader.read_blockmax(entry)
-        # q(max_tf, min_dl) with CURRENT avgdl: a true upper bound on the
-        # block's tf factor for any posting (monotone in tf and dl)
-        btf_f = btf.astype(np.float64)
-        bq = btf_f / (
-            btf_f
-            + BM25_K1
-            * ((1.0 - BM25_B) + (BM25_B * bdl.astype(np.float64)) / avgdl)
-        )
-        cursors.append(
-            _Cursor(docs_blob, tfs_blob, bl, bq, dboff, tboff,
-                    idf_w=weight * idfs[t] * K1P1)
-        )
-    heap: list[tuple[float, int]] = []  # (score, -doc) min-heap of top-k
-
-    def required() -> float:
-        """Pruning bound. Pruning is STRICT (< required): candidates whose
-        upper bound ties the kth score must still be scored, because the
-        (score desc, doc_id asc) total order can admit them on doc id."""
-        if len(heap) == k:
-            return max(threshold, heap[0][0])
-        return threshold
-
-    def score_doc(doc: int, active: list[_Cursor]) -> float:
-        dl = float(norm_dls[np.searchsorted(norm_ids, doc)])
-        denom_norm = BM25_K1 * ((1.0 - BM25_B) + (BM25_B * dl) / avgdl)
-        s = 0.0
-        for c in active:
-            tf = c.tf()
-            s += c.idf_w * tf / (tf + denom_norm)
-        return s
-
-    while True:
-        live = [c for c in cursors if not c.exhausted()]
-        if not live:
-            break
-        live.sort(key=lambda c: c.cur())
-        req = required()
-        # pivot: smallest prefix whose max-score sum can reach req
-        acc = 0.0
-        pivot_i = -1
-        for i, c in enumerate(live):
-            acc += c.max_score()
-            if acc >= req:
-                pivot_i = i
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+    entries = list(present.values())
+    w_idfs = [weight * idfs[t] for t in present]
+    nbs = [e["n_blocks"] for e in entries]
+    parts: list = [None] * len(entries)
+    lazy: list[int] = []  # non-essential terms
+    rare = max(range(len(entries)), key=w_idfs.__getitem__)
+    if k is not None and max(nbs) > entries[rare]["n"]:
+        parts[rare] = _term_contrib(reader, entries[rare], w_idfs[rare], avgdl)
+        seed = parts[rare][1]
+        if tomb is not None:
+            seed = seed[~np.isin(parts[rare][0], tomb)]
+        floor = threshold
+        if seed.size >= k:
+            floor = max(floor, float(np.partition(seed, seed.size - k)[seed.size - k]))
+        metas = [reader.read_blockmax(e) for e in entries]
+        maxes = [
+            _bm25(wi, float(m[1].max()), float(m[2].min()), avgdl)
+            for wi, m in zip(w_idfs, metas)
+        ]
+        rest = sorted(set(range(len(entries))) - {rare}, key=maxes.__getitem__)
+        for i in rest:
+            bound = 0.0  # in query-term order, as _union_scores adds, so
+            for j in sorted(lazy + [i]):  # rounding keeps it >= a score
+                bound += maxes[j]  # (sum() may compensate, from 3.12)
+            if bound >= floor:
                 break
-        if pivot_i < 0:
-            break  # all terms together can't reach the bound
-        pivot_doc = live[pivot_i].cur()
-        # BMW pivot extension (Ding & Suel): cursors BEYOND the pivot that
-        # already sit on pivot_doc contribute real score — extend the
-        # prefix over them or block_acc understates the doc's true upper
-        # bound and a genuine top-k hit gets pruned (rank-safety bug,
-        # regression-tested in test_index_engine.py).
-        while pivot_i + 1 < len(live) and live[pivot_i + 1].cur() == pivot_doc:
-            pivot_i += 1
-        if live[0].cur() == pivot_doc:
-            matching = live[: pivot_i + 1]
-            if tomb_sorted is not None:
-                ti = int(np.searchsorted(tomb_sorted, pivot_doc))
-                if ti < tomb_sorted.size and tomb_sorted[ti] == pivot_doc:
-                    # tombstoned: a non-candidate — never scored, never in
-                    # the heap (its slot stays free for a live doc)
-                    for c in matching:
-                        c.advance()
-                    continue
-            # every cursor in live[:pivot_i+1] sits ON pivot_doc here
-            # (live is cur()-sorted), so its CURRENT block bound applies
-            block_acc = sum(c.block_bound_at() for c in matching)
-            if block_acc >= req or len(heap) < k:
-                s = score_doc(pivot_doc, matching)
-                if s >= threshold:
-                    if len(heap) < k:
-                        heapq.heappush(heap, (s, -pivot_doc))
-                    elif (s, -pivot_doc) > heap[0]:
-                        heapq.heapreplace(heap, (s, -pivot_doc))
-            for c in matching:
-                c.advance()
-        else:
-            for c in live[:pivot_i]:
-                c.seek(pivot_doc)
+            lazy.append(i)
+    for i, e in enumerate(entries):
+        if parts[i] is None and i not in lazy:
+            parts[i] = _term_contrib(reader, e, w_idfs[i], avgdl)
+    essential = [p[0] for p in parts if p is not None]
+    skipped = 0
+    for j in lazy:
+        hit = np.zeros(nbs[j] + 1, bool)  # + 1: docs past the last block
+        for d in essential:
+            hit[np.searchsorted(metas[j][0], d)] = True
+        sel = np.flatnonzero(hit[:-1])
+        skipped += nbs[j] - sel.size
+        parts[j] = _term_contrib(
+            reader, entries[j], w_idfs[j], avgdl, None if sel.size == nbs[j] else sel
+        )
+    ids, sc = _union_scores(reader, [p[0] for p in parts], [p[1] for p in parts])
+    if threshold > 0.0:
+        m = sc >= threshold
+        ids, sc = ids[m], sc[m]
     if counters is not None:
-        counters["decoded_blocks"] = counters.get("decoded_blocks", 0) + sum(
-            c.decoded_blocks for c in cursors
-        )
-        counters["total_blocks"] = counters.get("total_blocks", 0) + sum(
-            c._n_blocks() for c in cursors
-        )
-    if not heap:
-        return np.empty(0, np.int64), np.empty(0, np.float64)
-    items = sorted(heap, key=lambda x: (-x[0], -x[1]))
-    ids = np.array([-d for _, d in items], dtype=np.int64)
-    sc = np.array([s for s, _ in items], dtype=np.float64)
+        total = sum(nbs)
+        counters["decoded_blocks"] = counters.get("decoded_blocks", 0) + total - skipped
+        counters["total_blocks"] = counters.get("total_blocks", 0) + total
     return ids, sc
 
 
@@ -556,14 +440,14 @@ def _segment_topk(
     avgdl: float,
     k: int,
     threshold: float,
-    wand: bool,
     tomb: np.ndarray | None,
     counters: dict | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """One segment's exact top-k — the shared kernel for both the Spark
-    and the local serving path (rank-identical by construction)."""
+    and the local serving path (rank-identical by construction). A root
+    text query takes the block-pruned scan, a boolean tree eval_node."""
     reader = _reader(index_dir, int(pid))
-    if wand:
+    if isinstance(node, dsl.TextQuery):
         return wand_topk_segment(
             reader,
             py_tokens(node.text),
@@ -822,7 +706,6 @@ def _serve_chunk(
     k: int,
     threshold: float,
     pids: list[int] | None,
-    use_wand: bool = False,
 ):
     """Process-pool worker: evaluate a slice of segments sequentially
     (``pids=None`` = the whole index, replicate-mode's one-task query).
@@ -831,12 +714,9 @@ def _serve_chunk(
     node, avgdl, idfs, all_pids, tomb = _query_plan(index_dir, query)
     if pids is None:
         pids = all_pids
-    wand = use_wand and isinstance(node, dsl.TextQuery)
     return _merge_parts(
         [
-            _segment_topk(
-                index_dir, p, node, idfs, avgdl, k, threshold, wand, tomb
-            )
+            _segment_topk(index_dir, p, node, idfs, avgdl, k, threshold, tomb)
             for p in pids
         ],
         k,
@@ -939,7 +819,6 @@ def search_local(
     k: int = 10,
     threshold: float = 0.0,
     workers: int | None = None,
-    use_wand: bool = False,
     counters: dict | None = None,
 ) -> list[tuple[int, float]]:
     """The SERVING path: evaluate the query against the segment files
@@ -963,16 +842,9 @@ def search_local(
     ``workers`` caps the per-query fan-out (a concurrency hint; the
     shared pool itself is always sized from os.cpu_count()).
 
-    ``use_wand`` opts a pure-text query into the block-max WAND scorer
-    (now tombstone-aware). It is an OPT-IN, not the default, by
-    measurement: at cache-sized segments (the P-scaling rule) the
-    vectorized numpy sweep beats the Python document-at-a-time loop
-    20x+, and on flat-score corpora rank-safe pruning cannot skip
-    blocks at k=10 anyway (every block bound ties the kth score) — see
-    BENCH/BASELINE.md "WAND regime". Its block-skip IO savings matter on
-    the Spark path's fat segments with idf-skewed queries. ``counters``
-    receives decoded_blocks/total_blocks on the inline path (pool chunks
-    run in worker processes, which can't fill a caller-side dict)."""
+    ``counters`` receives decoded_blocks/total_blocks of the block-
+    pruned text scan on the inline path (pool chunks run in worker
+    processes, which can't fill a caller-side dict)."""
     global _ACTIVE_QUERIES
     with _ACTIVE_LOCK:
         _ACTIVE_QUERIES += 1
@@ -984,12 +856,11 @@ def search_local(
         with _ACTIVE_LOCK:
             active = _ACTIVE_QUERIES
         node, avgdl, idfs, pids, tomb = _query_plan(index_dir, query)
-        wand = use_wand and isinstance(node, dsl.TextQuery)
         if active == 1 and len(pids) <= _INLINE_MAX_SEGMENTS:
             parts = [
                 _segment_topk(
-                    index_dir, p, node, idfs, avgdl, k, threshold, wand,
-                    tomb, counters,
+                    index_dir, p, node, idfs, avgdl, k, threshold, tomb,
+                    counters,
                 )
                 for p in pids
             ]
@@ -1015,9 +886,7 @@ def search_local(
             )
             chunks = [pids[i::n_chunks] for i in range(n_chunks)]
             futs = [
-                pool.submit(
-                    _serve_chunk, index_dir, query, k, threshold, c, use_wand
-                )
+                pool.submit(_serve_chunk, index_dir, query, k, threshold, c)
                 for c in chunks
             ]
             return _merge_parts([f.result() for f in futs], k)
@@ -1035,9 +904,7 @@ def search_local(
         for p in pids:
             by_shard.setdefault(_shard_of(p, n_sh), []).append(p)
         futs = [
-            shards[s % n_sh].submit(
-                index_dir, query, k, threshold, ps, use_wand
-            )
+            shards[s % n_sh].submit(index_dir, query, k, threshold, ps)
             for s, ps in by_shard.items()
         ]
         return _merge_parts([f.result() for f in futs], k)
@@ -1059,6 +926,8 @@ def search_local(
 
                 _heal_pools()
                 time.sleep(0.02 * (retry + 1))
+            except dsl.DSLParseError:
+                raise  # a user error: no maintenance race to wait out
             except (OSError, KeyError, IndexError, ValueError):
                 # SELF-HEAL across a maintenance flip: compact/merge
                 # commit new segment generations per-pid (supersession
@@ -1088,7 +957,9 @@ def search_index(
     use_wand: bool | None = None,
     mode: str = "auto",
 ) -> DataFrame:
-    """Top-k over the segment index, globally ranked.
+    """Top-k over the segment index, globally ranked. ``use_wand`` is
+    accepted for callers of the former two-scorer API and ignored: every
+    text query takes the one block-pruned scorer.
 
     mode:
     - "spark": one task per segment batch, TakeOrdered merge — the
@@ -1113,24 +984,14 @@ def search_index(
     from pyspark.sql import functions as F
 
     node, avgdl, idfs, pids, tomb = _query_plan(index_dir, query)
-    # WAND applies to bag-of-terms leaves; the loop is tombstone-aware
-    # (skipped pivots free their top-k slots), so deletes pending
-    # compaction no longer force the full-eval fallback.
-    is_pure_text = isinstance(node, dsl.TextQuery)
-    wand = is_pure_text if use_wand is None else (use_wand and is_pure_text)
     idx_dir = index_dir
     if mode == "auto":
         mode = "local" if len(pids) <= 2048 else "spark"
 
     if mode == "local":
-        # an EXPLICIT use_wand=True opt-in passes through to the serving
-        # path; use_wand=None stays vectorized there (search_local's
-        # measured default) even though the spark path defaults to WAND
-        # for pure text
         rows = search_local(
             index_dir, query, k, threshold,
             workers=spark.sparkContext.defaultParallelism,
-            use_wand=bool(use_wand) and is_pure_text,
         )
         return spark.createDataFrame(rows, RESULT_SCHEMA)
 
@@ -1138,7 +999,7 @@ def search_index(
         for rb in batches:
             for pid in rb.column("pid").to_pylist():
                 ids, sc = _segment_topk(
-                    idx_dir, pid, node, idfs, avgdl, k, threshold, wand, tomb
+                    idx_dir, pid, node, idfs, avgdl, k, threshold, tomb
                 )
                 if ids.size:
                     yield pa.record_batch(
@@ -1162,19 +1023,26 @@ def index_stats(index_dir: str) -> dict:
     manifest = read_manifest(index_dir)
     with _ACTIVE_LOCK:
         active = _ACTIVE_QUERIES
-    pool_workers = len(_SERVE_SHARDS) if _SERVE_SHARDS is not None else 0
+    post_bytes = sum(r["bytes"] for r in manifest)
+    # the pool that serves this index: the index's bytes pick the mode
+    if post_bytes <= _REPLICATE_MAX_BYTES:
+        pool_started = _SERVE_POOL is not None
+        pool_workers = (os.cpu_count() or 4) if pool_started else 0
+    else:
+        pool_started = _SERVE_SHARDS is not None
+        pool_workers = len(_SERVE_SHARDS) if pool_started else 0
     return {
         "n_docs": stats["n_docs"],
         "avgdl": stats["avgdl"],
         "n_segments": len(manifest),
         "n_postings": sum(r["n_postings"] for r in manifest),
         "n_terms_total": sum(r["n_terms"] for r in manifest),
-        "post_bytes": sum(r["bytes"] for r in manifest),
+        "post_bytes": post_bytes,
         "num_parts": stats["num_parts"],
         "tokenizer": stats.get("tokenizer"),
         "serving": {
             "active_queries": active,
-            "pool_started": _SERVE_SHARDS is not None,
+            "pool_started": pool_started,
             "pool_workers": pool_workers,
             # >1.0 means queries are queueing behind the pool
             "pool_saturation": (
@@ -1185,10 +1053,8 @@ def index_stats(index_dir: str) -> dict:
 
 
 def _load_tombstones(index_dir: str) -> np.ndarray | None:
-    """Pending-delete doc ids, SORTED once here so per-segment consumers
-    (the WAND loop's binary searches) never re-sort — previously a query
-    over S segments with T tombstones paid O(S * T log T) redundant
-    sorts (ADVICE r5)."""
+    """Pending-delete doc ids, SORTED once here so the per-segment
+    ``np.isin`` masks never re-sort them."""
     p = os.path.join(index_dir, "tombstones.parquet")
     if not os.path.exists(p):
         return None

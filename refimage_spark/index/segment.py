@@ -16,8 +16,8 @@ Files per segment (under ``{index_dir}/segments/``):
 
 Doc-id gaps RESET at every BLOCK boundary (the first gap of a block is
 the absolute doc id) and per-block byte offsets into the docs/tfs blobs
-are stored, so WAND can decode ONLY the blocks that survive block-max
-pruning — IO/decode savings, not just scoring savings.
+are stored, so the scorer can decode ONLY the blocks that survive
+block-max pruning — IO/decode savings, not just scoring savings.
 
 Block-max metadata (BLOCK=128 postings): per block the last doc id (skip
 pointer) plus (max_tf, min_dl). The score-factor upper bound
@@ -25,7 +25,7 @@ q(max_tf, min_dl) = max_tf/(max_tf + k1*(1-b+b*min_dl/avgdl)) is computed
 at QUERY time with the CURRENT global avgdl — q is monotone increasing in
 tf and decreasing in dl, so the bound stays valid even after appends or
 compactions shift corpus stats (a stored max_q would silently go stale
-and break WAND's rank safety). It also makes segment bytes a pure
+and break the pruning's rank safety). It also makes segment bytes a pure
 function of the corpus partition — stats drift never changes checksums.
 
 The reference persisted its whole index as one monolithic binary+pickle
@@ -48,7 +48,6 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from refimage_spark.index.codec import blocked_delta_decode, varbyte_decode
-from refimage_spark.tokenizer import BM25_B, BM25_K1
 
 BLOCK = 128
 # per-block meta: [last_doc i64 | max_tf u32 | min_dl u32 | doc_boff u32 |
@@ -225,8 +224,8 @@ class SegmentWriter:
         blk_start = tstart[blk_term] + np.asarray(blk_idx) * BLOCK
         blk_end = np.minimum(blk_start + BLOCK, tend[blk_term])
         # delta-encode doc ids with a reset at EVERY block start (not just
-        # term start): each block decodes independently, so WAND reads and
-        # decodes only the blocks that survive block-max pruning
+        # term start): each block decodes independently, so the scorer
+        # reads and decodes only the blocks that survive block-max pruning
         gaps = np.empty_like(udocs)
         gaps[0] = udocs[0]
         np.subtract(udocs[1:], udocs[:-1], out=gaps[1:])
@@ -347,6 +346,17 @@ class SegmentWriter:
 # ---- reader ------------------------------------------------------------------
 
 
+def _block_bytes(mm, off: int, length: int, boff: np.ndarray, blocks):
+    """Encoded bytes of ``blocks`` (sorted) of one term region at
+    ``off``/``length`` in the posting file, gathered in one vectorized
+    pass; ``boff`` holds the per-block byte offsets within the region."""
+    ends = np.append(boff[1:].astype(np.int64), length)
+    lo, hi = boff[blocks].astype(np.int64), ends[blocks]
+    lens = hi - lo
+    idx = np.repeat(lo - (np.cumsum(lens) - lens), lens) + np.arange(lens.sum())
+    return np.frombuffer(mm, np.uint8, count=length, offset=off)[idx]
+
+
 class SegmentReader:
     # pin the whole term dictionary in memory while it's serving-sized;
     # beyond this, per-query filtered reads (row-group pruned on the
@@ -355,7 +365,8 @@ class SegmentReader:
 
     def __init__(self, index_dir: str, pid: int):
         self.post_path, self.dict_path, self.docs_path = seg_paths(index_dir, pid)
-        self._norms: tuple[np.ndarray, np.ndarray, pa.Array] | None = None
+        self._dls: tuple[np.ndarray, np.ndarray] | None = None
+        self._tags: pa.Array | None = None
         self._dict: tuple | None = None  # (sorted term array, dict table)
         self._term_memo: dict[str, dict | None] = {}  # resolved lookups
         self._tag_map: dict[str, np.ndarray] | None = None
@@ -437,19 +448,27 @@ class SegmentReader:
             out[row["term"]] = row
         return out
 
-    def read_term_blobs(self, entry: dict) -> tuple[bytes, bytes]:
-        """Raw encoded docs/tfs regions for one term (two mmap slices;
-        block-lazy decode slices these further by per-block offsets)."""
+    def read_postings(
+        self, entry: dict, blocks: np.ndarray | None = None
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """(doc_ids, tfs) of one term. ``blocks`` (sorted block indexes)
+        decodes only those 128-posting blocks: gap resets at block
+        boundaries make each block self-contained, and only the term's
+        LAST block can be short, so the gathered stream decodes with the
+        same fixed-stride segmented cumsum as the whole list."""
         mm = self._post_map()
-        docs_blob = mm[entry["off_docs"] : entry["off_docs"] + entry["len_docs"]]
-        tfs_blob = mm[entry["off_tfs"] : entry["off_tfs"] + entry["len_tfs"]]
-        return docs_blob, tfs_blob
-
-    def read_postings(self, entry: dict) -> tuple[np.ndarray, np.ndarray]:
-        docs_blob, tfs_blob = self.read_term_blobs(entry)
-        gaps = varbyte_decode(docs_blob, entry["n"])
+        od, ot, n = entry["off_docs"], entry["off_tfs"], entry["n"]
+        if blocks is None:
+            docs_blob = mm[od : od + entry["len_docs"]]
+            tfs_blob = mm[ot : ot + entry["len_tfs"]]
+        else:
+            _, _, _, dboff, tboff = self.read_blockmax(entry)
+            docs_blob = _block_bytes(mm, od, entry["len_docs"], dboff, blocks)
+            tfs_blob = _block_bytes(mm, ot, entry["len_tfs"], tboff, blocks)
+            n = int(np.minimum(BLOCK, n - blocks * BLOCK).sum())
+        gaps = varbyte_decode(docs_blob, n)
         doc_ids = blocked_delta_decode(gaps, BLOCK)
-        tfs = varbyte_decode(tfs_blob, entry["n"]).astype(np.int64)
+        tfs = varbyte_decode(tfs_blob, n).astype(np.int64)
         return doc_ids, tfs
 
     def read_blockmax(
@@ -506,14 +525,19 @@ class SegmentReader:
 
     def norms(self) -> tuple[np.ndarray, np.ndarray, pa.Array]:
         """(doc_ids, dls, tags list<string> Arrow array), doc_id-sorted."""
-        if self._norms is None:
-            t = pq.read_table(self.docs_path)
-            self._norms = (
-                t["doc_id"].to_numpy(),
-                t["dl"].to_numpy(),
-                t["tags"].combine_chunks(),
-            )
-        return self._norms
+        if self._tags is None:
+            self._tags = pq.read_table(self.docs_path, columns=["tags"])[
+                "tags"
+            ].combine_chunks()
+        return (*self.doc_lengths(), self._tags)
+
+    def doc_lengths(self) -> tuple[np.ndarray, np.ndarray]:
+        """(doc_ids, dls), doc_id-sorted: all that scoring reads. The tag
+        column is loaded only by tag queries and maintenance (``norms``)."""
+        if self._dls is None:
+            t = pq.read_table(self.docs_path, columns=["doc_id", "dl"])
+            self._dls = (t["doc_id"].to_numpy(), t["dl"].to_numpy())
+        return self._dls
 
     def tag_ids(self, tag: str) -> np.ndarray:
         """Sorted doc ids carrying ``tag`` (matched lowercased, mirroring
@@ -539,13 +563,13 @@ class SegmentReader:
         dropped) or a merge of non-adjacent parts breaks contiguity, and
         the searchsorted fallback takes over."""
         if self._dense is None:
-            ids, _, _ = self.norms()
+            ids, _ = self.doc_lengths()
             dense = ids.size > 0 and int(ids[-1]) - int(ids[0]) == ids.size - 1
             self._dense = (dense, int(ids[0]) if ids.size else 0)
         return self._dense
 
     def dl_for(self, doc_ids: np.ndarray) -> np.ndarray:
-        ids, dls, _ = self.norms()
+        ids, dls = self.doc_lengths()
         dense, base = self.dense_ids()
         if dense:
             return dls[doc_ids - base]

@@ -53,12 +53,8 @@ def md5int60_sql(expr: str) -> str:
     return f"cast(concat('0x', substr(md5({expr}), 1, 15)) as bigint)"
 
 
-def md5int32(c: Column) -> Column:
-    """First 32 bits of md5 — the base hash for the MinHash family."""
-    return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
-
-
 def md5int32_sql(expr: str) -> str:
+    """First 32 bits of md5 — the base hash for the MinHash family."""
     return f"cast(concat('0x', substr(md5({expr}), 1, 8)) as bigint)"
 
 
@@ -69,7 +65,7 @@ _VERIFY_BROADCAST_BYTES = int(
     os.environ.get("REFIMAGE_VERIFY_BROADCAST_BYTES", str(256 << 20))
 )
 
-# Universal-hash family h_i(x) = (md5int32(x)*A_i + B_i) mod P61: ONE md5
+# Universal-hash family h_i(x) = (md5int32_sql(x)*A_i + B_i) mod P61: ONE md5
 # per shingle instead of NUM_HASHES of them (~16x less hashing work).
 # A_i < 2^30 keeps h*A < 2^62 — no int64 overflow in either engine.
 MINHASH_P61 = (1 << 61) - 1
@@ -136,30 +132,6 @@ def with_shingles(documents: DataFrame, n: int = 3) -> DataFrame:
 
 DEFAULT_NUM_HASHES = 16
 DEFAULT_BANDS = 4  # 4 rows per band
-
-
-def minhash_signatures(
-    shingled: DataFrame, num_hashes: int = DEFAULT_NUM_HASHES
-) -> DataFrame:
-    """(doc_id, sig array<long>[num_hashes]) — sig[i] = min over shingles
-    of (md5int32(shingle)*A_i + B_i) mod P61. ONE md5 per shingle, then
-    cheap integer arithmetic per hash. Map-side only."""
-    a, b = _hash_constants(num_hashes)
-    base = shingled.where(F.size("shingles") > 0).select(
-        "doc_id", F.transform("shingles", md5int32).alias("hs")
-    )
-    def _min_hash(i: int):
-        # NB: single-param lambda — a 2-param lambda would make Spark pass
-        # the array INDEX as the 2nd arg and shadow the closure
-        return F.array_min(
-            F.transform(
-                F.col("hs"),
-                lambda h: (h * F.lit(a[i]) + F.lit(b[i])) % F.lit(MINHASH_P61),
-            )
-        )
-
-    sig = F.array(*[_min_hash(i) for i in range(num_hashes)])
-    return base.select("doc_id", sig.alias("sig"))
 
 
 def lsh_candidate_pairs(
@@ -288,7 +260,7 @@ def _shingle_sig_udf(n: int, num_hashes: int):
     ``F.transform`` tree, whose higher-order functions run INTERPRETED
     (~8us/element): at 16 hashes x ~100 shingles/doc that tree was the
     dominant cost of the whole dedup (measured 22.5s -> see BASELINE.md).
-    Hashes are bit-identical to md5int32/the DuckDB oracle:
+    Hashes are bit-identical to md5int32_sql/the DuckDB oracle:
     int(md5[:8 hex], 16) == big-endian int of the first 4 digest bytes."""
     import hashlib
 

@@ -12,7 +12,7 @@ essentially for free next to the index build.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -28,11 +28,6 @@ STOPWORDS = {
 }
 LANG_PRIORITY = ["en", "de", "fr", "es"]  # deterministic argmax tiebreak
 MIN_LANG_RATIO = 0.02
-
-
-def _ratio_in(tokens: Column, words: list[str]) -> Column:
-    hits = F.size(F.filter(tokens, lambda t: t.isin(words)))
-    return hits / F.greatest(F.size(tokens), F.lit(1))
 
 
 # One Arrow-vectorized pass over the text producing every INTEGER count

@@ -142,16 +142,3 @@ def generate_pages(
     rng_df = spark.range(0, n_docs, numPartitions=partitions)
     return rng_df.mapInPandas(gen, schema=PAGES_SCHEMA)
 
-
-def write_pages(df: DataFrame, path: str, fmt: str = "parquet") -> None:
-    """Sink with Iceberg-first intent: at 100 TB this is an Iceberg table
-    partitioned by days(warc_ts) (partition pruning for time predicates);
-    in-sandbox we fall back to plain parquet with the identical schema
-    (SURVEY.md §7.4 item 6)."""
-    if fmt == "iceberg":
-        try:
-            df.writeTo(path).using("iceberg").createOrReplace()
-            return
-        except Exception:
-            pass  # runtime jar absent in sandbox — parquet fallback
-    df.write.mode("overwrite").parquet(path)

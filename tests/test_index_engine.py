@@ -153,30 +153,63 @@ def test_wand_pivot_extension_rank_safe(spark, tmp_path):
 
 
 def test_wand_skips_block_decode(spark, tmp_path):
-    """Block-lazy IO: seek() jumps whole blocks via the skip pointers;
-    blocks that are never landed on are never DECODED (gap resets at
-    block boundaries make each block self-contained). Rank identity
-    with the vectorized scorer still holds."""
+    """Block-lazy IO: a block that cannot hold a top-k doc is never
+    DECODED (gap resets at block boundaries make each block
+    self-contained). Rank identity with the vectorized scorer still
+    holds."""
     from refimage_spark.index.query import topk_arrays
     from refimage_spark.index.segment import SegmentReader
 
     # term a: 10 blocks of tf=1 postings; term b: rare, high idf, at the
-    # two ends — after doc 0 fills the heap, a's cursor seeks straight
-    # to 1200 skipping blocks 1..8 undecoded
+    # two ends — a's bound cannot reach b's kth score, so a rank-safe
+    # prune decodes only a's blocks holding b's docs (0 and 9): blocks
+    # 1..8 stay undecoded
     post_a = [(i, 1) for i in range(1280)]
     post_b = [(0, 10), (1200, 10)]
     d = _raw_segment(tmp_path, {"a": post_a, "b": post_b}, n_docs=1280)
     r = SegmentReader(d, 0)
+    read = r.read_postings
+    decoded: dict = {}
+
+    def spy(entry, blocks=None):
+        got = range(entry["n_blocks"]) if blocks is None else blocks.tolist()
+        decoded.setdefault(entry["term"], set()).update(got)
+        return read(entry, blocks)
+
+    r.read_postings = spy
     idfs = {"a": 0.05, "b": 5.0}
     counters: dict = {}
     wids, wsc = wand_topk_segment(
         r, ["a", "b"], idfs, 10.0, 1, counters=counters
     )
-    assert counters["decoded_blocks"] < counters["total_blocks"], counters
+    assert decoded["a"].isdisjoint(range(1, 9)), decoded
+    assert counters == {"decoded_blocks": 3, "total_blocks": 11}, counters
     vids, vsc = eval_node(r, dsl.TextQuery("a b", 1.0), idfs, 10.0, 0.0)
     vids, vsc = topk_arrays(vids, vsc, 1)
     assert wids.tolist() == vids.tolist()
     np.testing.assert_allclose(wsc, vsc, rtol=1e-12)
+
+
+def test_prune_skips_term_without_candidates(spark, tmp_path):
+    """A non-essential term none of whose blocks holds an essential doc
+    is not decoded at all, and the top-k stays identical."""
+    from refimage_spark.index.query import topk_arrays
+    from refimage_spark.index.segment import SegmentReader
+
+    post_a = [(i, 1) for i in range(1000)]  # 8 blocks, all before b
+    post_b = [(i, 5) for i in range(1900, 1905)]
+    d = _raw_segment(tmp_path, {"a": post_a, "b": post_b}, n_docs=2000)
+    r = SegmentReader(d, 0)
+    idfs = {"a": 0.05, "b": 6.0}
+    counters: dict = {}
+    wids, wsc = wand_topk_segment(
+        r, ["a", "b"], idfs, 10.0, 3, counters=counters
+    )
+    assert counters == {"decoded_blocks": 1, "total_blocks": 9}, counters
+    vids, vsc = eval_node(r, dsl.TextQuery("a b", 1.0), idfs, 10.0, 0.0)
+    vids, vsc = topk_arrays(vids, vsc, 3)
+    assert wids.tolist() == vids.tolist() == [1900, 1901, 1902]
+    np.testing.assert_array_equal(wsc, vsc)
 
 
 def test_index_tag_queries_match_compiler(spark, index_dir, oracle_corpus):
@@ -241,10 +274,12 @@ def test_index_stats(spark, index_dir):
     assert st["tokenizer"] == "lower-split-[^a-z0-9]+"
 
 
-def test_index_stats_serving_observability(spark, index_dir):
+def test_index_stats_serving_observability(spark, index_dir, monkeypatch):
     """Serving keys: no in-flight queries at rest; an in-flight query is
     visible in active_queries/pool_saturation while it runs (observed
-    mid-query via a plan-side hook)."""
+    mid-query via a plan-side hook); the pool keys describe the pool the
+    index's bytes select (shared pool in replicate mode, shards
+    otherwise)."""
     from refimage_spark.index import query as Q
 
     st = Q.index_stats(index_dir)
@@ -266,6 +301,44 @@ def test_index_stats_serving_observability(spark, index_dir):
         Q._query_plan = orig
     assert seen and seen[0] == 1  # the query counted itself while running
     assert Q.index_stats(index_dir)["serving"]["active_queries"] == 0
+
+    def pool_keys():
+        s = Q.index_stats(index_dir)["serving"]
+        return s["pool_started"], s["pool_workers"]
+
+    Q.warm_serving_pool()  # starts the shared pool and the shards
+    monkeypatch.setattr(Q, "_REPLICATE_MAX_BYTES", 1 << 60)  # replicate
+    assert pool_keys() == (True, os.cpu_count() or 4)
+    monkeypatch.setattr(Q, "_SERVE_POOL", None)  # shards alone don't serve
+    assert pool_keys() == (False, 0)
+    monkeypatch.setattr(Q, "_REPLICATE_MAX_BYTES", 0)  # shard
+    assert pool_keys() == (True, len(Q._SERVE_SHARDS))
+    monkeypatch.setattr(Q, "_SERVE_SHARDS", None)
+    assert pool_keys() == (False, 0)
+
+
+def test_search_local_malformed_query_fails_fast(index_dir, monkeypatch):
+    """A malformed query is a user error, not a maintenance race: it
+    raises DSLParseError from its first parse, with no re-plan and no
+    retry back-off."""
+    import time
+
+    from refimage_spark.index import query as Q
+
+    parses: list[str] = []
+    sleeps: list[float] = []
+    parse = dsl.parse
+
+    def counting_parse(q):
+        parses.append(q)
+        return parse(q)
+
+    monkeypatch.setattr(dsl, "parse", counting_parse)
+    monkeypatch.setattr(time, "sleep", sleeps.append)
+    with pytest.raises(dsl.DSLParseError):
+        Q.search_local(index_dir, "red car^9", k=10)
+    assert parses == ["red car^9"]
+    assert sleeps == []
 
 
 def test_search_local_concurrent_clients(spark, index_dir):
@@ -309,6 +382,7 @@ def test_search_local_process_path_identity(spark, index_dir, monkeypatch):
     # force the sharded path: pretend every index is too big to inline,
     # and shrink the affinity block so the 8-segment index spans 3 shards
     monkeypatch.setattr(Q, "_INLINE_MAX_SEGMENTS", 0)
+    monkeypatch.setattr(Q, "_REPLICATE_MAX_BYTES", 0)
     monkeypatch.setattr(Q, "_SHARD_BLOCK", 3)
     pooled = {q: Q.search_local(index_dir, q, k=10) for q in queries}
     assert pooled == inline
@@ -338,27 +412,6 @@ def test_replicate_and_shard_modes_identical(spark, index_dir, monkeypatch):
     monkeypatch.setattr(Q, "_REPLICATE_MAX_BYTES", 0)  # force shard
     Q.warm_serving_pool(index_dir)
     assert {q: Q.search_local(index_dir, q, k=10) for q in queries} == inline
-
-
-def test_search_index_local_mode_passes_wand_through(spark, index_dir,
-                                                     monkeypatch):
-    """An explicit use_wand=True must reach the serving path in local
-    mode (regression: the flag was silently dropped); use_wand=None
-    keeps the serving path's measured vectorized default."""
-    from refimage_spark.index import query as Q
-
-    seen = []
-    orig = Q.search_local
-
-    def spy(*a, **kw):
-        seen.append(kw.get("use_wand", False))
-        return orig(*a, **kw)
-
-    monkeypatch.setattr(Q, "search_local", spy)
-    Q.search_index(spark, index_dir, "red car", k=5, mode="local",
-                   use_wand=True).collect()
-    Q.search_index(spark, index_dir, "red car", k=5, mode="local").collect()
-    assert seen == [True, False]
 
 
 def test_cached_none_is_a_hit(spark, tmp_path):

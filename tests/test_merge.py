@@ -102,7 +102,7 @@ def test_wand_rank_identity_under_tombstones(spark, small_index):
         assert a.score == pytest.approx(b.score, rel=1e-12)
     # serving opt-in: counters prove the WAND loop actually ran
     ctr: dict = {}
-    local = search_local(small_index, "red car", k=10, use_wand=True,
+    local = search_local(small_index, "red car", k=10,
                          counters=ctr)
     assert ctr.get("total_blocks", 0) > 0
     assert [d for d, _ in local] == [r.doc_id for r in full]

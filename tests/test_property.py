@@ -72,9 +72,16 @@ def _mk_segment(tmpdir, postings: dict, n_docs: int = 601, dl: int = 10):
     return SegmentReader(str(tmpdir), 0)
 
 
-@given(postings=posting_lists, k=st.sampled_from([1, 3, 10]))
-@settings(max_examples=25, deadline=None)
-def test_segment_roundtrip_and_wand_rank_identity(tmp_path_factory, postings, k):
+@given(
+    postings=posting_lists,
+    k=st.sampled_from([1, 3, 10]),
+    weight=st.sampled_from([1.0, 0.0, 0.4, 2.0]),
+    threshold=st.sampled_from([0.0, 0.5, 4.0]),
+)
+@settings(max_examples=40, deadline=None)
+def test_segment_roundtrip_and_wand_rank_identity(
+    tmp_path_factory, postings, k, weight, threshold
+):
     tmpdir = tmp_path_factory.mktemp("propseg")
     reader = _mk_segment(tmpdir, postings)
     # write/read identity per term
@@ -89,14 +96,15 @@ def test_segment_roundtrip_and_wand_rank_identity(tmp_path_factory, postings, k)
     terms_arr, term_codes, docs_a, tfs_a = reader.read_all_postings()
     total = sum(len(v) for v in postings.values())
     assert docs_a.size == total
-    # WAND == vectorized, exact scores, any idf mix
+    # WAND == vectorized, exact scores, any idf mix, weight and threshold
     idfs = {t: 0.5 + i for i, t in enumerate(sorted(postings))}
     terms = sorted(postings)
-    vids, vsc = eval_node(
-        reader, dsl.TextQuery(" ".join(terms), 1.0), idfs, 10.0, 0.0
-    )
+    query = dsl.TextQuery(" ".join(terms), weight)
+    vids, vsc = eval_node(reader, query, idfs, 10.0, threshold)
     vids, vsc = topk_arrays(vids, vsc, k)
-    wids, wsc = wand_topk_segment(reader, terms, idfs, 10.0, k)
+    wids, wsc = wand_topk_segment(
+        reader, terms, idfs, 10.0, k, weight=weight, threshold=threshold
+    )
     assert wids.tolist() == vids.tolist()
     np.testing.assert_allclose(wsc, vsc, rtol=1e-12)
     # tombstone-aware WAND: tombstoned docs are non-candidates and must
@@ -105,11 +113,12 @@ def test_segment_roundtrip_and_wand_rank_identity(tmp_path_factory, postings, k)
         np.concatenate([np.fromiter(v, np.int64, len(v)) for v in postings.values()])
     )
     tomb = all_docs[::3]  # deterministic subset incl. top scorers
-    fids, fsc = eval_node(
-        reader, dsl.TextQuery(" ".join(terms), 1.0), idfs, 10.0, 0.0
-    )
+    fids, fsc = eval_node(reader, query, idfs, 10.0, threshold)
     m = ~np.isin(fids, tomb)
     fids, fsc = topk_arrays(fids[m], fsc[m], k)
-    tids, tsc = wand_topk_segment(reader, terms, idfs, 10.0, k, tomb=tomb)
+    tids, tsc = wand_topk_segment(
+        reader, terms, idfs, 10.0, k, weight=weight, threshold=threshold,
+        tomb=tomb,
+    )
     assert tids.tolist() == fids.tolist()
     np.testing.assert_allclose(tsc, fsc, rtol=1e-12)
