@@ -3,7 +3,7 @@
 # `make zip` builds the --py-files artifact the CLI entrypoints expect:
 #   spark-submit --py-files refimage_spark.zip scripts/build_index_cli.py ...
 
-.PHONY: zip test bench clean
+.PHONY: zip test oracles bench clean
 
 zip:
 	rm -f refimage_spark.zip
@@ -13,6 +13,13 @@ zip:
 test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
 	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+
+# the DuckDB oracle gate (scripts/check_oracles.py) under the tier-1 env;
+# Spark's Python workers import refimage_spark only via PYTHONPATH.
+# Select entries with ARGS, e.g. make oracles ARGS="dedup_exact dedup_minhash"
+oracles:
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local PYTHONPATH="$(CURDIR)"; \
+	python scripts/check_oracles.py $(ARGS)
 
 bench:
 	python bench.py

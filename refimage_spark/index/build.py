@@ -125,69 +125,10 @@ def _with_doc_ids(with_part: DataFrame, offsets: DataFrame) -> DataFrame:
     )
 
 
-def assign_doc_ids(pages: DataFrame, num_parts: int) -> DataFrame:
-    """Deterministic dense doc_id (SURVEY.md §2.7 F7) scalable to 10^12
-    rows: hash-part by url, sort within part, add per-part offsets
-    (broadcast-joined, never a driver-side literal)."""
-    with_part = pages.withColumn("part", _part_col(num_parts))
-    return _with_doc_ids(with_part, _offsets_df(with_part))
-
-
 def _tags_col(tag_cols: tuple[str, ...]):
     """The doc's tag set = its tag-column values (raw; matching lowers),
     mirroring the DataFrame compiler's tags := {lang, source, ...}."""
     return F.array(*[F.col(c) for c in tag_cols])
-
-
-def _dedup_slim(
-    pages: DataFrame,
-    content_dedup: bool = True,
-    tag_cols: tuple[str, ...] = ("lang",),
-) -> DataFrame:
-    """url-dedup (keep latest warc_ts — recrawl wins, matching the
-    reference's UNIQUE-hash ingest semantics src/refimage/storage.py:278-281)
-    + optional content-hash dedup (keep smallest url).
-
-    html is reduced to its sha2 in the very first projection: the raw
-    bytes are ~10x the text and pass A shuffles the corpus — the
-    exchanges never carry the body. ``dl`` is computed here too, so the
-    corpus is tokenized exactly ONCE in pass A.
-
-    Keep-one is a struct-max/min AGGREGATION, not a window: partial
-    aggregation combines duplicates map-side before the exchange, and a
-    hash aggregate needs no per-partition sort — both scale better than
-    row_number windows at high parallelism. Struct comparison is
-    lexicographic by field order, so the survivor is a deterministic
-    total-order choice: (max warc_ts, then max content_hash) per url;
-    (min url) per content_hash.
-
-    This linear two-aggregation form shuffles the corpus text twice
-    (once per keep-one agg); the build path uses ``_dedup_slim_build``
-    below, which persists the url-deduped intermediate and applies the
-    content-dedup as a key-only semi-join, so text crosses the wire
-    exactly once. This form stays for the un-persisted callers (append
-    increments are small)."""
-    slim = pages.select(
-        "url",
-        "warc_ts",
-        *tag_cols,
-        "text",
-        F.sha2("html", 256).alias("content_hash"),
-        F.size(spark_tokens("text")).alias("dl"),
-    )
-    carry = [*tag_cols, "dl", "text"]
-    deduped = (
-        slim.groupBy("url")
-        .agg(F.max(F.struct("warc_ts", "content_hash", *carry)).alias("p"))
-        .select("url", "p.*")
-    )
-    if content_dedup:
-        deduped = (
-            deduped.groupBy("content_hash")
-            .agg(F.min(F.struct("url", "warc_ts", *carry)).alias("p"))
-            .select("content_hash", "p.*")
-        )
-    return deduped
 
 
 def _dedup_slim_build(
@@ -195,19 +136,29 @@ def _dedup_slim_build(
     content_dedup: bool = True,
     tag_cols: tuple[str, ...] = ("lang",),
 ):
-    """Build-path dedup: corpus text crosses the wire exactly ONCE.
+    """The one keep-one projection, shared by build and append: per url
+    the latest ``warc_ts`` wins — the recrawl, matching the reference's
+    UNIQUE-hash ingest, src/refimage/storage.py:278-281 — then the
+    largest content_hash; with ``content_dedup``, per content_hash the
+    smallest url wins.
 
-    The url keep-one aggregation (the unavoidable text exchange — texts
-    of one url must meet) lands in a persisted intermediate; the
-    content-dedup decision then needs only (content_hash, url) — a
-    key-only aggregation over the CACHED rows — and applies as a
-    left-semi join whose big side reads the cache already hash(url)-
-    partitioned (no re-exchange; only survivor urls move). The linear
-    form (_dedup_slim) instead shuffled the full text through BOTH
-    aggregations — measured at 500k pages local[8]: 886 MB shuffled ->
-    676 MB (-24%), wall within the VM's noise band. On a real cluster
-    the removed exchange is a corpus-sized NETWORK transfer while the
-    cache write is node-local, so the gap widens with scale.
+    html is reduced to its sha2 in the very first projection (the raw
+    bytes are ~10x the text and never cross an exchange), and ``dl`` is
+    computed here, so the corpus is tokenized exactly once.
+
+    Keep-one is a struct-max/min AGGREGATION, not a window: partial
+    aggregation combines duplicates map-side and a hash aggregate needs
+    no sort. Struct comparison is lexicographic by field order, so the
+    survivor is a deterministic total-order choice.
+
+    Corpus text crosses the wire exactly ONCE: the url keep-one
+    aggregation (texts of one url must meet) lands in a persisted
+    intermediate; the content-dedup decision needs only (content_hash,
+    url) — a key-only aggregation over the CACHED rows — and applies as
+    a left-semi join whose big side reads the cache already hash(url)-
+    partitioned (only survivor urls move). Measured at 500k pages
+    local[8] against a second full-row aggregation: 886 MB shuffled ->
+    676 MB (-24%), wall within the VM's noise band.
 
     Returns (deduped_df, persisted_handles); the caller unpersists the
     handles once its consumers are done."""
@@ -250,7 +201,12 @@ def _dedup_slim_build(
 def _assign_and_project(
     deduped: DataFrame, num_parts: int, tag_cols: tuple[str, ...] = ("lang",)
 ) -> DataFrame:
-    return assign_doc_ids(deduped, num_parts).select(
+    """Deterministic dense doc_id (SURVEY.md §2.7 F7) scalable to 10^12
+    rows — hash-part by url, sort within part, add per-part offsets
+    (broadcast-joined, never a driver-side literal) — plus the
+    docs.parquet column set. Build and append both write through here."""
+    with_part = deduped.withColumn("part", _part_col(num_parts))
+    return _with_doc_ids(with_part, _offsets_df(with_part)).select(
         "doc_id",
         "part",
         "url",
@@ -259,19 +215,6 @@ def _assign_and_project(
         "text",
         "dl",
         "content_hash",
-    )
-
-
-def prepare_docs(
-    pages: DataFrame,
-    num_parts: int,
-    content_dedup: bool = True,
-    tag_cols: tuple[str, ...] = ("lang",),
-) -> DataFrame:
-    """dedup + deterministic id assignment (un-persisted form; build_index
-    persists the intermediate to avoid running the dedup twice)."""
-    return _assign_and_project(
-        _dedup_slim(pages, content_dedup, tag_cols), num_parts, tag_cols
     )
 
 
@@ -303,17 +246,7 @@ def build_index(
             for h in handles[1:]:
                 h.unpersist()
             handles = handles[:1]
-            with_part = slim.withColumn("part", _part_col(num_parts))
-            docs = _with_doc_ids(with_part, _offsets_df(with_part)).select(
-                "doc_id",
-                "part",
-                "url",
-                *tag_cols,
-                _tags_col(tag_cols).alias("tags"),
-                "text",
-                "dl",
-                "content_hash",
-            )
+            docs = _assign_and_project(slim, num_parts, tag_cols)
             # the id-assignment window already exchanged rows hash(part),
             # so every part lives wholly in one task: the partitioned
             # write yields one file per part dir with NO extra shuffle
@@ -461,7 +394,7 @@ def build_segment_from_part(
     the part's rows, identical at any cluster size."""
     import numpy as np
 
-    from refimage_spark.tokenizer import arrow_token_list
+    from refimage_spark.tokenizer import arrow_flat_tokens
 
     part_dir = os.path.join(_docs_path(index_dir), f"part={pid}")
     t = pq.read_table(
@@ -470,12 +403,8 @@ def build_segment_from_part(
     ids = t["doc_id"].to_numpy()
     writer = SegmentWriter(index_dir, pid, avgdl)
     writer.set_norms(ids, t["dl"].to_numpy(), t["tags"].combine_chunks())
-    splits = arrow_token_list(t["text"].combine_chunks())
-    flat = splits.flatten()
-    doc_rep = np.repeat(ids, np.diff(splits.offsets.to_numpy()))
-    keep = pc.not_equal(flat, "")  # split artifacts at string edges
-    flat = flat.filter(keep)
-    doc_rep = doc_rep[keep.to_numpy(zero_copy_only=False)]
+    flat, row_of = arrow_flat_tokens(t["text"].combine_chunks())
+    doc_rep = ids[row_of]
     # sort by (lexicographic term, doc_id): rank the unique terms once,
     # lexsort the (rank, doc) pairs — never the strings themselves
     de = flat.dictionary_encode()

@@ -50,7 +50,12 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from refimage_spark.index.build import STATS_FILE, prepare_docs
+from refimage_spark.index.build import (
+    STATS_FILE,
+    _assign_and_project,
+    _dedup_slim_build,
+    _write_segments_for,
+)
 from refimage_spark.index.segment import (
     SegmentReader,
     SegmentWriter,
@@ -893,20 +898,27 @@ def _append_pages_locked(
     fresh = new_pages.join(
         old_docs.select("url"), "url", "left_anti"
     )
-    new_docs = prepare_docs(
-        fresh, num_parts, content_dedup=True, tag_cols=tag_cols
-    ).withColumn(
-        "doc_id", (F.col("doc_id") + F.lit(int(base_id))).cast("long")
-    ).withColumn("part", (F.col("part") + F.lit(int(base_pid))).cast("int"))
-    new_docs.write.mode("append").partitionBy("part").parquet(docs_path)
+    deduped, handles = _dedup_slim_build(fresh, tag_cols=tag_cols)
+    try:
+        # count BEFORE the write: it fills the cache the write reads, and
+        # the write re-caches every plan over docs_path with a refreshed
+        # listing, under which the anti-join would drop the new urls
+        n_appended = int(deduped.count())
+        new_docs = _assign_and_project(
+            deduped, num_parts, tag_cols
+        ).withColumn(
+            "doc_id", (F.col("doc_id") + F.lit(int(base_id))).cast("long")
+        ).withColumn("part", (F.col("part") + F.lit(int(base_pid))).cast("int"))
+        new_docs.write.mode("append").partitionBy("part").parquet(docs_path)
+    finally:
+        for h in handles:
+            h.unpersist()
 
     # build segments for the new parts only (same writer machinery),
     # THEN refresh global stats from the updated dictionaries
-    from refimage_spark.index.build import _write_segments_for
-
     stats = json.loads(open(os.path.join(index_dir, STATS_FILE)).read())
     n_new = _write_segments_for(
         spark, index_dir, stats["avgdl"], part_filter=lambda p: p >= base_pid
     )
     _recompute_global_stats(spark, index_dir)
-    return {"appended_docs": int(new_docs.count()), "new_segments": n_new}
+    return {"appended_docs": n_appended, "new_segments": n_new}

@@ -14,14 +14,16 @@ every operator has an exact SQL oracle.
 Scale notes (100 TB):
 - exact dedup: one hash-shuffle on the digest; keep-first via min(doc_id)
   aggregation (no window, no sort).
-- MinHash/LSH: signatures are computed map-side from the tokens array
-  with built-in higher-order functions (transform/aggregate) — zero
-  Python, zero shuffle; the only shuffles are the band-bucket
-  self-join (keys are 60-bit band hashes, uniformly distributed — no
-  skew) and the final pair dedup. Candidate verification re-joins the
-  (small) candidate set against doc shingle sets; at 10^12 docs you'd
-  bound bucket width (drop buckets > B docs — boilerplate black-hole
-  buckets) exactly like the head-term salting in the index build.
+- Shingling: ONE Arrow-batched pass (``_shingle_sig_udf``) yields each
+  doc's distinct n-gram set AND its MinHash signature (a numpy
+  universal-hash broadcast-min over one md5 per shingle) — map-side,
+  zero shuffle. MinHash and the exhaustive n-gram path read the same
+  checkpointed table.
+- MinHash/LSH: the only shuffles are the band-bucket self-join (keys
+  are band hashes, uniformly distributed — no skew) and the final pair
+  dedup. Candidate verification re-joins the (small) candidate set
+  against doc shingle sets; at 10^12 docs ``max_bucket_width`` drops
+  boilerplate black-hole buckets before the self-join.
 - SimHash: fingerprint is a map-side aggregate per doc; near-dup join
   blocks on 15-bit fingerprint quarters (pigeonhole: hamming<=3 pairs
   share >=1 of 4 blocks), then verifies with bit_count(xor).
@@ -38,7 +40,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from refimage_spark.session import spread_small_scan
-from refimage_spark.tokenizer import py_tokens, spark_tokens
+from refimage_spark.tokenizer import py_tokens
 
 # ---- engine-parity hash ------------------------------------------------------
 
@@ -64,6 +66,7 @@ def md5int32_sql(expr: str) -> str:
 _VERIFY_BROADCAST_BYTES = int(
     os.environ.get("REFIMAGE_VERIFY_BROADCAST_BYTES", str(256 << 20))
 )
+_UNKNOWN_BYTES = 1 << 62  # plan size when stats are unavailable
 
 # Universal-hash family h_i(x) = (md5int32_sql(x)*A_i + B_i) mod P61: ONE md5
 # per shingle instead of NUM_HASHES of them (~16x less hashing work).
@@ -94,38 +97,82 @@ def exact_dedup(documents: DataFrame, content_col: str = "text") -> DataFrame:
     )
 
 
-# ---- shingling ---------------------------------------------------------------
+# ---- shared blocking + verify joins ------------------------------------------
 
 
-def _shingle_udf(n: int):
-    @pandas_udf(T.ArrayType(T.StringType()))
-    def sh(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            toks = py_tokens(t)
-            out.append(
-                list(
-                    dict.fromkeys(
-                        " ".join(toks[i : i + n])
-                        for i in range(max(len(toks) - (n - 1), 0))
-                    )
-                )
-            )
-        return pd.Series(out)
-
-    return sh
+def _plan_bytes(df: DataFrame) -> int:
+    """Optimizer size estimate of ``df`` (exact after a checkpoint), or
+    ``_UNKNOWN_BYTES`` when plan stats cannot be read — callers then stay
+    on the general (non-broadcast) path."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return _UNKNOWN_BYTES
 
 
-def with_shingles(documents: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, shingles array<string>) — distinct n-grams of tokens.
+def _bucket_pairs(
+    keyed: DataFrame, id_col: str, keys: list[str], max_bucket_width: int | None
+) -> DataFrame:
+    """The blocking self-join every near-dup operator shares: rows of
+    ``keyed`` aliased "a"/"b" that agree on ``keys``, with a.id < b.id.
 
-    Arrow-batched pandas UDF: measured ~7x faster than the equivalent
-    built-in higher-order-function expression (HOFs run interpreted, so a
-    transform over a per-doc index sequence costs ~8us/shingle; the
-    batched Python loop costs ~1us). Map-only — pipelines with the scan."""
-    return spread_small_scan(documents).select(
-        "doc_id", _shingle_udf(n)(F.col("text")).alias("shingles")
-    )
+    ``max_bucket_width`` bounds black-hole buckets (boilerplate hashing
+    thousands of rows into one bucket → a W² join blow-up): buckets wider
+    than W are DROPPED before the self-join. Standard web-dedup practice
+    — such buckets are boilerplate, not near-dups; at 10^12 docs this
+    bound is what keeps the join quadratic-free. None keeps exact
+    blocking semantics (the oracle-checked form)."""
+    if max_bucket_width is not None:
+        widths = keyed.groupBy(*keys).agg(F.count(F.lit(1)).alias("_w"))
+        keyed = (
+            keyed.join(widths, keys)
+            .where(F.col("_w") <= max_bucket_width)
+            .drop("_w")
+        )
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    on.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    return keyed.alias("a").join(keyed.alias("b"), on)
+
+
+def _verify_join(
+    pairs: DataFrame, ab: tuple[str, str], table: DataFrame, id_col: str, val_col: str
+) -> DataFrame:
+    """``pairs`` with ``table``'s ``val_col`` attached for both ids of
+    each pair (pair columns ``ab``, matched on ``id_col``) as
+    ``_va``/``_vb`` — the verify join every near-dup operator shares.
+
+    The pairs side is explicitly repartitioned to the session's shuffle
+    width first: the candidate set arrives from a distinct() whose
+    output AQE coalesces BY SIZE to a handful of partitions (617k pairs
+    ~ 10 MB -> 5 partitions at sf1), but the per-pair verify (an
+    array_intersect or a cosine HOF) is CPU-bound — ~15us x 2 per pair —
+    so the MinHash verify stage ran on 5 of 32 cores (measured 9.5s of a
+    10.3s minhash run). An explicit repartition is not coalesced by AQE;
+    the extra exchange moves only skinny id pairs. Guide §2.5: partition
+    for the WORK, not the bytes, when a stage is compute-bound. It is on
+    the first id ALONE, with an explicit partition count: a repartition
+    on both ids is optimizer-removed as redundant (the upstream distinct
+    already hash-partitions on exactly those keys) and the surviving
+    ENSURE_REQUIREMENTS exchange is then AQE-coalesced by size — the
+    single-key explicitly-numbered form survives both.
+
+    The value side is BROADCAST while its (exact, post-checkpoint) plan
+    statistics fit _VERIFY_BROADCAST_BYTES: a sort-merge verify
+    re-exchanges the pairs on x_a then x_b — the second exchange ships
+    every pair's first value (~2 KB/row of shingles), AQE re-coalesces
+    the join stages under the pinned width, and at sf1 that left the
+    intersect work on 5 cores regardless of the repartition. With the
+    broadcast the values never shuffle and the verify runs at the pinned
+    width. Beyond the bound (corpus-scale tables) the sort-merge path
+    takes over unchanged — the same replicate-vs-shard size switch the
+    serving tier makes."""
+    a, b = ab
+    n = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    va = table.select(F.col(id_col).alias(a), F.col(val_col).alias("_va"))
+    vb = table.select(F.col(id_col).alias(b), F.col(val_col).alias("_vb"))
+    if _plan_bytes(table) <= _VERIFY_BROADCAST_BYTES:
+        va, vb = F.broadcast(va), F.broadcast(vb)
+    return pairs.repartition(n, a).join(va, a).join(vb, b)
 
 
 # ---- MinHash + LSH -----------------------------------------------------------
@@ -141,14 +188,7 @@ def lsh_candidate_pairs(
     max_bucket_width: int | None = None,
 ) -> DataFrame:
     """Distinct (doc_a < doc_b) candidate pairs sharing >=1 LSH band.
-
-    ``max_bucket_width`` bounds black-hole buckets (boilerplate shingles
-    hashing thousands of docs into one band bucket → a W² join blow-up):
-    buckets wider than W are DROPPED before the self-join. Standard
-    web-dedup practice — such buckets are boilerplate, not near-dups;
-    at 10^12 docs this bound is what keeps the join quadratic-free.
-    None (default) keeps exact LSH semantics (the oracle-checked form).
-    """
+    ``max_bucket_width``: see ``_bucket_pairs``."""
     rows_per_band = num_hashes // bands
     banded = signatures.select(
         "doc_id",
@@ -172,84 +212,26 @@ def lsh_candidate_pairs(
             )
         ).alias("bk"),
     ).select("doc_id", "bk.band", "bk.bkey")
-    if max_bucket_width is not None:
-        widths = banded.groupBy("band", "bkey").agg(
-            F.count(F.lit(1)).alias("_w")
-        )
-        banded = (
-            banded.join(widths, ["band", "bkey"])
-            .where(F.col("_w") <= max_bucket_width)
-            .drop("_w")
-        )
-    a = banded.alias("a")
-    b = banded.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _bucket_pairs(banded, "doc_id", ["band", "bkey"], max_bucket_width)
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
 
 
 def jaccard(pairs: DataFrame, shingled: DataFrame) -> DataFrame:
-    """Attach exact shingle-Jaccard to (doc_a, doc_b) pairs.
-
-    The pairs side is explicitly repartitioned to the session's shuffle
-    width first: the candidate set arrives from a distinct() whose
-    output AQE coalesces BY SIZE to a handful of partitions (617k pairs
-    ~ 10 MB -> 5 partitions at sf1), but the per-pair array_intersect
-    is CPU-bound — ~15us x 2 per pair — so the verify stage ran on 5 of
-    32 cores (measured 9.5s of a 10.3s minhash run). An explicit
-    repartition is not coalesced by AQE; the extra exchange moves only
-    skinny (doc_a, doc_b) rows. Guide §2.5: partition for the WORK, not
-    the bytes, when a stage is compute-bound.
-
-    The shingle side is BROADCAST while its (exact, post-checkpoint)
-    plan statistics fit _VERIFY_BROADCAST_BYTES: a sort-merge verify
-    re-exchanges the pairs on doc_a then doc_b — the second exchange
-    ships every pair's sh_a array (~2 KB/row), AQE re-coalesces the
-    join stages under the pinned width, and at sf1 that left the
-    intersect work on 5 cores regardless of the repartition. With the
-    broadcast the arrays never shuffle and the intersects run at the
-    pinned width. Beyond the bound (corpus-scale shingle tables) the
-    sort-merge path takes over unchanged — the same replicate-vs-shard
-    size switch the serving tier makes."""
-    n = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    sa = shingled.select(
-        F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")
-    )
-    sb = shingled.select(
-        F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")
-    )
-    try:
-        stat_bytes = int(
-            shingled._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # stats unavailable: stay on the general path
-        stat_bytes = 1 << 62
-    if stat_bytes <= _VERIFY_BROADCAST_BYTES:
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    # repartition on doc_a ALONE, with an explicit partition count: a
-    # repartition on (doc_a, doc_b) is optimizer-removed as redundant
-    # (the upstream distinct already hash-partitions on exactly those
-    # keys) and the surviving ENSURE_REQUIREMENTS exchange is then
-    # AQE-coalesced by size — the single-key explicitly-numbered form
-    # survives both, pinning the verify stage at full width
-    return (
-        pairs.repartition(n, "doc_a")
-        .join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(inter / union, 6).alias("jaccard"),
-        )
+    """Attach exact shingle-Jaccard to (doc_a, doc_b) pairs, through the
+    shared ``_verify_join``."""
+    inter = F.size(F.array_intersect("_va", "_vb"))
+    union = F.size("_va") + F.size("_vb") - inter
+    verified = _verify_join(pairs, ("doc_a", "doc_b"), shingled, "doc_id", "shingles")
+    return verified.select(
+        "doc_a",
+        "doc_b",
+        # try_divide: two docs with no shingles have a 0 union (a
+        # DIVIDE_BY_ZERO under ANSI); NULL drops the pair, as the DuckDB
+        # oracle's 0/0 does
+        F.round(F.try_divide(inter, union), 6).alias("jaccard"),
     )
 
 
@@ -312,6 +294,31 @@ def _shingle_sig_udf(n: int, num_hashes: int):
     return f
 
 
+def _shingle_table(documents: DataFrame, n: int, num_hashes: int) -> DataFrame:
+    """(doc_id, shingles, sig) for every doc — the one shingling pass.
+
+    Docs with no n-gram keep an empty ``shingles`` and a NULL ``sig``.
+    The table is referenced three times (band explode or pair list, plus
+    both join sides of the verify), so localCheckpoint materializes it
+    once: lineage is truncated and the blocks are GC'd with the plan
+    (unlike cache(), nothing leaks in the CacheManager). eager=True: a
+    lazy checkpoint lets the ORIGINAL plan (and its accumulators) be
+    GC'd while straggler tasks still report, which surfaces as a mid-run
+    "non-existent accumulator" SparkException."""
+    return (
+        spread_small_scan(documents)
+        .select(
+            "doc_id", _shingle_sig_udf(n, num_hashes)(F.col("text")).alias("ss")
+        )
+        .select(
+            "doc_id",
+            F.col("ss.shingles").alias("shingles"),
+            F.col("ss.sig").alias("sig"),
+        )
+        .localCheckpoint(eager=True)
+    )
+
+
 def minhash_neardup_pairs(
     documents: DataFrame,
     threshold: float = 0.5,
@@ -320,26 +327,10 @@ def minhash_neardup_pairs(
     bands: int = DEFAULT_BANDS,
     max_bucket_width: int | None = None,
 ) -> DataFrame:
-    """LSH candidates verified by exact Jaccard >= threshold.
-
-    Shingles AND signatures come from one fused Arrow pass
-    (``_shingle_sig_udf``); the result is referenced three times (band
-    explode + both join sides of the verify), so localCheckpoint
-    materializes it once — lineage is truncated and the blocks are GC'd
-    with the plan (unlike cache(), nothing leaks in the CacheManager).
-
-    Set ``max_bucket_width`` at scale to drop black-hole band buckets."""
-    # eager=True: a lazy checkpoint lets the ORIGINAL plan (and its
-    # accumulators) be GC'd while straggler tasks still report, which
-    # surfaces as a mid-run "non-existent accumulator" SparkException
-    shsig = (
-        spread_small_scan(documents).select(
-            "doc_id", _shingle_sig_udf(n, num_hashes)(F.col("text")).alias("ss")
-        )
-        .select("doc_id", F.col("ss.shingles").alias("shingles"),
-                F.col("ss.sig").alias("sig"))
-        .localCheckpoint(eager=True)
-    )
+    """LSH candidates verified by exact Jaccard >= threshold, both read
+    from one ``_shingle_table``. Set ``max_bucket_width`` at scale to
+    drop black-hole band buckets."""
+    shsig = _shingle_table(documents, n, num_hashes)
     cand = lsh_candidate_pairs(
         shsig.where(F.col("sig").isNotNull()).select("doc_id", "sig"),
         num_hashes,
@@ -354,8 +345,9 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exhaustive exact-Jaccard pairs (the oracle for MinHash recall).
     O(N^2) — correctness tool at fixture scale; the scale path is
-    minhash_neardup_pairs."""
-    sh = with_shingles(documents, n)
+    minhash_neardup_pairs. Shingles come from the same ``_shingle_table``
+    (docs without an n-gram stay in and match nothing)."""
+    sh = _shingle_table(documents, n, DEFAULT_NUM_HASHES)
     pairs = (
         sh.select(F.col("doc_id").alias("doc_a"))
         .crossJoin(sh.select(F.col("doc_id").alias("doc_b")))
@@ -377,7 +369,7 @@ def simhash_fingerprints(documents: DataFrame) -> DataFrame:
 
     Fingerprinting is a PURE PER-DOC function, so it runs as one
     Arrow-batched map-only pass. Round 6 vectorized the batch kernel
-    (guide §4.2): tokens come from Arrow C++ (arrow_token_list,
+    (guide §4.2): tokens come from Arrow C++ (arrow_flat_tokens,
     bit-identical to py_tokens), md5 is computed once per batch-UNIQUE
     token (dictionary encode first — the Zipf vocabulary makes this
     ~20x fewer hashes than per-occurrence), and the per-(doc, term)
@@ -395,17 +387,12 @@ def simhash_fingerprints(documents: DataFrame) -> DataFrame:
     @pandas_udf(T.LongType())
     def fp_of(texts: pd.Series) -> pd.Series:
         import pyarrow as pa
-        import pyarrow.compute as pc
 
-        from refimage_spark.tokenizer import arrow_token_list
+        from refimage_spark.tokenizer import arrow_flat_tokens
 
         arr = pa.Array.from_pandas(texts, type=pa.string())
-        toks = arrow_token_list(arr)
-        n_rows = len(toks)
-        offs = toks.offsets.to_numpy()
-        flat = toks.flatten()
-        row_of = np.repeat(np.arange(n_rows, dtype=np.int64), np.diff(offs))
-        keep = pc.not_equal(flat, "").to_numpy(zero_copy_only=False)
+        n_rows = len(arr)
+        flat, row_of = arrow_flat_tokens(arr)
         de = flat.dictionary_encode()
         codes = de.indices.to_numpy(zero_copy_only=False).astype(np.int64)
         vocab = de.dictionary.to_pylist()
@@ -421,7 +408,7 @@ def simhash_fingerprints(documents: DataFrame) -> DataFrame:
         )
         vals = np.zeros(n_rows, dtype=np.int64)
         got = np.zeros(n_rows, dtype=bool)
-        fused = row_of[keep] * v + codes[keep]
+        fused = row_of * v + codes
         if fused.size:
             pairs, tf = np.unique(fused, return_counts=True)
             prow = pairs // v
@@ -454,8 +441,8 @@ def simhash_neardup_pairs(
     """(doc_a, doc_b, hamming) with hamming <= max_hamming, via 15-bit
     block LSH (pigeonhole) + bit_count(xor) verification.
 
-    ``max_bucket_width`` is the same black-hole bound the MinHash path
-    has: on a distributionally homogeneous corpus, one popular 15-bit
+    ``max_bucket_width`` is the shared ``_bucket_pairs`` black-hole bound:
+    on a distributionally homogeneous corpus, one popular 15-bit
     block value can hold 10^4+ docs and the block join degrades to
     width^2 (measured: a 14.8k-wide bucket at 50k synthetic docs drove
     656M joined rows). Blocks wider than W are dropped before the
@@ -490,24 +477,9 @@ def simhash_neardup_pairs(
             )
         ).alias("bk"),
     ).select("doc_id", "fp", "bk.blk", "bk.bval")
-    if max_bucket_width is not None:
-        widths = blocked.groupBy("blk", "bval").agg(
-            F.count(F.lit(1)).alias("_w")
-        )
-        blocked = (
-            blocked.join(widths, ["blk", "bval"])
-            .where(F.col("_w") <= max_bucket_width)
-            .drop("_w")
-        )
-    a, b = blocked.alias("a"), blocked.alias("b")
     ham = F.bit_count(F.col("a.fp").bitwiseXOR(F.col("b.fp")))
     return (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.bval") == F.col("b.bval"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _bucket_pairs(blocked, "doc_id", ["blk", "bval"], max_bucket_width)
         .where(ham <= max_hamming)
         .select(
             F.col("a.doc_id").alias("doc_a"),
@@ -599,46 +571,14 @@ def embedding_neardup_lsh(
             "vec_id", F.lit(r).alias("round"), F.col("bucket")
         )
         buckets = br if buckets is None else buckets.unionByName(br)
-    if max_bucket_width is not None:
-        widths = buckets.groupBy("round", "bucket").agg(
-            F.count(F.lit(1)).alias("_w")
-        )
-        buckets = (
-            buckets.join(widths, ["round", "bucket"])
-            .where(F.col("_w") <= max_bucket_width)
-            .drop("_w")
-        )
-    a, b = buckets.alias("a"), buckets.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.round") == F.col("b.round"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
+        _bucket_pairs(buckets, "vec_id", ["round", "bucket"], max_bucket_width)
         .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
         .distinct()
     )
-    ea = e.select(F.col("vec_id").alias("vec_a"), F.col("emb").alias("emb_a"))
-    eb = e.select(F.col("vec_id").alias("vec_b"), F.col("emb").alias("emb_b"))
-    # same verify-stage treatment as jaccard(): the per-pair cosine is
-    # an interpreted HOF (~CPU-bound), so pin the stage width against
-    # AQE size-coalescing and broadcast the vector side while its stats
-    # fit — beyond the bound the sort-merge path takes over
-    n = int(cand.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    try:
-        stat_bytes = int(
-            e._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        stat_bytes = 1 << 62
-    if stat_bytes <= _VERIFY_BROADCAST_BYTES:
-        ea, eb = F.broadcast(ea), F.broadcast(eb)
-    cos = cosine(F.col("emb_a"), F.col("emb_b"))
+    cos = cosine(F.col("_va"), F.col("_vb"))
     return (
-        cand.repartition(n, "vec_a")
-        .join(ea, "vec_a")
-        .join(eb, "vec_b")
+        _verify_join(cand, ("vec_a", "vec_b"), e, "vec_id", "emb")
         .select("vec_a", "vec_b", F.round(cos, 6).alias("cos"))
         .where(F.col("cos") >= threshold)
     )

@@ -37,7 +37,7 @@ MIN_LANG_RATIO = 0.02
 # `filter` lambdas, which Spark evaluates INTERPRETED (the whole Project
 # falls out of codegen) — measured 0.66s (lang_id) / 0.36s
 # (quality_score) for 5k docs on one core. Here tokenization happens
-# ONCE per row in Arrow C++ (arrow_token_list — bit-identical to
+# ONCE per row in Arrow C++ (arrow_flat_tokens — bit-identical to
 # spark_tokens, golden-tested) and the counts are numpy bincounts over
 # the flattened token array. Only integers cross back to the JVM; every
 # division/round stays a JVM expression, so output values are
@@ -58,38 +58,34 @@ def _token_count_stats(texts: pd.Series) -> pd.DataFrame:
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from refimage_spark.tokenizer import arrow_token_list
+    from refimage_spark.tokenizer import arrow_flat_tokens
 
     arr = pa.Array.from_pandas(texts, type=pa.string())
-    toks = arrow_token_list(arr)
-    n_rows = len(toks)
-    offs = toks.offsets.to_numpy()
-    flat = toks.flatten()
-    row_of = np.repeat(np.arange(n_rows, dtype=np.int64), np.diff(offs))
-    keep = pc.not_equal(flat, "").to_numpy(zero_copy_only=False)
+    n_rows = len(arr)
+    flat, row_of = arrow_flat_tokens(arr)
 
     def per_row(mask: "np.ndarray") -> "np.ndarray":
         return np.bincount(
             row_of, weights=mask.astype(np.float64), minlength=n_rows
         ).astype(np.int32)
 
-    out = {"n": per_row(keep)}
+    out = {"n": np.bincount(row_of, minlength=n_rows).astype(np.int32)}
     for lg in LANG_PRIORITY:
         hits = pc.is_in(
             flat, value_set=pa.array(STOPWORDS[lg])
         ).to_numpy(zero_copy_only=False)
-        out[f"c_{lg}"] = per_row(hits & keep)
+        out[f"c_{lg}"] = per_row(hits)
     # distinct tokens per row: dictionary-encode once, then count the
     # unique (row, code) pairs with one np.unique over a fused key
     de = flat.dictionary_encode()
     codes = de.indices.to_numpy(zero_copy_only=False).astype(np.int64)
     v = max(len(de.dictionary), 1)
-    fused = np.unique(row_of[keep] * v + codes[keep])
+    fused = np.unique(row_of * v + codes)
     out["n_uniq"] = np.bincount(fused // v, minlength=n_rows).astype(np.int32)
     alpha = pc.match_substring_regex(flat, "^[a-z]+$").to_numpy(
         zero_copy_only=False
     )
-    out["n_alpha"] = per_row(alpha & keep)
+    out["n_alpha"] = per_row(alpha)
     return pd.DataFrame(out)
 
 

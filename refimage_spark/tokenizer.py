@@ -24,6 +24,8 @@ including a hypothesis fuzz over unicode):
                               the token) is pre-substituted to match.
                               Final-sigma context (Σ -> ς vs σ) cannot
                               affect tokens: both forms are separators.
+                              ``arrow_flat_tokens(arr)`` flattens it to
+                              (tokens, row index) for the batch kernels.
 """
 
 from __future__ import annotations
@@ -70,8 +72,8 @@ def duckdb_tokens_sql(expr: str) -> str:
 
 def arrow_token_list(arr):
     """Arrow ListArray of tokens per input string — bit-identical to
-    ``spark_tokens`` (fuzz-tested vs ``py_tokens``). Returns the list
-    array; callers flatten/filter empties as needed."""
+    ``spark_tokens`` (fuzz-tested vs ``py_tokens``) once the empty split
+    artifacts are dropped; ``arrow_flat_tokens`` does that."""
     import pyarrow.compute as pc
 
     # U+0130: the only unconditional multi-char Unicode lowercase —
@@ -79,3 +81,20 @@ def arrow_token_list(arr):
     # so Arrow's simple-mapping utf8_lower agrees
     arr = pc.replace_substring(arr, "İ", "i̇")
     return pc.split_pattern_regex(pc.utf8_lower(arr), TOKEN_SPLIT_RE)
+
+
+def arrow_flat_tokens(arr):
+    """(flat, row_of): every token of ``arr`` in row order as one Arrow
+    string array, and the int64 numpy index of the input row each token
+    came from. Empty split artifacts at string edges are dropped, so
+    row i's tokens are exactly ``py_tokens(arr[i])``."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    toks = arrow_token_list(arr)
+    flat = toks.flatten()
+    row_of = np.repeat(
+        np.arange(len(toks), dtype=np.int64), np.diff(toks.offsets.to_numpy())
+    )
+    keep = pc.not_equal(flat, "")
+    return flat.filter(keep), row_of[keep.to_numpy(zero_copy_only=False)]

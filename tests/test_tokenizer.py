@@ -72,12 +72,17 @@ def test_arrow_rendering_matches_on_tricky_unicode(spark):
 def test_arrow_rendering_fuzz_matches_python():
     """Hypothesis fuzz: arrow_token_list == py_tokens over arbitrary
     unicode (the Python form is itself golden-locked to the JVM/DuckDB
-    forms by the tests above)."""
+    forms by the tests above), and arrow_flat_tokens regroups to the
+    same per-row lists."""
     import pyarrow as pa
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from refimage_spark.tokenizer import arrow_token_list, py_tokens
+    from refimage_spark.tokenizer import (
+        arrow_flat_tokens,
+        arrow_token_list,
+        py_tokens,
+    )
 
     @given(st.lists(st.text(max_size=40), max_size=20))
     @settings(max_examples=300, deadline=None)
@@ -87,5 +92,10 @@ def test_arrow_rendering_fuzz_matches_python():
             for row in arrow_token_list(pa.array(texts, pa.string())).to_pylist()
         ]
         assert arrow == [py_tokens(s) for s in texts]
+        flat, row_of = arrow_flat_tokens(pa.array(texts, pa.string()))
+        regrouped = [[] for _ in texts]
+        for tok, row in zip(flat.to_pylist(), row_of.tolist()):
+            regrouped[row].append(tok)
+        assert regrouped == [py_tokens(s) for s in texts]
 
     check()
