@@ -3,7 +3,7 @@
 # `make zip` builds the --py-files artifact the CLI entrypoints expect:
 #   spark-submit --py-files refimage_spark.zip scripts/build_index_cli.py ...
 
-.PHONY: zip test oracles bench clean
+.PHONY: zip test oracles bench digest clean
 
 zip:
 	rm -f refimage_spark.zip
@@ -23,6 +23,12 @@ oracles:
 
 bench:
 	python bench.py
+
+# byte-level digest of an index (segment file hashes, manifest rows,
+# stats.json): `make digest IDX=/path/to/index`; diff two to compare
+digest:
+	@test -n "$(IDX)" || { echo "usage: make digest IDX=<index dir>"; exit 2; }
+	@PYTHONPATH="$(CURDIR)" python scripts/segment_digest.py "$(IDX)"
 
 clean:
 	rm -f refimage_spark.zip

@@ -52,7 +52,9 @@ from refimage_spark.index.segment import (
     FORMAT_VERSION,
     SegmentWriter,
     committed_pids,
+    manifest_dir,
     read_manifest,
+    seg_paths,
     write_manifest_row,
 )
 from refimage_spark.tokenizer import spark_tokens
@@ -89,6 +91,25 @@ def _corpus_totals(slim: DataFrame) -> tuple[int, float]:
     # exact-int division (not float(sum)/n): identical to the previous
     # per-part-sums form at any magnitude, incl. dl totals beyond 2^53
     return n, (int(row["dl_sum"]) / n if n else 0.0)
+
+
+def write_stats(index_dir: str, stats: dict) -> None:
+    """stats.json lands by tmp + atomic rename: readers never see a
+    partial file."""
+    path = os.path.join(index_dir, STATS_FILE)
+    with open(path + ".tmp", "w") as f:
+        json.dump(stats, f)
+    os.replace(path + ".tmp", path)
+
+
+def _read_docs(spark: SparkSession, index_dir: str) -> DataFrame | None:
+    """The docs table, or None when it holds no part: a compact that
+    drops every doc leaves a directory without data files, from which
+    Spark cannot infer a schema."""
+    path = _docs_path(index_dir)
+    if not any(n.startswith("part=") for n in os.listdir(path)):
+        return None
+    return spark.read.parquet(path)
 
 
 def _offsets_df(with_part: DataFrame) -> DataFrame:
@@ -256,19 +277,17 @@ def build_index(
         finally:
             for h in handles:
                 h.unpersist()
-        with open(stats_path + ".tmp", "w") as f:
-            json.dump(
-                {
-                    "n_docs": n_total,
-                    "avgdl": avgdl_total,
-                    "num_parts": num_parts,
-                    "tag_cols": list(tag_cols),
-                    "tokenizer": "lower-split-[^a-z0-9]+",
-                    "format_version": FORMAT_VERSION,
-                },
-                f,
-            )
-        os.replace(stats_path + ".tmp", stats_path)
+        write_stats(
+            index_dir,
+            {
+                "n_docs": n_total,
+                "avgdl": avgdl_total,
+                "num_parts": num_parts,
+                "tag_cols": list(tag_cols),
+                "tokenizer": "lower-split-[^a-z0-9]+",
+                "format_version": FORMAT_VERSION,
+            },
+        )
         t_pass_a = time.perf_counter() - t0
     stats = json.loads(open(stats_path).read())
     avgdl = stats["avgdl"]
@@ -330,16 +349,12 @@ def write_term_stats(spark: SparkSession, index_dir: str) -> None:
     import glob as _glob
     import shutil
 
-    from refimage_spark.index.segment import read_manifest, seg_paths
-
     dicts = [
         seg_paths(index_dir, r["partition_id"])[1]
         for r in read_manifest(index_dir)
     ]
     dst = _term_stats_path(index_dir)
     if sum(os.path.getsize(p) for p in dicts) <= _TERM_STATS_LOCAL_BYTES:
-        import pyarrow as pa
-
         tables = [
             pq.read_table(p, columns=["term", "df"]) for p in dicts
         ]
@@ -445,42 +460,48 @@ def _write_segments_for(
         pending.append(pid)
     if not pending:
         return 0
-    idx_dir = index_dir
 
-    def write_parts(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def write_part(pid: int) -> pa.RecordBatch | None:
         # re-check THIS pid's commit row only (a retried/speculative task
         # racing another attempt is harmless — segment writes are
-        # idempotent). The previous full committed_pids() scan re-read
-        # the whole manifest dir in EVERY task: O(P^2) file opens per
-        # build — ~100ms of aggregate listing at P=320, unusable at the
-        # 100-TB-scale P of 10^5+.
-        from refimage_spark.index.segment import manifest_dir
+        # idempotent). A full committed_pids() scan in every task would
+        # re-read the whole manifest dir: O(P^2) file opens per build.
+        row = os.path.join(manifest_dir(index_dir), f"part-{pid:05d}.json")
+        if os.path.exists(row):
+            return None
+        build_segment_from_part(index_dir, pid, avgdl)
+        return pa.record_batch([pa.array([pid], pa.int32())], names=["pid"])
 
-        for rb in batches:
-            for pid in rb.column("pid").to_pylist():
-                if os.path.exists(
-                    os.path.join(manifest_dir(idx_dir), f"part-{pid:05d}.json")
-                ):
-                    continue
-                p, nd, npost = build_segment_from_part(idx_dir, int(pid), avgdl)
-                yield pa.record_batch(
-                    [
-                        pa.array([p], pa.int32()),
-                        pa.array([nd], pa.int64()),
-                        pa.array([npost], pa.int64()),
-                    ],
-                    names=["pid", "n_docs", "n_postings"],
-                )
-
-    # a few pids per task, not one: per-task Spark overhead is ~5ms and
-    # segment builds are ~50ms, so one-task-per-pid spent ~25% of pass B
-    # on scheduling at P=320. 4 waves per core keeps the tail short
-    # (segments are near-equal by the hash partitioner).
-    n_tasks = min(len(pending), max(spark.sparkContext.defaultParallelism * 4, 1))
-    pid_df = spark.createDataFrame([(p,) for p in pending], "pid int").repartition(
-        n_tasks
+    return len(
+        _per_segment_job(
+            spark, [(p,) for p in pending], "pid int", write_part, "pid int"
+        ).collect()
     )
-    seg_stats = pid_df.mapInArrow(
-        write_parts, schema="pid int, n_docs long, n_postings long"
-    ).collect()
-    return len(seg_stats)
+
+
+def _per_segment_job(
+    spark: SparkSession, rows: list[tuple], row_schema: str, fn, schema: str
+) -> DataFrame:
+    """The one per-segment Spark job: the driver-side ``rows`` (tuples
+    of ``row_schema``) become ``fn(*row)`` in the tasks, each a
+    RecordBatch of ``schema`` or None for no output. Returns the
+    ``mapInArrow`` DataFrame; callers that need the results collect it.
+
+    A few rows per task, not one: per-task Spark overhead is ~5ms and
+    segment builds are ~50ms, so one task per pid spent ~25% of pass B
+    on scheduling at P=320. 4 waves per core keeps the tail short
+    (segments are near-equal by the hash partitioner)."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            for row in zip(*(c.to_pylist() for c in rb.columns)):
+                out = fn(*row)
+                if out is not None:
+                    yield out
+
+    n_tasks = min(len(rows), spark.sparkContext.defaultParallelism * 4)
+    return (
+        spark.createDataFrame(rows, row_schema)
+        .repartition(max(n_tasks, 1))
+        .mapInArrow(run, schema=schema)
+    )

@@ -9,26 +9,26 @@ delete) and growth by in-memory append with a monolithic save. Here:
   the current max); global stats/df are updated — O(new docs), the
   existing segments are untouched (log-structured append).
 - ``delete_docs``   : tombstone rows only; queries mask them (O(1)).
-- ``compact``       : physically drops tombstoned docs and merges each
-  segment in place, distributed one task per segment; the manifest is
-  swapped atomically at the end. Posting arrays of disjoint doc sets
-  merge by sorted interleave — exactness is preserved because scores
-  depend only on (tf, dl, global stats).
-- ``merge_segments``: combine small segments into one. The COMMIT POINT
-  is the merged row's atomic manifest write: it carries ``merged_from``
-  and ``read_manifest`` drops superseded rows, so a crash between the
-  commit and the source-file cleanup never double-serves a doc.
+- ``compact`` / ``merge_segments``: ONE rewriter, ``_rewrite_segments``,
+  writes the docs of a group of segments, minus an optional drop set,
+  as one new segment: compact is it on each ``[pid]`` with the
+  tombstones, a merge on a group. Scores depend only on (tf, dl,
+  global stats), so exactness holds. ONE COMMIT: the new segment's
+  atomic manifest row carries ``merged_from`` and ``read_manifest``
+  drops superseded rows, so a concurrent query reads a complete
+  generation of every segment and a crash before source cleanup never
+  double-serves a doc; a retry that finds its row skips the rewrite.
 - ``plan_merges``/``run_merge_policy``: size-tiered policy — streaming
   appends create many small segments; once a size tier accumulates
   ``min_merge`` of them they merge into the next tier (cascading), so
   segment count stays O(log corpus) under continuous ingest.
 
-Scale notes: compaction and policy merges run as Spark jobs with one
-task per OUTPUT segment (embarrassingly parallel — doc-partitioned
-segments never interact). Posting rebuild is 3 vectorized passes over
-the whole segment (``SegmentReader.read_all_postings``) and the writer
-consumes pre-aggregated (term, doc, tf) rows — no per-term Python loop,
-no np.repeat re-expansion of tf runs.
+Scale notes: compact and each policy round are one ``_rewrite_groups``
+call — output pids pre-assigned on the driver, one Spark job over the
+OUTPUT segments (doc-partitioned segments never interact). Sources
+decode in 3 vectorized passes (``SegmentReader.read_all_postings``) and
+the writer takes pre-aggregated (term, doc, tf) rows — no per-term
+Python loop, no np.repeat re-expansion of tf runs.
 """
 
 from __future__ import annotations
@@ -42,10 +42,10 @@ import socket
 import threading
 import time
 import uuid
-from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,12 +53,19 @@ from pyspark.sql import functions as F
 from refimage_spark.index.build import (
     STATS_FILE,
     _assign_and_project,
+    _corpus_totals,
     _dedup_slim_build,
+    _per_segment_job,
+    _read_docs,
     _write_segments_for,
+    write_stats,
+    write_term_stats,
 )
 from refimage_spark.index.segment import (
     SegmentReader,
     SegmentWriter,
+    manifest_dir,
+    manifest_rows,
     read_manifest,
     seg_paths,
     write_manifest_row,
@@ -325,50 +332,122 @@ def delete_docs(index_dir: str, doc_ids: list[int]) -> None:
 
 
 def _recompute_global_stats(spark: SparkSession, index_dir: str) -> None:
-    """N/avgdl from the docs table; df by re-aggregating segment dicts.
-    Must run AFTER segments reflect the new corpus."""
-    from refimage_spark.index.build import write_term_stats
-
-    docs = spark.read.parquet(os.path.join(index_dir, "docs.parquet"))
-    st = docs.agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")).head()
+    """N/avgdl from the docs table (build's exact-integer formula); df by
+    re-aggregating segment dicts. Must run AFTER segments reflect the
+    new corpus."""
+    docs = _read_docs(spark, index_dir)
+    n, avgdl = (0, 0.0) if docs is None else _corpus_totals(docs)
     stats = json.loads(open(os.path.join(index_dir, STATS_FILE)).read())
-    stats.update({"n_docs": st["n"], "avgdl": float(st["avgdl"])})
-    tmp = os.path.join(index_dir, STATS_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(stats, f)
-    os.replace(tmp, os.path.join(index_dir, STATS_FILE))
+    stats.update({"n_docs": n, "avgdl": avgdl})
+    write_stats(index_dir, stats)
     write_term_stats(spark, index_dir)
 
 
-def _rewrite_segment_filtered(
-    src_dir: str,
-    dst_dir: str,
-    pid: int,
-    drop_ids: np.ndarray,
+def _rewrite_segments(
+    index_dir: str,
+    pids: list[int],
+    new_pid: int,
     avgdl: float,
-    new_pid: int | None = None,
-) -> "SegmentWriter":
-    """Rewrite one segment without ``drop_ids`` — fully vectorized:
-    decode all postings in 3 passes, boolean-mask, feed the writer
-    pre-aggregated (term, doc, tf) rows (one Arrow take for the terms).
-    ``new_pid`` writes the output under a different pid (compact's
-    supersession commit)."""
-    reader = SegmentReader(src_dir, pid)
-    ids, dls, tags = reader.norms()
-    keep_mask = ~np.isin(ids, drop_ids)
-    writer = SegmentWriter(dst_dir, pid if new_pid is None else new_pid, avgdl)
+    drop_ids: np.ndarray | None = None,
+) -> dict:
+    """Write the docs of segments ``pids``, minus ``drop_ids``, as
+    segment ``new_pid``, and commit it with one atomic manifest row
+    carrying ``merged_from=pids`` (the supersession commit). Returns
+    {"new_pid", "n_docs", "n_postings"}.
+
+    IDEMPOTENT: a retry (Spark task re-run, crash-then-rerun) whose row
+    for ``new_pid`` already supersedes ``pids`` returns that row and
+    leaves the files alone — the sources may already be cleaned up.
+
+    Fully vectorized: norms are concatenated and sorted by doc id
+    (ids are disjoint across segments); each source's postings decode
+    in 3 passes, map to the sorted union vocabulary, and one lexsort by
+    (term, doc_id) orders the combined stream for the writer. Tags are
+    cast to list<string>, so every rewritten sidecar has one schema."""
+    pids = [int(p) for p in pids]
+    row_path = os.path.join(manifest_dir(index_dir), f"part-{new_pid:05d}.json")
+    if os.path.exists(row_path):
+        with open(row_path) as f:
+            row = json.load(f)
+        if sorted(row.get("merged_from") or []) == sorted(pids):
+            n_docs, n_postings = row["n_docs"], row["n_postings"]
+            return {"new_pid": new_pid, "n_docs": n_docs, "n_postings": n_postings}
+    readers = [SegmentReader(index_dir, p) for p in pids]
+    norms = [rd.norms() for rd in readers]
+    ids = np.concatenate([n[0] for n in norms])
+    order = np.argsort(ids)
+    keep = order if drop_ids is None else order[~np.isin(ids[order], drop_ids)]
+    tags = pa.concat_arrays([n[2].cast(pa.list_(pa.string())) for n in norms])
+    writer = SegmentWriter(index_dir, new_pid, avgdl)
     writer.set_norms(
-        ids[keep_mask],
-        dls[keep_mask],
-        tags.take(pa.array(np.flatnonzero(keep_mask))),
+        ids[keep], np.concatenate([n[1] for n in norms])[keep], tags.take(keep)
     )
-    terms, term_codes, docs_a, tfs_a = reader.read_all_postings()
-    if docs_a.size:
-        pm = ~np.isin(docs_a, drop_ids)
-        writer.add_raw(
-            terms.take(pa.array(term_codes[pm])), docs_a[pm], tfs_a[pm]
+    parts = [rd.read_all_postings() for rd in readers]
+    vocab = pc.unique(pa.chunked_array([p[0] for p in parts], pa.string()))
+    vocab = vocab.take(pc.array_sort_indices(vocab))
+    codes = np.concatenate(
+        [
+            pc.index_in(terms, value_set=vocab)
+            .to_numpy(zero_copy_only=False)
+            .astype(np.int64)[term_codes]
+            for terms, term_codes, _, _ in parts
+        ]
+    )
+    docs = np.concatenate([p[2] for p in parts])
+    tfs = np.concatenate([p[3] for p in parts])
+    o = np.lexsort((docs, codes))
+    if drop_ids is not None:
+        o = o[~np.isin(docs[o], drop_ids)]
+    writer.add_raw(vocab.take(pa.array(codes[o])), docs[o], tfs[o])
+    st = writer.finish()
+    write_manifest_row(index_dir, st, {"avgdl": avgdl, "merged_from": pids})
+    return {"new_pid": new_pid, "n_docs": st.n_docs, "n_postings": st.n_postings}
+
+
+def _rewrite_groups(
+    spark: SparkSession | None,
+    index_dir: str,
+    groups: list[list[int]],
+    drop_path: str | None = None,
+    avgdl: float | None = None,
+) -> None:
+    """Rewrite each group of segments as one new segment. Output pids
+    are pre-assigned from max+1 on the driver (tasks must not race on
+    max(manifest)+1). One ``_per_segment_job`` runs the groups; a lone
+    group, or no ``spark``, runs on the driver. ``avgdl`` stamps every
+    output row; None keeps each group's first source stamp (a merge
+    changes no corpus stats).
+
+    ``drop_path`` ships the drop set as a PATH, not a closure-captured
+    array: each rewrite side-reads it (shared storage at cluster scale),
+    which costs the same order as the rewrite's own membership mask —
+    millions of tombstones would otherwise be pickled into every task.
+    Source cleanup stays with the caller, deferred to the end of its run
+    so readers face one flip window per run."""
+    rows = {r["partition_id"]: r for r in read_manifest(index_dir)}
+    base = max(rows) + 1
+    jobs = [
+        (g, base + i, rows[g[0]].get("avgdl", 0.0) if avgdl is None else avgdl)
+        for i, g in enumerate(groups)
+    ]
+
+    def rewrite(pids: list[int], new_pid: int, stamp: float) -> pa.RecordBatch:
+        drop = (
+            None
+            if drop_path is None
+            else pq.read_table(drop_path)["doc_id"].to_numpy()
         )
-    return writer
+        _rewrite_segments(index_dir, pids, new_pid, stamp, drop)
+        return pa.record_batch([pa.array([new_pid], pa.int32())], names=["pid"])
+
+    if spark is None or len(jobs) == 1:
+        for job in jobs:
+            rewrite(*job)
+        return
+    done = _per_segment_job(
+        spark, jobs, "pids array<int>, new_pid int, avgdl double", rewrite, "pid int"
+    ).collect()
+    assert len(done) == len(jobs)
 
 
 def compact(spark: SparkSession, index_dir: str) -> dict:
@@ -399,58 +478,26 @@ def _compact_locked(spark: SparkSession, index_dir: str) -> dict:
     # 1. shrink the docs table (source of truth for stats) — ANTI-JOIN
     # against the tombstone table, never an IN-list literal in the plan
     # (millions of tombstones would otherwise be embedded in the query)
-    docs_path = os.path.join(index_dir, "docs.parquet")
-    docs = spark.read.parquet(docs_path)
-    tomb_df = spark.read.parquet(tomb_path)
-    kept = docs.join(F.broadcast(tomb_df), "doc_id", "left_anti")
-    tmp_docs = docs_path + ".compact"
-    kept.write.mode("overwrite").partitionBy("part").parquet(tmp_docs)
-    shutil.rmtree(docs_path)
-    os.replace(tmp_docs, docs_path)
+    docs = _read_docs(spark, index_dir)
+    if docs is not None:
+        docs_path = os.path.join(index_dir, "docs.parquet")
+        tomb_df = F.broadcast(spark.read.parquet(tomb_path))
+        tmp_docs = docs_path + ".compact"
+        docs.join(tomb_df, "doc_id", "left_anti").write.mode(
+            "overwrite"
+        ).partitionBy("part").parquet(tmp_docs)
+        shutil.rmtree(docs_path)
+        os.replace(tmp_docs, docs_path)
     stats = json.loads(open(os.path.join(index_dir, STATS_FILE)).read())
-    avgdl = stats["avgdl"]  # manifest lineage only; refreshed below
 
-    # 2. rewrite each segment without the tombstoned docs (1 task/segment),
-    # committed per segment via the merge SUPERSESSION protocol: the
-    # output lands under a NEW pid whose atomic manifest row carries
-    # merged_from=[old_pid]. A concurrent search therefore always reads
-    # a complete generation of every segment (old files until the row
-    # flips, new files after — never a half-swapped directory, which is
-    # what the previous whole-dir rmtree+rename swap exposed), and a
-    # crash mid-compact leaves a correct, re-runnable index.
-    manifest = read_manifest(index_dir)
-    pids = sorted(r["partition_id"] for r in manifest)
-    base = max(pids) + 1
-    idx = index_dir
-    # the tombstone set ships as a PATH, not a closure-captured array:
-    # each task side-reads tombstones.parquet once (shared storage at
-    # cluster scale) — millions of tombstones would otherwise be pickled
-    # into every task closure
-    tomb_path_b = tomb_path
-
-    def rewrite(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        drop = pq.read_table(tomb_path_b)["doc_id"].to_numpy()
-        for rb in batches:
-            for pid, npid in zip(
-                rb.column("pid").to_pylist(), rb.column("new_pid").to_pylist()
-            ):
-                writer = _rewrite_segment_filtered(
-                    idx, idx, int(pid), drop, avgdl, new_pid=int(npid)
-                )
-                st = writer.finish()
-                write_manifest_row(
-                    idx, st, {"avgdl": avgdl, "merged_from": [int(pid)]}
-                )
-                yield pa.record_batch(
-                    [pa.array([int(pid)], pa.int32())], names=["pid"]
-                )
-
-    rows_in = [(int(p), base + i) for i, p in enumerate(pids)]
-    pid_df = spark.createDataFrame(
-        rows_in, "pid int, new_pid int"
-    ).repartition(min(len(rows_in), 64))
-    done = pid_df.mapInArrow(rewrite, schema="pid int").collect()
-    assert len(done) == len(pids)
+    # 2. rewrite each segment without the tombstoned docs under a NEW pid
+    # (the supersession commit): a concurrent search always reads a
+    # complete generation of every segment, and a crash mid-compact
+    # leaves a correct, re-runnable index
+    pids = sorted(r["partition_id"] for r in read_manifest(index_dir))
+    _rewrite_groups(
+        spark, index_dir, [[p] for p in pids], tomb_path, stats["avgdl"]
+    )
 
     # 3. drop superseded sources; tombstones go LAST — they keep masking
     # the deleted docs in any old-generation segment a concurrent query
@@ -468,24 +515,12 @@ def sweep_orphans(index_dir: str) -> int:
     run (one reader-visible flip window per run); a crash after the
     per-group commits but before that cleanup therefore leaks the
     superseded rows/files permanently — ``read_manifest`` filters them
-    so correctness holds, but no later path would ever delete them
-    (merge's idempotency cleanup only fires for an identical re-planned
-    pid set, which the filtered manifest never produces again). This
-    sweep runs at the START of every compact/policy run, under the
+    so correctness holds, but no later path would ever delete them.
+    This sweep runs at the START of every compact/policy run, under the
     maintenance lock: any pid appearing in a committed row's
     ``merged_from`` is garbage by definition. Returns the number of
     orphaned manifest rows removed."""
-    mdir = os.path.join(index_dir, "manifest")
-    if not os.path.isdir(mdir):
-        return 0
-    rows = []
-    for name in sorted(os.listdir(mdir)):
-        if name.endswith(".json"):
-            try:
-                with open(os.path.join(mdir, name)) as f:
-                    rows.append(json.load(f))
-            except (OSError, ValueError):
-                continue
+    rows = manifest_rows(index_dir)
     superseded: set[int] = set()
     for r in rows:
         superseded.update(int(p) for p in (r.get("merged_from") or []))
@@ -513,115 +548,39 @@ def _cleanup_merged_sources(index_dir: str, pids: list[int]) -> None:
 def merge_segments(
     index_dir: str,
     pids: list[int],
-    new_pid: int | None = None,
-    lock: bool = True,
     cleanup: bool = True,
 ) -> dict:
-    """Log-structured merge: combine several (small) segments into one.
-
-    ``lock=False`` is for callers already holding the maintenance lock
-    (run_merge_policy runs disjoint merge groups as Spark tasks under
-    its own driver-held lock).
+    """Log-structured merge: combine several (small) segments into one,
+    under the maintenance lock.
 
     Doc sets are disjoint, so per-term posting lists merge by doc-id
     sort; global stats/df are unchanged — queries return identical
     results before and after (asserted in tests).
 
-    COMMIT PROTOCOL: the new segment's files land first (fsync+rename),
-    then ITS manifest row (carrying ``merged_from``) lands atomically —
-    that row is the single commit point. ``read_manifest`` treats any
-    pid listed in a ``merged_from`` as superseded, so a crash after the
-    commit but before the source rows/files are removed leaves a
-    correct, query-identical index (stale files are garbage, not data).
-
-    Posting rebuild is vectorized: each input decodes in 3 passes
-    (read_all_postings), term strings map to a sorted union vocabulary
-    via searchsorted, and one global lexsort by (term_code, doc_id)
-    orders the combined stream for the writer.
-    """
-    if lock:
-        with maintenance_lock(index_dir):
-            return merge_segments(
-                index_dir, pids, new_pid, lock=False, cleanup=cleanup
-            )
+    The output pid is max(live)+1. The commit is ``_rewrite_segments``'
+    manifest row (see there): a retry of a committed merge finds that
+    row (its sources are superseded), reuses its pid and goes straight
+    to cleanup.
+    ``cleanup=False`` leaves the superseded sources on disk, as a crash
+    before cleanup would."""
     assert len(pids) >= 2
-    rows = read_manifest(index_dir)
-    # IDEMPOTENCY: a Spark task retry (or a crash-then-rerun) whose prior
-    # attempt already committed the merged row finds its sources
-    # superseded — detect its own commit (merged_from == pids) and skip
-    # straight to cleanup instead of dying on the missing-source assert.
-    pid_set = {int(p) for p in pids}
-    for r in rows:
-        if set(r.get("merged_from") or []) == pid_set:
-            if cleanup:
-                _cleanup_merged_sources(index_dir, pids)
-            return {
-                "merged": pids,
-                "new_pid": r["partition_id"],
-                "n_docs": r["n_docs"],
-                "n_postings": r["n_postings"],
-            }
-    manifest = {r["partition_id"]: r for r in rows}
-    for p in pids:
-        assert p in manifest, f"segment {p} not in manifest"
-    if new_pid is None:
-        new_pid = max(manifest) + 1
-    readers = [SegmentReader(index_dir, p) for p in pids]
-    avgdl = manifest[pids[0]].get("avgdl", 0.0)
-    writer = SegmentWriter(index_dir, new_pid, avgdl)
-    # merged norms (doc-id sorted; ids are disjoint across segments)
-    nid, ndl, ntags = [], [], []
-    for rd in readers:
-        ids, dls, tags = rd.norms()
-        nid.append(ids)
-        ndl.append(dls)
-        ntags.append(tags)
-    nid_all = np.concatenate(nid)
-    order = np.argsort(nid_all)
-    tags_all = pa.concat_arrays(
-        [t.cast(pa.list_(pa.string())) for t in ntags]
-    ).take(pa.array(order))
-    writer.set_norms(nid_all[order], np.concatenate(ndl)[order], tags_all)
-    # vectorized k-way posting merge via a union vocabulary
-    import pyarrow.compute as pc
-
-    parts = [rd.read_all_postings() for rd in readers]
-    vocab = sorted(
-        set().union(*[set(p[0].to_pylist()) for p in parts])
-    )  # vocab-sized python, not posting-sized
-    vocab_pa = pa.array(vocab, pa.string())
-    code_l, doc_l, tf_l = [], [], []
-    for terms, term_codes, docs_a, tfs_a in parts:
-        if docs_a.size == 0:
-            continue
-        local_to_union = pc.index_in(terms, value_set=vocab_pa).to_numpy(
-            zero_copy_only=False
-        ).astype(np.int64)
-        code_l.append(local_to_union[term_codes])
-        doc_l.append(docs_a)
-        tf_l.append(tfs_a)
-    if code_l:
-        codes = np.concatenate(code_l)
-        docs_a = np.concatenate(doc_l)
-        tfs_a = np.concatenate(tf_l)
-        o = np.lexsort((docs_a, codes))
-        writer.add_raw(vocab_pa.take(pa.array(codes[o])), docs_a[o], tfs_a[o])
-    st = writer.finish()
-    # COMMIT: one atomic manifest-row write supersedes the sources
-    write_manifest_row(
-        index_dir, st, {"avgdl": avgdl, "merged_from": [int(p) for p in pids]}
-    )
-    # cleanup (safe to crash anywhere in here — sources are superseded);
-    # run_merge_policy defers it to the end of the whole policy run so
-    # concurrent queries see at most ONE flip window per run
-    if cleanup:
-        _cleanup_merged_sources(index_dir, pids)
-    return {
-        "merged": pids,
-        "new_pid": new_pid,
-        "n_docs": st.n_docs,
-        "n_postings": st.n_postings,
-    }
+    with maintenance_lock(index_dir):
+        rows = read_manifest(index_dir)
+        live = {r["partition_id"]: r for r in rows}
+        done = [
+            r for r in rows if sorted(r.get("merged_from") or []) == sorted(pids)
+        ]
+        if done:  # a retry: our own committed row supersedes the sources
+            new_pid, avgdl = done[0]["partition_id"], done[0]["avgdl"]
+        else:
+            for p in pids:
+                assert p in live, f"segment {p} not in manifest"
+            new_pid = max(live) + 1
+            avgdl = live[pids[0]].get("avgdl", 0.0)
+        out = _rewrite_segments(index_dir, pids, new_pid, avgdl)
+        if cleanup:
+            _cleanup_merged_sources(index_dir, pids)
+    return {"merged": pids, **out}
 
 
 def plan_merges(
@@ -659,76 +618,33 @@ def run_merge_policy(
     """Apply the size-tiered policy until no tier overflows (merged
     outputs may cascade into a higher tier that then overflows).
 
-    With ``spark``, each round's (disjoint) merge groups run as one
-    Spark job, one task per output segment; without, they run serially
-    on the driver. Query results are identical before/after (stats and
-    df never change under merge). Holds the maintenance lock for the
-    whole policy run (merge groups within a round are disjoint and run
-    in parallel as Spark tasks UNDER that one driver-held lock)."""
-    with maintenance_lock(index_dir):
-        return _run_merge_policy_locked(
-            index_dir, spark, tier_factor, min_merge, max_merge, max_rounds
-        )
-
-
-def _run_merge_policy_locked(
-    index_dir: str,
-    spark: SparkSession | None,
-    tier_factor: float,
-    min_merge: int,
-    max_merge: int,
-    max_rounds: int,
-) -> dict:
-    sweep_orphans(index_dir)  # reclaim leftovers of any crashed prior run
+    Each round's (disjoint) merge groups are one ``_rewrite_groups``
+    call: with ``spark``, one Spark job; without, serially on the
+    driver. Query results are identical before/after (stats and df
+    never change under merge). Holds the maintenance lock for the whole
+    policy run (the groups of a round run as Spark tasks UNDER that one
+    driver-held lock)."""
     merged_total: list[list[int]] = []
     n_rounds = 0
-    for _ in range(max_rounds):
-        plans = plan_merges(index_dir, tier_factor, min_merge, max_merge)
-        if not plans:
-            break
-        n_rounds += 1
-        if spark is not None and len(plans) > 1:
-            idx = index_dir
-            plan_json = [json.dumps(p) for p in plans]
-
-            def do_merge(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-                for rb in batches:
-                    for blob, npid in zip(
-                        rb.column("plan").to_pylist(),
-                        rb.column("new_pid").to_pylist(),
-                    ):
-                        merge_segments(
-                            idx,
-                            json.loads(blob),
-                            new_pid=int(npid),
-                            lock=False,
-                            cleanup=False,
-                        )
-                        yield pa.record_batch(
-                            [pa.array([blob], pa.string())], names=["plan"]
-                        )
-
-            # pre-assign output pids on the driver (executors must not race
-            # on max(manifest)+1)
-            base = max(r["partition_id"] for r in read_manifest(idx)) + 1
-            rows = [(pj, base + i) for i, pj in enumerate(plan_json)]
-            df = spark.createDataFrame(rows, "plan string, new_pid int")
-            df.repartition(len(rows)).mapInArrow(
-                do_merge, schema="plan string"
-            ).collect()
-        else:
-            for p in plans:
-                merge_segments(index_dir, p, lock=False, cleanup=False)
-        merged_total.extend(plans)
-    # DEFERRED source cleanup: superseded rows/files stay on disk while
-    # the policy cascades (read_manifest filters them, so queries and
-    # later rounds only see live segments) and are removed ONCE here —
-    # concurrent searches face a single flip window per policy run
-    # instead of one per merge group, and the serving retry covers it.
-    if merged_total:
-        _cleanup_merged_sources(
-            index_dir, sorted({p for grp in merged_total for p in grp})
-        )
+    with maintenance_lock(index_dir):
+        sweep_orphans(index_dir)  # reclaim leftovers of any crashed prior run
+        for _ in range(max_rounds):
+            plans = plan_merges(index_dir, tier_factor, min_merge, max_merge)
+            if not plans:
+                break
+            n_rounds += 1
+            _rewrite_groups(spark, index_dir, plans)
+            merged_total.extend(plans)
+        # DEFERRED source cleanup: superseded rows/files stay on disk
+        # while the policy cascades (read_manifest filters them, so
+        # queries and later rounds only see live segments) and are
+        # removed ONCE here — concurrent searches face a single flip
+        # window per policy run instead of one per merge group, and the
+        # serving retry covers it.
+        if merged_total:
+            _cleanup_merged_sources(
+                index_dir, sorted({p for grp in merged_total for p in grp})
+            )
     return {"rounds": n_rounds, "merged_groups": merged_total}
 
 
@@ -743,10 +659,10 @@ def update_doc_tags(
     — unlike the reference, whose only mutation path for indexed fields
     is a full rebuild.
 
-    - segments FIRST: one task per segment; each side-reads the updates
-      parquet, checks membership against its sorted doc ids, and
-      rewrites ONLY its docs sidecar (atomic tmp+rename). The posting
-      file is never opened.
+    - segments FIRST: one ``_per_segment_job`` over the segments; each
+      side-reads the updates parquet, checks membership against its
+      sorted doc ids, and rewrites ONLY its docs sidecar (atomic
+      tmp+rename). The posting file is never opened.
     - docs table second: the affected parts' rows are rewritten via
       dynamic partition overwrite (untouched part dirs keep their files).
 
@@ -776,55 +692,38 @@ def _update_doc_tags_locked(
     up_path = os.path.join(index_dir, "tag_updates.parquet")
     pq.write_table(pa.table({"doc_id": up_ids, "tags": up_tags}), up_path)
     try:
-        # 1. segment sidecars: membership-check + rewrite, 1 task/segment
-        pids = [r["partition_id"] for r in read_manifest(index_dir)]
-        idx = index_dir
-        up_path_b = up_path
-
-        def rewrite(
-            batches: Iterator[pa.RecordBatch],
-        ) -> Iterator[pa.RecordBatch]:
-            import pyarrow.compute as pc
-
-            ut = pq.read_table(up_path_b)
+        # 1. segment sidecars: membership-check + rewrite, per segment
+        def retag(pid: int) -> pa.RecordBatch:
+            ut = pq.read_table(up_path)
             uids = ut["doc_id"].to_numpy()
-            utags = ut["tags"].combine_chunks()
-            for rb in batches:
-                for pid in rb.column("pid").to_pylist():
-                    docs_p = seg_paths(idx, int(pid))[2]
-                    t = pq.read_table(docs_p)
-                    ids = t["doc_id"].to_numpy()
-                    pos = np.searchsorted(uids, ids)
-                    posc = np.minimum(pos, uids.size - 1)
-                    hit = uids[posc] == ids
-                    n_hit = int(hit.sum())
-                    if n_hit:
-                        repl = utags.take(pa.array(posc))
-                        new_tags = pc.if_else(
-                            pa.array(hit), repl, t["tags"].combine_chunks()
-                        )
-                        out = t.set_column(
-                            t.schema.get_field_index("tags"), "tags", new_tags
-                        )
-                        pq.write_table(out, docs_p + ".tmp", compression="zstd")
-                        os.replace(docs_p + ".tmp", docs_p)
-                    yield pa.record_batch(
-                        [pa.array([n_hit], pa.int32())], names=["n"]
-                    )
+            docs_p = seg_paths(index_dir, pid)[2]
+            t = pq.read_table(docs_p)
+            ids = t["doc_id"].to_numpy()
+            posc = np.minimum(np.searchsorted(uids, ids), uids.size - 1)
+            hit = uids[posc] == ids
+            n_hit = int(hit.sum())
+            if n_hit:
+                repl = ut["tags"].combine_chunks().take(pa.array(posc))
+                new_tags = pc.if_else(
+                    pa.array(hit), repl, t["tags"].combine_chunks()
+                )
+                out = t.set_column(
+                    t.schema.get_field_index("tags"), "tags", new_tags
+                )
+                pq.write_table(out, docs_p + ".tmp", compression="zstd")
+                os.replace(docs_p + ".tmp", docs_p)
+            return pa.record_batch([pa.array([n_hit], pa.int32())], names=["n"])
 
-        pid_df = spark.createDataFrame(
-            [(p,) for p in pids], "pid int"
-        ).repartition(min(len(pids), 64))
-        rewritten = sum(
-            r["n"] > 0
-            for r in pid_df.mapInArrow(rewrite, schema="n int").collect()
-        )
+        segs = [(r["partition_id"],) for r in read_manifest(index_dir)]
+        hits = _per_segment_job(spark, segs, "pid int", retag, "n int").collect()
+        rewritten = sum(r["n"] > 0 for r in hits)
 
-        # 2. docs table: rewrite only the affected part dirs
+        # 2. docs table: rewrite only the affected part dirs (none when
+        # a compact dropped every doc)
         docs_path = os.path.join(index_dir, "docs.parquet")
-        docs = spark.read.parquet(docs_path)
+        docs = _read_docs(spark, index_dir)
         u = spark.read.parquet(up_path).withColumnRenamed("tags", "_u_tags")
-        affected = [
+        affected = [] if docs is None else [
             r["part"]
             for r in docs.join(F.broadcast(u), "doc_id")
             .select("part")
@@ -890,14 +789,14 @@ def _append_pages_locked(
     num_parts = stats["num_parts"]
     tag_cols = tuple(stats.get("tag_cols", ["lang"]))
     docs_path = os.path.join(index_dir, "docs.parquet")
-    old_docs = spark.read.parquet(docs_path)
-    base_id = old_docs.agg(F.max("doc_id")).head()[0] + 1
+    old_docs = _read_docs(spark, index_dir)
+    base_id, fresh = 0, new_pages
+    if old_docs is not None:
+        base_id = old_docs.agg(F.max("doc_id")).head()[0] + 1
+        # drop urls we already have (recrawl -> keep existing, matching S10)
+        fresh = new_pages.join(old_docs.select("url"), "url", "left_anti")
     base_pid = max(r["partition_id"] for r in read_manifest(index_dir)) + 1
 
-    # drop urls we already have (recrawl -> keep existing, matching S10)
-    fresh = new_pages.join(
-        old_docs.select("url"), "url", "left_anti"
-    )
     deduped, handles = _dedup_slim_build(fresh, tag_cols=tag_cols)
     try:
         # count BEFORE the write: it fills the cache the write reads, and

@@ -26,7 +26,7 @@ from __future__ import annotations
 import json
 import os
 import threading
-from typing import TYPE_CHECKING, Iterator
+from typing import TYPE_CHECKING
 
 import numpy as np
 import pyarrow as pa
@@ -983,8 +983,9 @@ def search_index(
     """
     from pyspark.sql import functions as F
 
+    from refimage_spark.index.build import _per_segment_job
+
     node, avgdl, idfs, pids, tomb = _query_plan(index_dir, query)
-    idx_dir = index_dir
     if mode == "auto":
         mode = "local" if len(pids) <= 2048 else "spark"
 
@@ -995,22 +996,20 @@ def search_index(
         )
         return spark.createDataFrame(rows, RESULT_SCHEMA)
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            for pid in rb.column("pid").to_pylist():
-                ids, sc = _segment_topk(
-                    idx_dir, pid, node, idfs, avgdl, k, threshold, tomb
-                )
-                if ids.size:
-                    yield pa.record_batch(
-                        [pa.array(ids, pa.int64()), pa.array(sc, pa.float64())],
-                        names=["doc_id", "score"],
-                    )
+    def run(pid: int) -> pa.RecordBatch | None:
+        ids, sc = _segment_topk(
+            index_dir, pid, node, idfs, avgdl, k, threshold, tomb
+        )
+        if not ids.size:
+            return None
+        return pa.record_batch(
+            [pa.array(ids, pa.int64()), pa.array(sc, pa.float64())],
+            names=["doc_id", "score"],
+        )
 
-    pid_df = spark.createDataFrame([(p,) for p in pids], "pid int").repartition(
-        min(len(pids), 64)
+    cand = _per_segment_job(
+        spark, [(p,) for p in pids], "pid int", run, RESULT_SCHEMA
     )
-    cand = pid_df.mapInArrow(run, schema=RESULT_SCHEMA)
     return cand.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 

@@ -608,12 +608,10 @@ def write_manifest_row(index_dir: str, stats: SegmentStats, extra: dict) -> None
     os.replace(path + ".tmp", path)
 
 
-def read_manifest(index_dir: str) -> list[dict]:
-    """All committed segment rows, with merge crash-safety: a row whose
-    pid appears in another row's ``merged_from`` is superseded — the
-    merged segment's row IS the commit point for a merge, so a crash
-    between that row landing and the source rows being deleted can never
-    serve a doc from two segments (the stale rows are filtered here)."""
+def manifest_rows(index_dir: str) -> list[dict]:
+    """Every manifest row on disk, superseded ones included, in pid
+    order — the raw listing under ``read_manifest`` and the orphan
+    sweep."""
     d = manifest_dir(index_dir)
     if not os.path.isdir(d):
         return []
@@ -627,6 +625,16 @@ def read_manifest(index_dir: str) -> list[dict]:
                 # a concurrent merge's cleanup removed the row between
                 # listdir and open — it was superseded anyway; skip
                 continue
+    return rows
+
+
+def read_manifest(index_dir: str) -> list[dict]:
+    """All committed segment rows, with merge crash-safety: a row whose
+    pid appears in another row's ``merged_from`` is superseded — the
+    merged segment's row IS the commit point for a merge, so a crash
+    between that row landing and the source rows being deleted can never
+    serve a doc from two segments (the stale rows are filtered here)."""
+    rows = manifest_rows(index_dir)
     for r in rows:
         check_format_version(r, f"manifest row seg-{r.get('partition_id')}")
     superseded: set[int] = set()
