@@ -1,7 +1,8 @@
 """Delta + varbyte codec, vectorized numpy (no per-element Python).
 
 Format: classic VB — little-endian base-128; the HIGH bit set marks the
-LAST byte of a value. Doc ids are delta-encoded (gaps) before VB.
+LAST byte of a value. Doc ids are delta-encoded (gaps) before VB, with
+the gaps reset at every block start (``blocked_delta_decode``).
 
 Reference analogue: the FAISS index serialization it replaces is an
 opaque binary (/root/reference/src/refimage/search/__init__.py:343-353);
@@ -20,6 +21,7 @@ def varbyte_encode_with_lengths(values: np.ndarray) -> tuple[bytes, np.ndarray]:
     v = np.asarray(values, dtype=np.uint64)
     if v.size == 0:
         return b"", np.empty(0, dtype=np.int64)
+    # bytes needed per value = number of 7-bit groups (>=1)
     lengths = np.ones(v.size, dtype=np.int64)
     tmp = v >> np.uint64(7)
     while np.any(tmp):
@@ -35,35 +37,13 @@ def varbyte_encode_with_lengths(values: np.ndarray) -> tuple[bytes, np.ndarray]:
         pos = starts[mask] + b
         out[pos] = (shifted[mask] & np.uint64(0x7F)).astype(np.uint8)
         shifted = shifted >> np.uint64(7)
-    out[ends - 1] |= 0x80
+    out[ends - 1] |= 0x80  # terminator bit on last byte of each value
     return out.tobytes(), lengths
 
 
 def varbyte_encode(values: np.ndarray) -> bytes:
-    """Encode non-negative int64/uint64 array. Vectorized: compute each
-    value's byte length, scatter 7-bit groups into one output buffer."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    # bytes needed per value = number of 7-bit groups (>=1)
-    lengths = np.ones(v.size, dtype=np.int64)
-    tmp = v >> np.uint64(7)
-    while np.any(tmp):
-        lengths += (tmp > 0).astype(np.int64)
-        tmp = tmp >> np.uint64(7)
-    total = int(lengths.sum())
-    out = np.zeros(total, dtype=np.uint8)
-    ends = np.cumsum(lengths)
-    starts = ends - lengths
-    shifted = v.copy()
-    max_len = int(lengths.max())
-    for b in range(max_len):
-        mask = lengths > b
-        pos = starts[mask] + b
-        out[pos] = (shifted[mask] & np.uint64(0x7F)).astype(np.uint8)
-        shifted = shifted >> np.uint64(7)
-    out[ends - 1] |= 0x80  # terminator bit on last byte of each value
-    return out.tobytes()
+    """Encode a non-negative int64/uint64 array."""
+    return varbyte_encode_with_lengths(values)[0]
 
 
 def varbyte_decode(buf: bytes, count: int | None = None) -> np.ndarray:
@@ -98,19 +78,6 @@ def varbyte_decode(buf: bytes, count: int | None = None) -> np.ndarray:
     return sums.astype(np.uint64)
 
 
-def delta_encode(sorted_ids: np.ndarray) -> np.ndarray:
-    a = np.asarray(sorted_ids, dtype=np.int64)
-    out = np.empty_like(a)
-    if a.size:
-        out[0] = a[0]
-        np.subtract(a[1:], a[:-1], out=out[1:])
-    return out
-
-
-def delta_decode(gaps: np.ndarray) -> np.ndarray:
-    return np.cumsum(np.asarray(gaps, dtype=np.int64))
-
-
 def blocked_delta_decode(gaps: np.ndarray, block: int) -> np.ndarray:
     """Decode gaps that RESET every ``block`` values (the gap at each
     block start is the absolute doc id). Segmented cumsum, vectorized:
@@ -123,17 +90,3 @@ def blocked_delta_decode(gaps: np.ndarray, block: int) -> np.ndarray:
     base = cs[starts] - g[starts]  # == cs[start-1]; 0 for the first block
     sizes = np.diff(np.append(starts, g.size))
     return cs - np.repeat(base, sizes)
-
-
-def encode_postings(doc_ids: np.ndarray, tfs: np.ndarray) -> tuple[bytes, bytes]:
-    """(docs_blob, tfs_blob): gaps-VB for sorted doc ids, VB for tfs."""
-    gaps = delta_encode(doc_ids)
-    return varbyte_encode(gaps), varbyte_encode(tfs)
-
-
-def decode_postings(
-    docs_blob: bytes, tfs_blob: bytes, count: int
-) -> tuple[np.ndarray, np.ndarray]:
-    doc_ids = delta_decode(varbyte_decode(docs_blob, count))
-    tfs = varbyte_decode(tfs_blob, count).astype(np.int64)
-    return doc_ids, tfs

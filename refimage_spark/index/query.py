@@ -26,6 +26,8 @@ from __future__ import annotations
 import json
 import os
 import threading
+import time
+from collections import OrderedDict
 from typing import TYPE_CHECKING
 
 import numpy as np
@@ -46,28 +48,21 @@ K1P1 = BM25_K1 + 1.0
 
 # ---- serving caches (mtime-keyed: append/compact/delete invalidate) -------
 
+# (kind, path) -> (mtime, value): one entry per file, holding the newest
+# generation seen. A loader may legitimately return None (global_df's
+# too-big-to-pin vocabulary) and that None is a HIT — treating it as a
+# miss re-read the multi-million-row term_stats parquet on every query.
 _CACHE: dict = {}
 _CACHE_LOCK = threading.Lock()
-# Per-process bound on cached SegmentReaders. Readers pin their term
-# dictionary (columnar Arrow, ~1-3 MB for a cache-sized segment) and
-# norms; an UNBOUNDED cache made per-worker memory O(total segments) —
-# at 1280 segments x 32 pool workers that OOM-killed the pool (the
-# 2M-page probe), even though the segment COUNT was under the local
-# serving threshold. LRU keeps a worker's footprint bounded by the
-# chunks it actually serves; evicted readers cost one reload (mmap +
-# dict read, ~ms) on the next touch. The default cap accommodates
-# replicate-mode serving (every worker may cache the whole index's
-# readers — that mode is itself bytes-bounded, see _REPLICATE_MAX_BYTES);
-# sharded mode touches only a worker's owned blocks, far below the cap.
-# Other cache kinds (stats, manifest, term_stats) are one-per-index and
-# stay unbounded.
+# Per-process LRU bound on cached SegmentReaders, which pin their term
+# dictionary (~1-3 MB for a cache-sized segment) and norms: unbounded,
+# 1280 segments x 32 pool workers OOM-killed the pool. An evicted reader
+# costs one reload (~ms) on its next touch. The default fits replicate
+# mode (any worker may cache the whole, bytes-bounded index); a shard
+# touches only its own blocks. Other kinds (stats, manifest,
+# term_stats) are one-per-index and stay unbounded.
 _READER_CACHE_CAP = int(os.environ.get("REFIMAGE_READER_CACHE_CAP", "1024"))
-_READER_LRU: dict = {}  # key -> monotonically increasing access stamp
-_LRU_CLOCK = [0]
-_CACHE_MISS = object()  # sentinel: a loader may legitimately return None
-# (global_df's too-big-to-pin vocabulary) and that None must be CACHED —
-# treating it as a miss re-read the multi-million-row term_stats parquet
-# on every query (review finding)
+_READER_LRU: OrderedDict = OrderedDict()  # reader keys, least recent first
 
 
 def _mtime(path: str) -> float:
@@ -77,52 +72,38 @@ def _mtime(path: str) -> float:
         return -1.0
 
 
+def _touch_reader(key: tuple) -> None:
+    """Mark a cached reader most recently used; evict past the cap (never
+    the reader just touched). Caller holds _CACHE_LOCK."""
+    _READER_LRU.pop(key, None)
+    _READER_LRU[key] = None
+    while len(_READER_LRU) > max(_READER_CACHE_CAP, 1):
+        _CACHE.pop(_READER_LRU.popitem(last=False)[0], None)
+
+
 def _cached(kind: str, path: str, loader):
     """Thread-safe: the serving pool hits this concurrently. Bookkeeping
     is locked; loaders run OUTSIDE the lock (they do IO), so two threads
-    may race the same load — the first insert wins and both use it."""
-    key = (kind, path, _mtime(path))
+    may race the same load — the first insert wins and both use it. A
+    slow load of an OLDER generation returns its value but never
+    replaces a newer cached one (that would force a pointless reload)."""
+    key = (kind, path)
+    mtime = _mtime(path)
     with _CACHE_LOCK:
-        hit = _CACHE.get(key, _CACHE_MISS)
-        if hit is not _CACHE_MISS and kind == "reader":
-            _LRU_CLOCK[0] += 1
-            _READER_LRU[key] = _LRU_CLOCK[0]
-    if hit is _CACHE_MISS:
-        hit = loader()
-        with _CACHE_LOCK:
-            existing = _CACHE.get(key, _CACHE_MISS)
-            if existing is not _CACHE_MISS:
-                hit = existing
-            else:
-                # a slow loader for an OLD generation must not insert
-                # after a newer generation was cached (its sweep would
-                # evict the fresh entry and force a pointless reload)
-                newer = any(
-                    k[:2] == (kind, path) and k[2] > key[2] for k in _CACHE
-                )
-                if not newer:
-                    _CACHE[key] = hit
-                    # drop stale generations of the same object
-                    for k in [
-                        k
-                        for k in list(_CACHE)
-                        if k[:2] == (kind, path) and k != key
-                    ]:
-                        del _CACHE[k]
-                        _READER_LRU.pop(k, None)
-            if kind == "reader" and key in _CACHE:
-                # stamp ONLY keys actually cached: a stale-generation
-                # loader declined above must not leave a phantom LRU
-                # entry that inflates the count and evicts a live reader
-                _LRU_CLOCK[0] += 1
-                _READER_LRU[key] = _LRU_CLOCK[0]
-                while len(_READER_LRU) > _READER_CACHE_CAP:
-                    victim = min(_READER_LRU, key=_READER_LRU.get)
-                    if victim == key:
-                        break  # never evict the entry just inserted
-                    del _READER_LRU[victim]
-                    _CACHE.pop(victim, None)
-    return hit
+        hit = _CACHE.get(key)
+        if hit is not None and hit[0] == mtime:
+            if kind == "reader":
+                _touch_reader(key)
+            return hit[1]
+    value = loader()
+    with _CACHE_LOCK:
+        hit = _CACHE.get(key)
+        if hit is not None and hit[0] >= mtime:
+            return hit[1] if hit[0] == mtime else value
+        _CACHE[key] = (mtime, value)
+        if kind == "reader":
+            _touch_reader(key)
+    return value
 
 
 def load_stats(index_dir: str) -> dict:
@@ -466,6 +447,15 @@ def _segment_topk(
     return topk_arrays(ids, sc, k)
 
 
+def _manifest(index_dir: str) -> list[dict]:
+    """The index's live manifest rows, cached by the manifest dir's mtime."""
+    return _cached(
+        "manifest",
+        os.path.join(index_dir, "manifest"),
+        lambda: read_manifest(index_dir),
+    )
+
+
 def _query_plan(index_dir: str, query: str):
     """Shared per-query prep: parse, stats, idf, manifest, tombstones."""
     node = dsl.parse(query)
@@ -473,25 +463,24 @@ def _query_plan(index_dir: str, query: str):
     avgdl = float(stats["avgdl"])
     terms = list(dict.fromkeys(collect_terms(node)))
     idfs = make_idfs(index_dir, terms)
-    manifest = _cached(
-        "manifest",
-        os.path.join(index_dir, "manifest"),
-        lambda: read_manifest(index_dir),
-    )
-    pids = sorted(r["partition_id"] for r in manifest)
+    pids = sorted(r["partition_id"] for r in _manifest(index_dir))
     tomb = _load_tombstones(index_dir)
     return node, avgdl, idfs, pids, tomb
 
 
-def _index_bytes(index_dir: str) -> int:
-    """Total posting bytes from the (cached) manifest — the replicate-
-    vs-shard serving switch keys on index SIZE, not segment count."""
-    manifest = _cached(
-        "manifest",
-        os.path.join(index_dir, "manifest"),
-        lambda: read_manifest(index_dir),
+def _sweep(index_dir, plan, pids, k, threshold, counters=None):
+    """Exact top-k over ``pids`` of a ``_query_plan``, one segment after
+    another: the inline path and every pool chunk run this one loop."""
+    node, avgdl, idfs, _, tomb = plan
+    return _merge_parts(
+        [
+            _segment_topk(
+                index_dir, p, node, idfs, avgdl, k, threshold, tomb, counters
+            )
+            for p in pids
+        ],
+        k,
     )
-    return sum(r["bytes"] for r in manifest)
 
 
 _SERVE_SHARDS: list | None = None
@@ -508,15 +497,11 @@ _ACTIVE_LOCK = threading.Lock()
 # ~2 ms/task of IPC (measured crossover: inline p50 0.17s at 256
 # segments vs 0.06s pooled at 512 — BENCH/BASELINE.md).
 _INLINE_MAX_SEGMENTS = 128
-# replicate-mode lone-query chunk sizing. Round-6 retune (measured at
-# 320 segments / 98 MB, local[32]): chunk 16 -> p50 14ms / 8-client-to-
-# 1-client ratio 2.8-3.5; chunk 32 -> p50 21ms / ratio 4.1-4.4 with
-# IDENTICAL loaded throughput (qps_8 is budget-bound, not chunk-bound).
-# 32 spends 7ms of lone-query p50 (bar 0.35s — 16x headroom remains) to
-# halve per-query IPC and restore robust margin on the published
-# >=3x concurrency-scaling bar that round 5's chunk=16 retune broke
-# (VERDICT r5 #1). Under load the cores/active budget caps chunk count,
-# so this mainly widens LONE-query fan-out.
+# replicate-mode segments per chunk. Measured at 320 segments / 98 MB,
+# local[32]: chunk 16 -> p50 14ms / 8-client-to-1-client ratio 2.8-3.5;
+# chunk 32 -> p50 21ms / ratio 4.1-4.4 with IDENTICAL loaded throughput
+# (qps_8 is budget-bound). Under load the budget below caps the chunk
+# count, so this mainly sets LONE-query fan-out.
 _CHUNK_TARGET = 32
 # replicate-mode per-query chunk budget = _BUDGET_MULT * workers /
 # active. 2 (not 1) measured best at 320 segments: active=8 then yields
@@ -547,6 +532,32 @@ _REPLICATE_MAX_BYTES = int(
 _SERVE_POOL = None  # shared free-scheduling pool (replicate mode)
 
 
+def _replicated(index_dir: str) -> bool:
+    """The replicate-vs-shard switch: the index's posting bytes (from the
+    cached manifest) against _REPLICATE_MAX_BYTES."""
+    return sum(r["bytes"] for r in _manifest(index_dir)) <= _REPLICATE_MAX_BYTES
+
+
+def _new_executor(workers: int):
+    """A forkserver process pool: workers fork from a clean server
+    process (never from this possibly-threaded, possibly-JVM-attached
+    one), then import this module WITHOUT pyspark."""
+    import multiprocessing
+    from concurrent.futures import ProcessPoolExecutor
+
+    return ProcessPoolExecutor(
+        max_workers=workers, mp_context=multiprocessing.get_context("forkserver")
+    )
+
+
+def _broken(ex) -> bool:
+    """Whether a worker of ``ex`` died (OOM-kill, SIGKILL). The one read
+    of ProcessPoolExecutor's private ``_broken`` flag; without it the
+    executor counts as healthy, and a dead worker still fails its
+    futures with BrokenExecutor, which search_local retries."""
+    return bool(getattr(ex, "_broken", False))
+
+
 def _serve_pool():
     """Shared multi-worker pool for REPLICATE-mode serving: chunks land
     on any free worker (work stealing a fixed per-worker executor cannot
@@ -557,18 +568,20 @@ def _serve_pool():
     if _SERVE_POOL is None:
         with _SERVE_POOL_LOCK:
             if _SERVE_POOL is None:
-                import multiprocessing
-                from concurrent.futures import ProcessPoolExecutor
-
-                _SERVE_POOL = ProcessPoolExecutor(
-                    max_workers=os.cpu_count() or 4,
-                    mp_context=multiprocessing.get_context("forkserver"),
-                )
+                _SERVE_POOL = _new_executor(os.cpu_count() or 4)
     return _SERVE_POOL
 
 
 def _shard_of(pid: int, n_shards: int) -> int:
     return (pid // _SHARD_BLOCK) % n_shards
+
+
+def _by_shard(pids: list[int], n_shards: int) -> dict[int, list[int]]:
+    """pids grouped by the shard that owns them (``_shard_of``)."""
+    out: dict[int, list[int]] = {}
+    for p in pids:
+        out.setdefault(_shard_of(p, n_shards), []).append(p)
+    return out
 
 
 def _serve_shards():
@@ -589,17 +602,8 @@ def _serve_shards():
     if _SERVE_SHARDS is None:
         with _SERVE_POOL_LOCK:
             if _SERVE_SHARDS is None:
-                import multiprocessing
-                from concurrent.futures import ProcessPoolExecutor
-
-                # forkserver: workers fork from a clean server process
-                # (never from this possibly-threaded, possibly-JVM-
-                # attached one), then import this module WITHOUT pyspark
-                ctx = multiprocessing.get_context("forkserver")
                 _SERVE_SHARDS = [
-                    _ShardDispatcher(
-                        ProcessPoolExecutor(max_workers=1, mp_context=ctx)
-                    )
+                    _ShardDispatcher(_new_executor(1))
                     for _ in range(os.cpu_count() or 4)
                 ]
     return _SERVE_SHARDS
@@ -631,16 +635,11 @@ class _ShardDispatcher:
         first query (bounded: one shard's slice). Thread-safe; idempotent
         when racing healers (only the thread seeing the broken executor
         swaps it)."""
-        import multiprocessing
-        from concurrent.futures import ProcessPoolExecutor
-
         with self.lock:
-            broken = getattr(self.ex, "_broken", False)
-            if not broken:
+            if not _broken(self.ex):
                 return
             old = self.ex
-            ctx = multiprocessing.get_context("forkserver")
-            self.ex = ProcessPoolExecutor(max_workers=1, mp_context=ctx)
+            self.ex = _new_executor(1)
             self.inflight = False
         old.shutdown(wait=False)
 
@@ -674,9 +673,7 @@ class _ShardDispatcher:
                 stranded = self.pending
                 self.pending = []
                 self.inflight = False
-            for _, f in batch:
-                f.set_exception(e)
-            for _, f in stranded:
+            for _, f in batch + stranded:
                 f.set_exception(e)
             return
 
@@ -707,20 +704,12 @@ def _serve_chunk(
     threshold: float,
     pids: list[int] | None,
 ):
-    """Process-pool worker: evaluate a slice of segments sequentially
+    """Process-pool worker: ``_sweep`` over a slice of segments
     (``pids=None`` = the whole index, replicate-mode's one-task query).
     Re-plans from the query string (worker-local mtime-keyed caches make
     that ~0.1 ms warm) so only tiny picklables cross the IPC boundary."""
-    node, avgdl, idfs, all_pids, tomb = _query_plan(index_dir, query)
-    if pids is None:
-        pids = all_pids
-    return _merge_parts(
-        [
-            _segment_topk(index_dir, p, node, idfs, avgdl, k, threshold, tomb)
-            for p in pids
-        ],
-        k,
-    )
+    plan = _query_plan(index_dir, query)
+    return _sweep(index_dir, plan, plan[3] if pids is None else pids, k, threshold)
 
 
 def _merge_parts(parts, k: int):
@@ -741,7 +730,7 @@ def _heal_pools() -> None:
     or silently-empty result."""
     global _SERVE_POOL
     with _SERVE_POOL_LOCK:
-        if _SERVE_POOL is not None and getattr(_SERVE_POOL, "_broken", False):
+        if _SERVE_POOL is not None and _broken(_SERVE_POOL):
             _SERVE_POOL.shutdown(wait=False)
             _SERVE_POOL = None
     if _SERVE_SHARDS is not None:
@@ -758,56 +747,43 @@ def warm_serving_pool(index_dir: str | None = None) -> None:
     tier performs. Optional; the first queries on a cold shard pay the
     same cost lazily otherwise."""
     shards = _serve_shards()
-
-    def _import_only():
-        n = len(shards)
-        list(_serve_pool().map(_mtime, ["/"] * (n * 4), chunksize=1))
+    n_sh = len(shards)
+    pids = [] if index_dir is None else sorted(
+        r["partition_id"] for r in _manifest(index_dir)
+    )
+    ts = None
+    if pids:
+        # the warm query must actually score postings (an absent term
+        # would short-circuit before the dict/norms loads) — use the
+        # head term
+        ts = pq.read_table(
+            os.path.join(index_dir, "term_stats.parquet"), columns=["term", "df"]
+        )
+    if ts is None or ts.num_rows == 0:
+        # no index, or an empty one (pc.index over zero rows returns -1
+        # and the head-term lookup would die with an opaque IndexError
+        # during tier startup): import-only warmup
+        list(_serve_pool().map(_mtime, ["/"] * (n_sh * 4), chunksize=1))
         for sh in shards:
             sh.ex.submit(_mtime, "/").result()
-
-    if index_dir is None:
-        _import_only()
         return
-    pids = sorted(
-        r["partition_id"]
-        for r in _cached(
-            "manifest",
-            os.path.join(index_dir, "manifest"),
-            lambda: read_manifest(index_dir),
-        )
-    )
-    # the warm query must actually score postings (an absent term would
-    # short-circuit before the dict/norms loads) — use the head term
-    ts = pq.read_table(
-        os.path.join(index_dir, "term_stats.parquet"), columns=["term", "df"]
-    )
-    if ts.num_rows == 0 or not pids:
-        # empty index: pc.index over zero rows returns -1 and the head-term
-        # lookup would die with an opaque IndexError during tier startup —
-        # fall back to the import-only warmup
-        _import_only()
-        return
-    head_term = ts["term"][int(pc.index(ts["df"], pc.max(ts["df"])).as_py())]
-    n_sh = len(shards)
-    if _index_bytes(index_dir) <= _REPLICATE_MAX_BYTES:
+    head = str(ts["term"][int(pc.index(ts["df"], pc.max(ts["df"])).as_py())])
+    if _replicated(index_dir):
         # REPLICATE startup: every shared-pool worker loads the FULL
         # reader set (a replicate-mode chunk may land on any of them);
         # oversubmit so idle workers each pick up at least one sweep
         # with high probability.
         pool = _serve_pool()
         futs = [
-            pool.submit(_serve_chunk, index_dir, str(head_term), 1, 0.0, None)
+            pool.submit(_serve_chunk, index_dir, head, 1, 0.0, None)
             for _ in range(n_sh * 2)
         ]
     else:
         # SHARD startup: each worker loads exactly its owned blocks —
         # the same block->shard map the serving path uses.
-        by_shard: dict[int, list[int]] = {}
-        for p in pids:
-            by_shard.setdefault(_shard_of(p, n_sh), []).append(p)
         futs = [
-            shards[s].submit(index_dir, str(head_term), 1, 0.0, ps)
-            for s, ps in by_shard.items()
+            shards[s].submit(index_dir, head, 1, 0.0, ps)
+            for s, ps in _by_shard(pids, n_sh).items()
         ]
     for f in futs:
         f.result()
@@ -824,27 +800,32 @@ def search_local(
     """The SERVING path: evaluate the query against the segment files
     directly — no Spark session, no job dispatch, no driver roundtrip.
     Rank-identical to the Spark path (same per-segment kernel, same
-    global merge); this is what a low-latency search tier in front of
-    the index runs. Returns [(doc_id, score)] in (score desc, doc_id
+    global merge). Returns [(doc_id, score)] in (score desc, doc_id
     asc) order.
 
-    Load-adaptive execution (the kernel is GIL-bound, so all
-    parallelism is process-based):
-    - lone query over a serving-sized index: inline sequential sweep —
-      lowest latency, zero IPC (~0.5 ms/segment warm);
-    - concurrent queries: each query becomes ONE process-pool task, so
-      aggregate qps scales with cores instead of queries queueing
-      behind a shared saturated pool;
-    - huge segment counts: the sweep is split into pid chunks fanned
-      across the pool, with the per-query chunk budget shrunk by the
-      number of in-flight queries (floor 1) — admission control that
-      trades lone-query latency for aggregate throughput under load.
-    ``workers`` caps the per-query fan-out (a concurrency hint; the
-    shared pool itself is always sized from os.cpu_count()).
+    Load-adaptive execution, each unit of work one ``_sweep`` (the
+    kernel is GIL-bound, so all parallelism is process-based):
+    - a lone query over <= _INLINE_MAX_SEGMENTS segments sweeps inline:
+      lowest latency, zero IPC;
+    - otherwise a replicated index (``_replicated``) is swept in pid
+      chunks on the shared pool, with the per-query chunk budget shrunk
+      by the number of in-flight queries (floor 1), so under load each
+      query tends to ONE task and qps scales with cores; ``workers``
+      caps this fan-out;
+    - a bigger index fans out to the sticky shards that own its pids.
+
+    Failures are classified, with at most 4 attempts: DSLParseError (a
+    user error) raises at once; BrokenExecutor (a dead worker) heals the
+    pools, then backs off; OSError, KeyError, IndexError and ValueError
+    (a query racing a compact/merge flip) back off and re-plan. The
+    back-offs are 0.02, 0.04 and 0.06 s, and the 4th failure raises.
+    Any other error raises at once.
 
     ``counters`` receives decoded_blocks/total_blocks of the block-
     pruned text scan on the inline path (pool chunks run in worker
     processes, which can't fill a caller-side dict)."""
+    from concurrent.futures import BrokenExecutor
+
     global _ACTIVE_QUERIES
     with _ACTIVE_LOCK:
         _ACTIVE_QUERIES += 1
@@ -855,28 +836,13 @@ def search_local(
         # query entry (a stale too-generous fan-out under-admits everyone)
         with _ACTIVE_LOCK:
             active = _ACTIVE_QUERIES
-        node, avgdl, idfs, pids, tomb = _query_plan(index_dir, query)
+        plan = _query_plan(index_dir, query)
+        pids = plan[3]
         if active == 1 and len(pids) <= _INLINE_MAX_SEGMENTS:
-            parts = [
-                _segment_topk(
-                    index_dir, p, node, idfs, avgdl, k, threshold, tomb,
-                    counters,
-                )
-                for p in pids
-            ]
-            return _merge_parts(parts, k)
+            return _sweep(index_dir, plan, pids, k, threshold, counters)
         shards = _serve_shards()
         n_sh = len(shards)
-        if _index_bytes(index_dir) <= _REPLICATE_MAX_BYTES:
-            # REPLICATE mode: every worker may hold the full reader set
-            # (bytes-bounded), so chunks go to the SHARED free-scheduling
-            # pool — any idle worker picks them up. Load-adaptive
-            # fan-out, the empirically best shape at this scale: a lone
-            # query splits into up to cores/active chunks (parallel
-            # latency); under load the budget shrinks toward one
-            # whole-query task and aggregate qps reaches
-            # cores/(CPU-per-query).
-            pool = _serve_pool()
+        if _replicated(index_dir):
             budget = max(1, (_BUDGET_MULT * n_sh) // active)
             if workers is not None:
                 budget = max(1, min(budget, workers))
@@ -884,68 +850,43 @@ def search_local(
                 1,
                 min(budget, (len(pids) + _CHUNK_TARGET - 1) // _CHUNK_TARGET),
             )
-            chunks = [pids[i::n_chunks] for i in range(n_chunks)]
+            pool = _serve_pool()
             futs = [
-                pool.submit(_serve_chunk, index_dir, query, k, threshold, c)
-                for c in chunks
+                pool.submit(
+                    _serve_chunk, index_dir, query, k, threshold, pids[i::n_chunks]
+                )
+                for i in range(n_chunks)
             ]
-            return _merge_parts([f.result() for f in futs], k)
-        # SHARD mode: each shard evaluates exactly the pids it owns
-        # (_shard_of), so its caches stay warm across queries and
-        # generations and per-worker memory stays bounded by its slice;
-        # concurrent queries to the same shard ride one batched process
-        # round-trip (_ShardDispatcher). ``workers`` deliberately does
-        # NOT apply here: merging pid sets onto fewer shards routes
-        # segments to non-owning workers, churning their LRU caches
-        # toward the whole index — the reload-storm regime sticky
-        # affinity exists to prevent (ADVICE r5). It remains a
-        # replicate-mode-only fan-out hint.
-        by_shard: dict[int, list[int]] = {}
-        for p in pids:
-            by_shard.setdefault(_shard_of(p, n_sh), []).append(p)
-        futs = [
-            shards[s % n_sh].submit(index_dir, query, k, threshold, ps)
-            for s, ps in by_shard.items()
-        ]
+        else:
+            # ``workers`` deliberately does NOT apply here: merging pid
+            # sets onto fewer shards routes segments to non-owning
+            # workers, churning their LRU caches toward the whole index
+            # — the reload storm sticky affinity exists to prevent.
+            futs = [
+                shards[s].submit(index_dir, query, k, threshold, ps)
+                for s, ps in _by_shard(pids, n_sh).items()
+            ]
         return _merge_parts([f.result() for f in futs], k)
 
-    from concurrent.futures import BrokenExecutor
-
     try:
-        for retry in range(3):
+        for retry in range(4):
             try:
                 ids, sc = attempt()
-                break
-            except BrokenExecutor:
-                # SELF-HEAL after a worker-process death (OOM-kill,
-                # SIGKILL): replace the broken executor(s) and retry —
-                # the query re-runs against a fresh worker whose caches
-                # reload lazily. Bounded: one retry per attempt, and
-                # only the dead worker's state is rebuilt.
-                import time
-
-                _heal_pools()
-                time.sleep(0.02 * (retry + 1))
+                return [(int(d), float(s)) for d, s in zip(ids, sc)]
             except dsl.DSLParseError:
                 raise  # a user error: no maintenance race to wait out
-            except (OSError, KeyError, IndexError, ValueError):
-                # SELF-HEAL across a maintenance flip: compact/merge
-                # commit new segment generations per-pid (supersession
-                # rows) and then remove the superseded files — a query
-                # planned just before the flip can race that cleanup.
-                # Re-planning reads the flipped manifest (mtime-keyed
-                # caches pick up the new generation); bounded retries
-                # because back-to-back maintenance rounds can flip again
-                # mid-retry.
-                import time
-
+            except (BrokenExecutor, OSError, KeyError, IndexError, ValueError) as e:
+                # a query planned just before a compact/merge flip can
+                # race the cleanup of superseded files; re-planning reads
+                # the flipped manifest. Bounded: rounds can flip again.
+                if retry == 3:
+                    raise
+                if isinstance(e, BrokenExecutor):
+                    _heal_pools()
                 time.sleep(0.02 * (retry + 1))
-        else:
-            ids, sc = attempt()
     finally:
         with _ACTIVE_LOCK:
             _ACTIVE_QUERIES -= 1
-    return [(int(d), float(s)) for d, s in zip(ids, sc)]
 
 
 def search_index(
@@ -1022,9 +963,8 @@ def index_stats(index_dir: str) -> dict:
     manifest = read_manifest(index_dir)
     with _ACTIVE_LOCK:
         active = _ACTIVE_QUERIES
-    post_bytes = sum(r["bytes"] for r in manifest)
     # the pool that serves this index: the index's bytes pick the mode
-    if post_bytes <= _REPLICATE_MAX_BYTES:
+    if _replicated(index_dir):
         pool_started = _SERVE_POOL is not None
         pool_workers = (os.cpu_count() or 4) if pool_started else 0
     else:
@@ -1036,7 +976,7 @@ def index_stats(index_dir: str) -> dict:
         "n_segments": len(manifest),
         "n_postings": sum(r["n_postings"] for r in manifest),
         "n_terms_total": sum(r["n_terms"] for r in manifest),
-        "post_bytes": post_bytes,
+        "post_bytes": sum(r["bytes"] for r in manifest),
         "num_parts": stats["num_parts"],
         "tokenizer": stats.get("tokenizer"),
         "serving": {

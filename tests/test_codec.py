@@ -5,10 +5,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from refimage_spark.index.codec import (
-    decode_postings,
-    delta_decode,
-    delta_encode,
-    encode_postings,
     varbyte_decode,
     varbyte_encode,
     varbyte_encode_with_lengths,
@@ -39,27 +35,6 @@ def test_lengths_variant_consistent(vals):
     for i, v in enumerate(vals[:20]):
         piece = blob2[off[i] : off[i + 1]]
         assert varbyte_decode(piece).tolist() == [v]
-
-
-@given(
-    st.lists(
-        st.integers(min_value=0, max_value=2**41), min_size=1, max_size=400
-    )
-)
-@settings(max_examples=100, deadline=None)
-def test_postings_roundtrip(ids):
-    doc_ids = np.array(sorted(set(ids)), dtype=np.int64)
-    rng = np.random.default_rng(0)
-    tfs = rng.integers(1, 100, size=doc_ids.size)
-    db, tb = encode_postings(doc_ids, tfs)
-    d2, t2 = decode_postings(db, tb, doc_ids.size)
-    assert np.array_equal(d2, doc_ids)
-    assert np.array_equal(t2, tfs)
-
-
-def test_delta_identity():
-    a = np.array([5, 6, 100, 2**40], dtype=np.int64)
-    assert np.array_equal(delta_decode(delta_encode(a)), a)
 
 
 def test_empty():

@@ -432,3 +432,168 @@ def test_cached_none_is_a_hit(spark, tmp_path):
     assert Q._cached("none-probe", p, loader) is None
     assert Q._cached("none-probe", p, loader) is None
     assert len(calls) == 1
+
+
+def test_search_local_retry_classes(index_dir, monkeypatch):
+    """The retry loop's classes and back-off: a maintenance race
+    (OSError) re-plans with 0.02/0.04/0.06 s back-offs and at most 4
+    attempts; any other error (TypeError) raises on the first attempt."""
+    import time
+
+    from refimage_spark.index import query as Q
+
+    expected = Q.search_local(index_dir, "red car", k=10)
+    sleeps: list[float] = []
+    monkeypatch.setattr(time, "sleep", sleeps.append)
+    plan = Q._query_plan
+    calls: list[int] = []
+
+    def flaky_plan(*a):
+        calls.append(1)
+        if len(calls) <= 2:
+            raise FileNotFoundError("segment cleaned up mid-query")
+        return plan(*a)
+
+    monkeypatch.setattr(Q, "_query_plan", flaky_plan)
+    assert Q.search_local(index_dir, "red car", k=10) == expected
+    assert len(calls) == 3 and sleeps == [0.02, 0.04]
+
+    def broken_plan(*a):
+        calls.append(1)
+        raise OSError("persistent")
+
+    calls.clear()
+    sleeps.clear()
+    monkeypatch.setattr(Q, "_query_plan", broken_plan)
+    with pytest.raises(OSError, match="persistent"):
+        Q.search_local(index_dir, "red car", k=10)
+    assert len(calls) == 4 and sleeps == [0.02, 0.04, 0.06]
+
+    def buggy_topk(*a, **kw):
+        calls.append(1)
+        raise TypeError("a programming error")
+
+    calls.clear()
+    sleeps.clear()
+    monkeypatch.setattr(Q, "_query_plan", plan)
+    monkeypatch.setattr(Q, "_segment_topk", buggy_topk)
+    with pytest.raises(TypeError):
+        Q.search_local(index_dir, "red car", k=10)
+    assert len(calls) == 1 and sleeps == []
+    assert Q._ACTIVE_QUERIES == 0
+
+
+class _FakeFuture:
+    def result(self):
+        return np.empty(0, np.int64), np.empty(0, np.float64)
+
+
+class _FakeExecutor:
+    """Records what a serving pool or shard would run, runs nothing."""
+
+    def __init__(self, log: list, shard: int | None = None):
+        self.log, self.shard = log, shard
+
+    def submit(self, *args):
+        self.log.append((self.shard, args))
+        return _FakeFuture()
+
+
+def test_search_local_routing(index_dir, monkeypatch):
+    """Routing without processes, on the serve_wide shape (160 segments,
+    4 shards): the inline choice, the replicate pid chunks per in-flight
+    query count with and without ``workers``, and shard mode's by-shard
+    pid sets."""
+    from refimage_spark.index import query as Q
+
+    log: list = []
+    pool = _FakeExecutor(log)
+    shards = [_FakeExecutor(log, s) for s in range(4)]
+    monkeypatch.setattr(Q, "_serve_pool", lambda: pool)
+    monkeypatch.setattr(Q, "_serve_shards", lambda: shards)
+    swept: list[int] = []
+
+    def fake_topk(index_dir, pid, *a, **kw):
+        swept.append(pid)
+        return np.empty(0, np.int64), np.empty(0, np.float64)
+
+    monkeypatch.setattr(Q, "_segment_topk", fake_topk)
+    plan = Q._query_plan(index_dir, "red car")
+
+    def route(n_pids, active=1, workers=None):
+        monkeypatch.setattr(
+            Q, "_query_plan", lambda *a: (*plan[:3], list(range(n_pids)), None)
+        )
+        monkeypatch.setattr(Q, "_ACTIVE_QUERIES", active - 1)
+        log.clear()
+        swept.clear()
+        assert Q.search_local(index_dir, "red car", k=10, workers=workers) == []
+        assert Q._ACTIVE_QUERIES == active - 1
+        return list(log)
+
+    # inline: a lone query over <= 128 segments sweeps them in-process
+    assert route(128) == [] and swept == list(range(128))
+    assert route(128, active=2) != [] and swept == []
+
+    monkeypatch.setattr(Q, "_REPLICATE_MAX_BYTES", 1 << 60)
+    pids = list(range(160))
+    for workers, want in [
+        (None, {1: 5, 2: 4, 4: 2, 8: 1}),
+        (2, {1: 2, 2: 2, 4: 2, 8: 1}),
+    ]:
+        for active, n in want.items():
+            got = route(160, active, workers)
+            assert got == [
+                (None, (Q._serve_chunk, index_dir, "red car", 10, 0.0, pids[i::n]))
+                for i in range(n)
+            ], (workers, active)
+
+    monkeypatch.setattr(Q, "_REPLICATE_MAX_BYTES", 0)
+    owned = {
+        s: [p for p in pids if (p // 16) % 4 == s] for s in range(4)
+    }
+    for workers in (None, 2):
+        got = route(160, 2, workers)
+        assert sorted(got) == [
+            (s, (index_dir, "red car", 10, 0.0, owned[s])) for s in range(4)
+        ]
+
+
+def test_reader_cache_lru_and_generations(tmp_path, monkeypatch):
+    """The cache rules: the reader LRU evicts the least recently used
+    reader at the cap, and a load that finishes after a newer generation
+    was cached returns its own value without replacing the entry."""
+    from refimage_spark.index import query as Q
+
+    monkeypatch.setattr(Q, "_CACHE", {})
+    monkeypatch.setattr(Q, "_READER_LRU", type(Q._READER_LRU)())
+    monkeypatch.setattr(Q, "_READER_CACHE_CAP", 2)
+    loads: list[str] = []
+
+    def load(name):
+        p = str(tmp_path / name)
+        open(p, "w").write(name)
+        return p, lambda: loads.append(name) or name
+
+    (a, la), (b, lb), (c, lc) = load("a"), load("b"), load("c")
+    assert [Q._cached("reader", p, f) for p, f in [(a, la), (b, lb), (a, la)]] == [
+        "a", "b", "a"
+    ]
+    assert Q._cached("reader", c, lc) == "c"  # evicts b, the least recent
+    assert Q._cached("reader", a, la) == "a"
+    assert loads == ["a", "b", "c"]
+    assert Q._cached("reader", b, lb) == "b"
+    assert loads == ["a", "b", "c", "b"]
+
+    p = str(tmp_path / "gen")
+    open(p, "w").write("x")
+    os.utime(p, (1_000, 1_000))
+
+    def slow_old_load():
+        # a newer generation lands and is cached while this load runs
+        os.utime(p, (2_000, 2_000))
+        assert Q._cached("reader", p, lambda: "new") == "new"
+        return "old"
+
+    assert Q._cached("reader", p, slow_old_load) == "old"
+    assert Q._cached("reader", p, lambda: "reloaded") == "new"

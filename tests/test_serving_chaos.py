@@ -33,25 +33,31 @@ def _expected(index_dir, queries):
     }
 
 
-def test_shard_worker_kill_self_heals(chaos_index, monkeypatch):
-    """SIGKILL one sticky shard's worker process during a concurrent
-    query storm: every query must still return the exact inline-sweep
-    result (failover = heal + retry inside search_local), and the tier
-    must keep serving afterwards."""
+def _kill_worker_mid_storm(chaos_index, monkeypatch, mode):
+    """SIGKILL one serving worker process (a sticky shard's, or one of
+    the shared replicate pool's) during a concurrent query storm: every
+    query must still return the exact inline-sweep result (failover =
+    heal + retry inside search_local), and the tier must keep serving
+    afterwards."""
     queries = ["red car", "blue house", "fast car", "beach sunset", "car"]
     expected = _expected(chaos_index, queries)
-    # force SHARD mode + pool path regardless of index size
-    monkeypatch.setattr(Q, "_REPLICATE_MAX_BYTES", 0)
+    # force the mode + pool path regardless of index size
+    monkeypatch.setattr(
+        Q, "_REPLICATE_MAX_BYTES", 1 << 60 if mode == "replicate" else 0
+    )
     monkeypatch.setattr(Q, "_INLINE_MAX_SEGMENTS", -1)
     Q.warm_serving_pool(chaos_index)
-    shards = Q._serve_shards()
-    # a shard that actually owns pids of this index
-    owning = sorted(
-        {Q._shard_of(p, len(shards)) for p in range(12)}
-    )
-    victim_shard = shards[owning[0]]
+    if mode == "replicate":
+        victim = Q._serve_pool()
+    else:
+        shards = Q._serve_shards()
+        # a shard that actually owns pids of this index
+        owning = sorted(
+            {Q._shard_of(p, len(shards)) for p in range(12)}
+        )
+        victim = shards[owning[0]].ex
     # make sure its worker exists, then storm + kill
-    victim_shard.ex.submit(Q._mtime, "/").result()
+    victim.submit(Q._mtime, "/").result()
     errors: list = []
     results: list = []
 
@@ -68,8 +74,8 @@ def test_shard_worker_kill_self_heals(chaos_index, monkeypatch):
     for t in threads:
         t.start()
     time.sleep(0.15)  # mid-storm
-    pids = list(victim_shard.ex._processes.keys())
-    assert pids, "victim shard has no live worker"
+    pids = list(victim._processes.keys())
+    assert pids, "victim executor has no live worker"
     os.kill(pids[0], signal.SIGKILL)
     t_kill = time.monotonic()
     for t in threads:
@@ -83,6 +89,16 @@ def test_shard_worker_kill_self_heals(chaos_index, monkeypatch):
     # seconds, and a fresh query works without manual intervention
     assert heal_wall < 60.0
     assert Q.search_local(chaos_index, "red car", k=10) == expected["red car"]
+
+
+def test_shard_worker_kill_self_heals(chaos_index, monkeypatch):
+    """A sticky shard's worker killed mid-storm self-heals."""
+    _kill_worker_mid_storm(chaos_index, monkeypatch, "shard")
+
+
+def test_replicate_worker_kill_self_heals(chaos_index, monkeypatch):
+    """A shared replicate-pool worker killed mid-storm self-heals."""
+    _kill_worker_mid_storm(chaos_index, monkeypatch, "replicate")
 
 
 def test_reader_cache_eviction_storm(chaos_index, monkeypatch):
