@@ -256,11 +256,10 @@ def _index_search(
     k: int = 10,
     threshold: float = 0.0,
     mode: str = "auto",
-    use_wand: bool | None = None,
 ) -> DataFrame:
     d = _ensure_index(spark, sf_dir)
     res = search_index(
-        spark, d, q, k=k, threshold=threshold, mode=mode, use_wand=use_wand
+        spark, d, q, k=k, threshold=threshold, mode=mode
     ).withColumnRenamed(
         "doc_id", "internal_id"
     )
@@ -315,11 +314,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
     q["index_dsl_tag"] = lambda s, d: _index_search(s, d, "#en #fr", k=1000)
     q["index_text_tag"] = lambda s, d: _index_search(s, d, "fast query #en")
-    # the block-max WAND scorer itself, forced through the spark path
-    # (mode="auto" serves locally with the vectorized kernel, so without
-    # this entry the gate would never run the WAND loop)
+    # the same block-pruned scorer forced through the Spark path
+    # (mode="auto" serves this corpus locally, so without this entry the
+    # gate would never run search_index's per-segment Spark job)
     q["index_bm25_wand"] = lambda s, d: _index_search(
-        s, d, "spark join window", mode="spark", use_wand=True
+        s, d, "spark join window", mode="spark"
     )
     # --- metadata table ops (SURVEY §2.1/§2.2: S2, S3, P1-P5, W4, W5) ---
     q["point_lookup"] = lambda s, d: M.point_lookup(_docs(s, d), 42)

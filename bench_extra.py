@@ -211,20 +211,13 @@ def main() -> None:
             topk_arrays,
             wand_topk_segment,
         )
-        from refimage_spark.index.segment import SegmentReader, SegmentWriter
+        from refimage_spark.index.segment import SegmentReader, write_segment
 
         d = tempfile.mkdtemp(prefix="r06_wand_")
         n_docs = 2_560_000
-        w = SegmentWriter(d, 0, 10.0)
         ids = np.arange(n_docs, dtype=np.int64)
         empty_tags = pa.ListArray.from_arrays(
             np.zeros(n_docs + 1, dtype=np.int32), pa.array([], pa.string())
-        )
-        w.set_norms(ids, np.full(n_docs, 10, np.int64), empty_tags)
-        w.add_raw(
-            pa.array(["aterm"] * n_docs, pa.string()),
-            ids,
-            np.ones(n_docs, np.int64),
         )
         # >= k rare-term docs EARLY (the heap must fill with rare-term
         # scores before pruning can engage — with fewer than k of them
@@ -242,12 +235,18 @@ def main() -> None:
                 ]
             )
         )
-        w.add_raw(
-            pa.array(["zrare"] * rare_docs.size, pa.string()),
-            rare_docs,
-            np.full(rare_docs.size, 8, np.int64),
+        write_segment(
+            d,
+            0,
+            ids,
+            np.full(n_docs, 10, np.int64),
+            empty_tags,
+            pa.array(["aterm"] * n_docs + ["zrare"] * rare_docs.size, pa.string()),
+            np.concatenate([ids, rare_docs]),
+            np.concatenate(
+                [np.ones(n_docs, np.int64), np.full(rare_docs.size, 8, np.int64)]
+            ),
         )
-        w.finish()
         r = SegmentReader(d, 0)
         idfs = {"aterm": 0.05, "zrare": 8.0}
         ctr: dict = {}

@@ -1,8 +1,8 @@
 """Offline index integrity check (fsck).
 
-Segments carry a sha256 of their posting blob in the manifest
-(index/segment.py SegmentStats.checksum) — written at every commit,
-but nothing re-verified it until now. At 10^12 docs an index lives for
+Segments carry a sha256 of their posting blob in the manifest (the
+``checksum`` field of the row ``segment.write_segment`` commits), but
+nothing re-verified it until now. At 10^12 docs an index lives for
 months on shared storage; bit-rot, torn copies and partial restores are
 operational realities, and an fsck that can certify "every byte this
 manifest claims is present and intact" is what lets a maintenance

@@ -12,8 +12,9 @@ for Spark):
                    already-co-located part directory, tokenizes in
                    Arrow C++ (split_pattern_regex — bit-identical to
                    spark_tokens, golden-tested), sorts (term, doc_id)
-                   locally in numpy, writes the segment -> manifest row
-                   per partition (the commit point)
+                   locally in numpy, and ``segment.write_segment``
+                   encodes, writes and commits it (the manifest row per
+                   partition is the commit point)
 
 Design notes for 100 TB:
 - doc ids are deterministic WITHOUT a global window: part =
@@ -50,21 +51,19 @@ from pyspark.sql import functions as F
 
 from refimage_spark.index.segment import (
     FORMAT_VERSION,
-    SegmentWriter,
+    STATS_FILE,
     committed_pids,
     manifest_dir,
     read_manifest,
+    read_stats,
     seg_paths,
-    write_manifest_row,
+    write_segment,
 )
 from refimage_spark.tokenizer import spark_tokens
 
-STATS_FILE = "stats.json"
 # term_stats rollup: total dict-parquet bytes under this bound run as a
-# driver-side Arrow group_by (env-overridable for cluster deployments)
-_TERM_STATS_LOCAL_BYTES = int(
-    os.environ.get("REFIMAGE_TERM_STATS_LOCAL_BYTES", str(256 << 20))
-)
+# driver-side Arrow group_by
+_TERM_STATS_LOCAL_BYTES = 256 << 20
 
 
 def _docs_path(index_dir: str) -> str:
@@ -289,13 +288,11 @@ def build_index(
             },
         )
         t_pass_a = time.perf_counter() - t0
-    stats = json.loads(open(stats_path).read())
-    avgdl = stats["avgdl"]
-    num_parts = stats["num_parts"]
+    stats = read_stats(index_dir)
 
     # ---- pass B: postings shuffle + segment write ---------------------------
     t_b0 = time.perf_counter()
-    n_written = _write_segments_for(spark, index_dir, avgdl, num_parts=num_parts)
+    n_written = _write_segments_for(spark, index_dir)
     t_pass_b = time.perf_counter() - t_b0
 
     # ---- term_stats: global df = sum of per-segment dict dfs ----------------
@@ -396,10 +393,9 @@ def write_term_stats(spark: SparkSession, index_dir: str) -> None:
     shutil.rmtree(scratch)
 
 
-def build_segment_from_part(
-    index_dir: str, pid: int, avgdl: float
-) -> tuple[int, int, int]:
-    """Build one segment from its (already co-located) docs part dir.
+def build_segment_from_part(index_dir: str, pid: int) -> dict:
+    """Build and commit one segment from its (already co-located) docs
+    part dir; returns its manifest row.
 
     Everything is vectorized: Arrow C++ tokenization (utf8_lower +
     split_pattern_regex + empty-filter = exactly ``spark_tokens``,
@@ -416,8 +412,6 @@ def build_segment_from_part(
         part_dir, columns=["doc_id", "dl", "tags", "text"]
     ).sort_by("doc_id")
     ids = t["doc_id"].to_numpy()
-    writer = SegmentWriter(index_dir, pid, avgdl)
-    writer.set_norms(ids, t["dl"].to_numpy(), t["tags"].combine_chunks())
     flat, row_of = arrow_flat_tokens(t["text"].combine_chunks())
     doc_rep = ids[row_of]
     # sort by (lexicographic term, doc_id): rank the unique terms once,
@@ -429,18 +423,19 @@ def build_segment_from_part(
     rank = np.empty(len(vocab), dtype=np.int64)
     rank[order] = np.arange(len(vocab))
     o = np.lexsort((doc_rep, rank[codes]))
-    writer.add_raw(flat.take(pa.array(o)), doc_rep[o])
-    st = writer.finish()
-    write_manifest_row(index_dir, st, {"avgdl": avgdl})
-    return st.pid, st.n_docs, st.n_postings
+    return write_segment(
+        index_dir,
+        pid,
+        ids,
+        t["dl"].to_numpy(),
+        t["tags"].combine_chunks(),
+        flat.take(pa.array(o)),
+        doc_rep[o],
+    )
 
 
 def _write_segments_for(
-    spark: SparkSession,
-    index_dir: str,
-    avgdl: float,
-    num_parts: int | None = None,
-    part_filter=None,
+    spark: SparkSession, index_dir: str, part_filter=None
 ) -> int:
     """Pass B: one task per part — the docs table is ALREADY partitioned
     by part on disk, so segment building is embarrassingly parallel with
@@ -469,7 +464,7 @@ def _write_segments_for(
         row = os.path.join(manifest_dir(index_dir), f"part-{pid:05d}.json")
         if os.path.exists(row):
             return None
-        build_segment_from_part(index_dir, pid, avgdl)
+        build_segment_from_part(index_dir, pid)
         return pa.record_batch([pa.array([pid], pa.int32())], names=["pid"])
 
     return len(

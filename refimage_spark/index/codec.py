@@ -78,15 +78,16 @@ def varbyte_decode(buf: bytes, count: int | None = None) -> np.ndarray:
     return sums.astype(np.uint64)
 
 
-def blocked_delta_decode(gaps: np.ndarray, block: int) -> np.ndarray:
-    """Decode gaps that RESET every ``block`` values (the gap at each
-    block start is the absolute doc id). Segmented cumsum, vectorized:
-    docs[i] = cumsum[i] - (cumsum[start-1]) for i's block."""
+def blocked_delta_decode(gaps: np.ndarray, sizes: np.ndarray) -> np.ndarray:
+    """Decode gaps that RESET at every block start (the gap there is the
+    absolute doc id); ``sizes`` are the blocks' value counts, in order.
+    Segmented cumsum, vectorized: docs[i] = cumsum[i] - cumsum[start-1]
+    for i's block."""
     g = np.asarray(gaps, dtype=np.int64)
     if g.size == 0:
         return g
+    sizes = np.asarray(sizes, dtype=np.int64)
     cs = np.cumsum(g)
-    starts = np.arange(0, g.size, block)
+    starts = np.cumsum(sizes) - sizes
     base = cs[starts] - g[starts]  # == cs[start-1]; 0 for the first block
-    sizes = np.diff(np.append(starts, g.size))
     return cs - np.repeat(base, sizes)

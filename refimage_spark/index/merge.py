@@ -27,8 +27,10 @@ Scale notes: compact and each policy round are one ``_rewrite_groups``
 call — output pids pre-assigned on the driver, one Spark job over the
 OUTPUT segments (doc-partitioned segments never interact). Sources
 decode in 3 vectorized passes (``SegmentReader.read_all_postings``) and
-the writer takes pre-aggregated (term, doc, tf) rows — no per-term
-Python loop, no np.repeat re-expansion of tf runs.
+``segment.write_segment`` takes pre-aggregated (term, doc, tf) rows — no
+per-term Python loop, no np.repeat re-expansion of tf runs. Segments
+and their manifest rows carry no corpus statistic, so a rewrite never
+reads stats.json: compact refreshes it afterwards from the docs table.
 """
 
 from __future__ import annotations
@@ -51,7 +53,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from refimage_spark.index.build import (
-    STATS_FILE,
     _assign_and_project,
     _corpus_totals,
     _dedup_slim_build,
@@ -63,12 +64,12 @@ from refimage_spark.index.build import (
 )
 from refimage_spark.index.segment import (
     SegmentReader,
-    SegmentWriter,
     manifest_dir,
     manifest_rows,
     read_manifest,
+    read_stats,
     seg_paths,
-    write_manifest_row,
+    write_segment,
 )
 
 TOMBSTONES = "tombstones.parquet"
@@ -337,7 +338,7 @@ def _recompute_global_stats(spark: SparkSession, index_dir: str) -> None:
     new corpus."""
     docs = _read_docs(spark, index_dir)
     n, avgdl = (0, 0.0) if docs is None else _corpus_totals(docs)
-    stats = json.loads(open(os.path.join(index_dir, STATS_FILE)).read())
+    stats = read_stats(index_dir)
     stats.update({"n_docs": n, "avgdl": avgdl})
     write_stats(index_dir, stats)
     write_term_stats(spark, index_dir)
@@ -347,7 +348,6 @@ def _rewrite_segments(
     index_dir: str,
     pids: list[int],
     new_pid: int,
-    avgdl: float,
     drop_ids: np.ndarray | None = None,
 ) -> dict:
     """Write the docs of segments ``pids``, minus ``drop_ids``, as
@@ -362,8 +362,9 @@ def _rewrite_segments(
     Fully vectorized: norms are concatenated and sorted by doc id
     (ids are disjoint across segments); each source's postings decode
     in 3 passes, map to the sorted union vocabulary, and one lexsort by
-    (term, doc_id) orders the combined stream for the writer. Tags are
-    cast to list<string>, so every rewritten sidecar has one schema."""
+    (term, doc_id) orders the combined stream for ``write_segment``.
+    Tags are cast to list<string>, so every rewritten sidecar has one
+    schema."""
     pids = [int(p) for p in pids]
     row_path = os.path.join(manifest_dir(index_dir), f"part-{new_pid:05d}.json")
     if os.path.exists(row_path):
@@ -378,10 +379,6 @@ def _rewrite_segments(
     order = np.argsort(ids)
     keep = order if drop_ids is None else order[~np.isin(ids[order], drop_ids)]
     tags = pa.concat_arrays([n[2].cast(pa.list_(pa.string())) for n in norms])
-    writer = SegmentWriter(index_dir, new_pid, avgdl)
-    writer.set_norms(
-        ids[keep], np.concatenate([n[1] for n in norms])[keep], tags.take(keep)
-    )
     parts = [rd.read_all_postings() for rd in readers]
     vocab = pc.unique(pa.chunked_array([p[0] for p in parts], pa.string()))
     vocab = vocab.take(pc.array_sort_indices(vocab))
@@ -398,10 +395,20 @@ def _rewrite_segments(
     o = np.lexsort((docs, codes))
     if drop_ids is not None:
         o = o[~np.isin(docs[o], drop_ids)]
-    writer.add_raw(vocab.take(pa.array(codes[o])), docs[o], tfs[o])
-    st = writer.finish()
-    write_manifest_row(index_dir, st, {"avgdl": avgdl, "merged_from": pids})
-    return {"new_pid": new_pid, "n_docs": st.n_docs, "n_postings": st.n_postings}
+    row = write_segment(
+        index_dir,
+        new_pid,
+        ids[keep],
+        np.concatenate([n[1] for n in norms])[keep],
+        tags.take(keep),
+        vocab.take(pa.array(codes[o])),
+        docs[o],
+        tfs[o],
+        merged_from=pids,
+    )
+    return {
+        "new_pid": new_pid, "n_docs": row["n_docs"], "n_postings": row["n_postings"]
+    }
 
 
 def _rewrite_groups(
@@ -409,14 +416,11 @@ def _rewrite_groups(
     index_dir: str,
     groups: list[list[int]],
     drop_path: str | None = None,
-    avgdl: float | None = None,
 ) -> None:
     """Rewrite each group of segments as one new segment. Output pids
     are pre-assigned from max+1 on the driver (tasks must not race on
     max(manifest)+1). One ``_per_segment_job`` runs the groups; a lone
-    group, or no ``spark``, runs on the driver. ``avgdl`` stamps every
-    output row; None keeps each group's first source stamp (a merge
-    changes no corpus stats).
+    group, or no ``spark``, runs on the driver.
 
     ``drop_path`` ships the drop set as a PATH, not a closure-captured
     array: each rewrite side-reads it (shared storage at cluster scale),
@@ -424,20 +428,16 @@ def _rewrite_groups(
     millions of tombstones would otherwise be pickled into every task.
     Source cleanup stays with the caller, deferred to the end of its run
     so readers face one flip window per run."""
-    rows = {r["partition_id"]: r for r in read_manifest(index_dir)}
-    base = max(rows) + 1
-    jobs = [
-        (g, base + i, rows[g[0]].get("avgdl", 0.0) if avgdl is None else avgdl)
-        for i, g in enumerate(groups)
-    ]
+    base = max(r["partition_id"] for r in read_manifest(index_dir)) + 1
+    jobs = [(g, base + i) for i, g in enumerate(groups)]
 
-    def rewrite(pids: list[int], new_pid: int, stamp: float) -> pa.RecordBatch:
+    def rewrite(pids: list[int], new_pid: int) -> pa.RecordBatch:
         drop = (
             None
             if drop_path is None
             else pq.read_table(drop_path)["doc_id"].to_numpy()
         )
-        _rewrite_segments(index_dir, pids, new_pid, stamp, drop)
+        _rewrite_segments(index_dir, pids, new_pid, drop)
         return pa.record_batch([pa.array([new_pid], pa.int32())], names=["pid"])
 
     if spark is None or len(jobs) == 1:
@@ -445,7 +445,7 @@ def _rewrite_groups(
             rewrite(*job)
         return
     done = _per_segment_job(
-        spark, jobs, "pids array<int>, new_pid int, avgdl double", rewrite, "pid int"
+        spark, jobs, "pids array<int>, new_pid int", rewrite, "pid int"
     ).collect()
     assert len(done) == len(jobs)
 
@@ -488,16 +488,13 @@ def _compact_locked(spark: SparkSession, index_dir: str) -> dict:
         ).partitionBy("part").parquet(tmp_docs)
         shutil.rmtree(docs_path)
         os.replace(tmp_docs, docs_path)
-    stats = json.loads(open(os.path.join(index_dir, STATS_FILE)).read())
 
     # 2. rewrite each segment without the tombstoned docs under a NEW pid
     # (the supersession commit): a concurrent search always reads a
     # complete generation of every segment, and a crash mid-compact
     # leaves a correct, re-runnable index
     pids = sorted(r["partition_id"] for r in read_manifest(index_dir))
-    _rewrite_groups(
-        spark, index_dir, [[p] for p in pids], tomb_path, stats["avgdl"]
-    )
+    _rewrite_groups(spark, index_dir, [[p] for p in pids], tomb_path)
 
     # 3. drop superseded sources; tombstones go LAST — they keep masking
     # the deleted docs in any old-generation segment a concurrent query
@@ -566,18 +563,17 @@ def merge_segments(
     assert len(pids) >= 2
     with maintenance_lock(index_dir):
         rows = read_manifest(index_dir)
-        live = {r["partition_id"]: r for r in rows}
+        live = {r["partition_id"] for r in rows}
         done = [
             r for r in rows if sorted(r.get("merged_from") or []) == sorted(pids)
         ]
         if done:  # a retry: our own committed row supersedes the sources
-            new_pid, avgdl = done[0]["partition_id"], done[0]["avgdl"]
+            new_pid = done[0]["partition_id"]
         else:
             for p in pids:
                 assert p in live, f"segment {p} not in manifest"
             new_pid = max(live) + 1
-            avgdl = live[pids[0]].get("avgdl", 0.0)
-        out = _rewrite_segments(index_dir, pids, new_pid, avgdl)
+        out = _rewrite_segments(index_dir, pids, new_pid)
         if cleanup:
             _cleanup_merged_sources(index_dir, pids)
     return {"merged": pids, **out}
@@ -785,7 +781,7 @@ def append_pages(
 def _append_pages_locked(
     spark: SparkSession, new_pages: DataFrame, index_dir: str
 ) -> dict:
-    stats = json.loads(open(os.path.join(index_dir, STATS_FILE)).read())
+    stats = read_stats(index_dir)
     num_parts = stats["num_parts"]
     tag_cols = tuple(stats.get("tag_cols", ["lang"]))
     docs_path = os.path.join(index_dir, "docs.parquet")
@@ -815,9 +811,8 @@ def _append_pages_locked(
 
     # build segments for the new parts only (same writer machinery),
     # THEN refresh global stats from the updated dictionaries
-    stats = json.loads(open(os.path.join(index_dir, STATS_FILE)).read())
     n_new = _write_segments_for(
-        spark, index_dir, stats["avgdl"], part_filter=lambda p: p >= base_pid
+        spark, index_dir, part_filter=lambda p: p >= base_pid
     )
     _recompute_global_stats(spark, index_dir)
     return {"appended_docs": n_appended, "new_segments": n_new}

@@ -23,7 +23,6 @@ float64 results agree with the oracle to the last few ulps.
 
 from __future__ import annotations
 
-import json
 import os
 import threading
 import time
@@ -40,7 +39,12 @@ if TYPE_CHECKING:  # pyspark is imported lazily (inside search_index):
     # processes import this module and must not pay the pyspark import.
 
 from refimage_spark import dsl
-from refimage_spark.index.segment import SegmentReader, read_manifest
+from refimage_spark.index.segment import (
+    STATS_FILE,
+    SegmentReader,
+    read_manifest,
+    read_stats,
+)
 from refimage_spark.tokenizer import BM25_B, BM25_K1, py_tokens
 
 K1P1 = BM25_K1 + 1.0
@@ -61,7 +65,7 @@ _CACHE_LOCK = threading.Lock()
 # mode (any worker may cache the whole, bytes-bounded index); a shard
 # touches only its own blocks. Other kinds (stats, manifest,
 # term_stats) are one-per-index and stay unbounded.
-_READER_CACHE_CAP = int(os.environ.get("REFIMAGE_READER_CACHE_CAP", "1024"))
+_READER_CACHE_CAP = 1024
 _READER_LRU: OrderedDict = OrderedDict()  # reader keys, least recent first
 
 
@@ -107,16 +111,9 @@ def _cached(kind: str, path: str, loader):
 
 
 def load_stats(index_dir: str) -> dict:
-    from refimage_spark.index.segment import check_format_version
-
-    p = os.path.join(index_dir, "stats.json")
-
-    def load():
-        st = json.load(open(p))
-        check_format_version(st, p)
-        return st
-
-    return _cached("stats", p, load)
+    return _cached(
+        "stats", os.path.join(index_dir, STATS_FILE), lambda: read_stats(index_dir)
+    )
 
 
 def global_df(index_dir: str, terms: list[str]) -> dict[str, int]:
@@ -526,9 +523,7 @@ _SHARD_BLOCK = 16
 # (bounded memory, warm caches), batched per shard. The same switch a
 # physical serving tier makes between replicating a small index on
 # every node and sharding a big one.
-_REPLICATE_MAX_BYTES = int(
-    os.environ.get("REFIMAGE_REPLICATE_MAX_BYTES", str(256 << 20))
-)
+_REPLICATE_MAX_BYTES = 256 << 20
 _SERVE_POOL = None  # shared free-scheduling pool (replicate mode)
 
 
@@ -895,12 +890,10 @@ def search_index(
     query: str,
     k: int = 10,
     threshold: float = 0.0,
-    use_wand: bool | None = None,
     mode: str = "auto",
 ) -> DataFrame:
-    """Top-k over the segment index, globally ranked. ``use_wand`` is
-    accepted for callers of the former two-scorer API and ignored: every
-    text query takes the one block-pruned scorer.
+    """Top-k over the segment index, globally ranked; every root text
+    query takes the one block-pruned scorer.
 
     mode:
     - "spark": one task per segment batch, TakeOrdered merge — the

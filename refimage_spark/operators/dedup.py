@@ -31,8 +31,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -62,10 +60,8 @@ def md5int32_sql(expr: str) -> str:
 
 # Jaccard-verify broadcast bound: while the shingled table's exact plan
 # stats fit this, the verify join broadcasts it (arrays never shuffle);
-# beyond, the sort-merge path takes over (env-overridable per cluster)
-_VERIFY_BROADCAST_BYTES = int(
-    os.environ.get("REFIMAGE_VERIFY_BROADCAST_BYTES", str(256 << 20))
-)
+# beyond, the sort-merge path takes over
+_VERIFY_BROADCAST_BYTES = 256 << 20
 _UNKNOWN_BYTES = 1 << 62  # plan size when stats are unavailable
 
 # Universal-hash family h_i(x) = (md5int32_sql(x)*A_i + B_i) mod P61: ONE md5

@@ -31,17 +31,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 NUM_PARTS = 32
 
 
-def _one_part(args: tuple[str, int, float]) -> float:
+def _one_part(args: tuple[str, int]) -> float:
     from refimage_spark.index.build import build_segment_from_part
 
-    idx, pid, avgdl = args
+    idx, pid = args
     t0 = time.perf_counter()
-    build_segment_from_part(idx, pid, avgdl)
+    build_segment_from_part(idx, pid)
     return time.perf_counter() - t0
 
 
-def sweep(idx: str, avgdl: float, workers: int) -> tuple[float, float]:
-    args = [(idx, p, avgdl) for p in range(NUM_PARTS)]
+def sweep(idx: str, workers: int) -> tuple[float, float]:
+    args = [(idx, p) for p in range(NUM_PARTS)]
     t0 = time.perf_counter()
     with ProcessPoolExecutor(workers) as ex:
         per_task = list(ex.map(_one_part, args))
@@ -74,13 +74,11 @@ def main() -> None:
         build_index(spark, pages, idx, num_parts=NUM_PARTS)
         spark.stop()  # the sweep must not share the box with a JVM
 
-    stats = json.load(open(os.path.join(idx, "stats.json")))
-    avgdl = stats["avgdl"]
     walls: dict[int, list[float]] = {2: [], 8: []}
     tasks: dict[int, list[float]] = {2: [], 8: []}
     for r in range(args.reps):
         for w in (2, 8):
-            wall, med_task = sweep(idx, avgdl, w)
+            wall, med_task = sweep(idx, w)
             walls[w].append(wall)
             tasks[w].append(med_task)
             print(f"rep {r} workers={w}: wall={wall:.1f}s "

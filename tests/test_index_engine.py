@@ -114,17 +114,17 @@ def _raw_segment(tmp_path, postings: dict, n_docs: int, dl: int = 10):
     """Hand-built single segment: postings = {term: [(doc, tf), ...]}."""
     import pyarrow as pa
 
-    from refimage_spark.index.segment import SegmentWriter
+    from refimage_spark.index.segment import write_segment
 
     d = str(tmp_path / "rawseg")
-    w = SegmentWriter(d, 0, float(dl))
     ids = np.arange(n_docs, dtype=np.int64)
-    w.set_norms(ids, np.full(n_docs, dl, np.int64), [["en"]] * n_docs)
-    for term in sorted(postings):
-        docs = np.array([p[0] for p in postings[term]], dtype=np.int64)
-        tfs = np.array([p[1] for p in postings[term]], dtype=np.int64)
-        w.add_raw(pa.array([term] * docs.size, pa.string()), docs, tfs)
-    w.finish()
+    rows = [(t, *p) for t in sorted(postings) for p in postings[t]]
+    write_segment(
+        d, 0, ids, np.full(n_docs, dl, np.int64), [["en"]] * n_docs,
+        pa.array([r[0] for r in rows], pa.string()),
+        np.array([r[1] for r in rows], dtype=np.int64),
+        np.array([r[2] for r in rows], dtype=np.int64),
+    )
     return d
 
 

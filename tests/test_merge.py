@@ -1,14 +1,17 @@
 """Log-structured maintenance: delete (tombstones), compaction, append."""
 
 import json
+import os
 
+import numpy as np
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from refimage_spark.index.build import build_index
 from refimage_spark.index.merge import append_pages, compact, delete_docs
 from refimage_spark.index.query import search_index
-from refimage_spark.index.segment import read_manifest
+from refimage_spark.index.segment import SegmentReader, read_manifest, read_stats
 from refimage_spark.sources.pages import generate_pages
 
 
@@ -63,49 +66,75 @@ def test_append_grows_index(spark, small_index):
     assert len(res) == 20
 
 
+def _unpruned_topk(index_dir: str, query: str, k: int):
+    """The reference top-k with no block pruning: ``eval_node`` decodes
+    every block of every live segment, tombstones are masked, and
+    ``topk_arrays`` merges the segments' scores."""
+    from refimage_spark import dsl
+    from refimage_spark.index.query import (
+        collect_terms,
+        eval_node,
+        make_idfs,
+        topk_arrays,
+    )
+
+    node = dsl.parse(query)
+    idfs = make_idfs(index_dir, collect_terms(node))
+    avgdl = float(read_stats(index_dir)["avgdl"])
+    parts = [
+        eval_node(SegmentReader(index_dir, r["partition_id"]), node, idfs,
+                  avgdl, 0.0)
+        for r in read_manifest(index_dir)
+    ]
+    ids = np.concatenate([p[0] for p in parts])
+    sc = np.concatenate([p[1] for p in parts])
+    tomb = os.path.join(index_dir, "tombstones.parquet")
+    if os.path.exists(tomb):
+        m = ~np.isin(ids, pq.read_table(tomb)["doc_id"].to_numpy())
+        ids, sc = ids[m], sc[m]
+    return topk_arrays(ids, sc, k)
+
+
 def test_wand_rank_safe_after_stats_drift(spark, small_index):
     """Appends shift N/avgdl/df; WAND's block bounds must track CURRENT
     stats (regression: stored max_q went stale and could prune true
     top-k docs)."""
     append_pages(spark, generate_pages(spark, 150, seed=43, partitions=2),
                  small_index)
-    wand = search_index(spark, small_index, "red car", k=10,
-                        use_wand=True).collect()
-    full = search_index(spark, small_index, "red car", k=10,
-                        use_wand=False).collect()
-    assert [r.doc_id for r in wand] == [r.doc_id for r in full]
-    for a, b in zip(wand, full):
-        assert a.score == pytest.approx(b.score, rel=1e-12)
+    wand = search_index(spark, small_index, "red car", k=10).collect()
+    full_ids, full_sc = _unpruned_topk(small_index, "red car", 10)
+    assert [r.doc_id for r in wand] == full_ids.tolist()
+    for a, b in zip(wand, full_sc):
+        assert a.score == pytest.approx(b, rel=1e-12)
 
 
 def test_wand_rank_identity_under_tombstones(spark, small_index):
     """Tombstone-aware WAND: with deletes pending compaction, the WAND
     path must (a) run at all (it used to force the full-eval fallback),
     (b) exclude tombstoned docs, and (c) free their top-k slots — rank-
-    and score-identical to the vectorized masked path, on BOTH the
-    spark-mode search and the serving opt-in."""
+    and score-identical to the unpruned masked reference, on BOTH the
+    spark-mode search and the serving path."""
     from refimage_spark.index.query import search_local
 
     # tombstone half of the current top-10 so slots must be refilled
     base = search_index(spark, small_index, "red car", k=10,
-                        use_wand=False, mode="spark").collect()
+                        mode="spark").collect()
     victims = [r.doc_id for r in base[::2]]
     delete_docs(small_index, victims)
     wand = search_index(spark, small_index, "red car", k=10,
-                        use_wand=True, mode="spark").collect()
-    full = search_index(spark, small_index, "red car", k=10,
-                        use_wand=False, mode="spark").collect()
+                        mode="spark").collect()
+    full_ids, full_sc = _unpruned_topk(small_index, "red car", 10)
     assert len(wand) == 10  # slots freed and refilled
     assert not (set(victims) & {r.doc_id for r in wand})
-    assert [r.doc_id for r in wand] == [r.doc_id for r in full]
-    for a, b in zip(wand, full):
-        assert a.score == pytest.approx(b.score, rel=1e-12)
-    # serving opt-in: counters prove the WAND loop actually ran
+    assert [r.doc_id for r in wand] == full_ids.tolist()
+    for a, b in zip(wand, full_sc):
+        assert a.score == pytest.approx(b, rel=1e-12)
+    # serving path: counters prove the block-pruned scorer actually ran
     ctr: dict = {}
     local = search_local(small_index, "red car", k=10,
                          counters=ctr)
     assert ctr.get("total_blocks", 0) > 0
-    assert [d for d, _ in local] == [r.doc_id for r in full]
+    assert [d for d, _ in local] == full_ids.tolist()
 
 
 def test_merge_crash_between_commit_and_cleanup_is_safe(spark, small_index):

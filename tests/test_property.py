@@ -14,7 +14,7 @@ from refimage_spark.index.codec import (
     varbyte_encode,
 )
 from refimage_spark.index.query import eval_node, topk_arrays, wand_topk_segment
-from refimage_spark.index.segment import BLOCK, SegmentReader, SegmentWriter
+from refimage_spark.index.segment import SegmentReader, write_segment
 from refimage_spark import dsl
 
 
@@ -32,16 +32,24 @@ def test_varbyte_roundtrip(values):
     st.lists(st.integers(min_value=0, max_value=1 << 40), min_size=1,
              max_size=400, unique=True),
     st.sampled_from([4, 16, 128]),
+    st.lists(st.integers(min_value=1, max_value=200), max_size=8),
 )
 @settings(max_examples=50, deadline=None)
-def test_blocked_delta_roundtrip(doc_ids, block):
+def test_blocked_delta_roundtrip(doc_ids, block, head):
     docs = np.sort(np.asarray(doc_ids, dtype=np.int64))
+    # block sizes: the drawn ``head`` sizes, then ``block`` strides, with
+    # the last block cut short at the end (head=[] is the fixed stride)
+    ends = np.minimum(
+        np.cumsum(np.concatenate([head, np.full(docs.size // block + 1, block)])),
+        docs.size,
+    ).astype(np.int64)
+    sizes = np.diff(np.unique(np.concatenate(([0], ends))))
     gaps = np.empty_like(docs)
     gaps[0] = docs[0]
     np.subtract(docs[1:], docs[:-1], out=gaps[1:])
-    starts = np.arange(0, docs.size, block)
+    starts = np.cumsum(sizes) - sizes
     gaps[starts] = docs[starts]
-    assert blocked_delta_decode(gaps, block).tolist() == docs.tolist()
+    assert blocked_delta_decode(gaps, sizes).tolist() == docs.tolist()
 
 
 # ---- random corpus -> segment -> query identity -------------------------------
@@ -60,15 +68,15 @@ posting_lists = st.dictionaries(
 
 
 def _mk_segment(tmpdir, postings: dict, n_docs: int = 601, dl: int = 10):
-    w = SegmentWriter(str(tmpdir), 0, float(dl))
     ids = np.arange(n_docs, dtype=np.int64)
-    w.set_norms(ids, np.full(n_docs, dl, np.int64), [["en"]] * n_docs)
-    for term in sorted(postings):
-        docs = np.array(sorted(postings[term]), dtype=np.int64)
-        tfs = np.array([postings[term][d] for d in sorted(postings[term])],
-                       dtype=np.int64)
-        w.add_raw(pa.array([term] * docs.size, pa.string()), docs, tfs)
-    w.finish()
+    rows = [(t, d, postings[t][d]) for t in sorted(postings)
+            for d in sorted(postings[t])]
+    write_segment(
+        str(tmpdir), 0, ids, np.full(n_docs, dl, np.int64), [["en"]] * n_docs,
+        pa.array([r[0] for r in rows], pa.string()),
+        np.array([r[1] for r in rows], dtype=np.int64),
+        np.array([r[2] for r in rows], dtype=np.int64),
+    )
     return SegmentReader(str(tmpdir), 0)
 
 

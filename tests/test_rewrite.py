@@ -39,25 +39,20 @@ def _bytes(path: str) -> bytes:
         return f.read()
 
 
-def _avgdl(d: str) -> float:
-    return json.load(open(os.path.join(d, "stats.json")))["avgdl"]
-
-
 def test_rewrite_one_segment_is_byte_identical(index):
-    out = _rewrite_segments(index, [0], 10, _avgdl(index))
+    out = _rewrite_segments(index, [0], 10)
     assert out["new_pid"] == 10
     for src, dst in list(zip(seg_paths(index, 0), seg_paths(index, 10)))[:2]:
         assert _bytes(src) == _bytes(dst), os.path.basename(src)
 
 
 def test_merge_then_compact_away_restores_segment(index):
-    avgdl = _avgdl(index)
     b_ids = SegmentReader(index, 1).norms()[0]
-    merged = _rewrite_segments(index, [0, 1], 10, avgdl)
+    merged = _rewrite_segments(index, [0, 1], 10)
     assert merged["n_docs"] == (
         SegmentReader(index, 0).norms()[0].size + b_ids.size
     )
-    _rewrite_segments(index, [10], 11, avgdl, drop_ids=b_ids)
+    _rewrite_segments(index, [10], 11, drop_ids=b_ids)
     post_a, dict_a, _ = seg_paths(index, 0)
     post_c, dict_c, _ = seg_paths(index, 11)
     assert _bytes(post_c) == _bytes(post_a)
@@ -65,14 +60,13 @@ def test_merge_then_compact_away_restores_segment(index):
 
 
 def test_compact_rerun_after_commit_is_detected(index):
-    avgdl = _avgdl(index)
     drop = SegmentReader(index, 2).norms()[0][::3]
-    first = _rewrite_segments(index, [2], 10, avgdl, drop_ids=drop)
+    first = _rewrite_segments(index, [2], 10, drop_ids=drop)
     post = seg_paths(index, 10)[0]
     st = os.stat(post)
     # the committed run's deferred cleanup already removed the source
     _cleanup_merged_sources(index, [2])
-    again = _rewrite_segments(index, [2], 10, avgdl, drop_ids=drop)
+    again = _rewrite_segments(index, [2], 10, drop_ids=drop)
     assert again == first
     assert os.stat(post).st_mtime_ns == st.st_mtime_ns
     assert os.stat(post).st_ino == st.st_ino
