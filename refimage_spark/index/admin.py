@@ -18,7 +18,8 @@ Checks (per segment, plus cross-segment invariants):
 - deep mode: sha256 of the posting file equals the manifest checksum;
 - the docs sidecar loads, its doc_ids are strictly sorted (the binary-
   search/dense-lookup precondition) with non-negative dl;
-- the dictionary's posting counts sum to the manifest's n_postings;
+- the dictionary's posting counts sum to the manifest's n_postings, and
+  its terms are strictly sorted (the serving lookup trusts the order);
 - across segments: doc ids are disjoint, and their total equals
   stats.json's n_docs (every maintenance op preserves this — append
   and compact both recompute stats from the docs table the segments
@@ -35,10 +36,12 @@ import json
 import os
 
 import numpy as np
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from refimage_spark.index.segment import (
     FORMAT_VERSION,
+    STATS_FILE,
     read_manifest,
     seg_paths,
 )
@@ -55,7 +58,7 @@ def fsck_index(index_dir: str, deep: bool = True) -> dict:
 
     stats = None
     try:
-        stats = json.load(open(os.path.join(index_dir, "stats.json")))
+        stats = json.load(open(os.path.join(index_dir, STATS_FILE)))
         if stats.get("format_version") != FORMAT_VERSION:
             err(
                 f"stats.json format_version {stats.get('format_version')} "
@@ -110,13 +113,16 @@ def fsck_index(index_dir: str, deep: bool = True) -> dict:
         if dls.size and int(dls.min()) < 0:
             err(f"{tag}: negative dl")
         try:
-            t = pq.read_table(dict_p, columns=["n"])
+            t = pq.read_table(dict_p, columns=["term", "n"])
             n_post = int(t["n"].to_numpy().sum()) if t.num_rows else 0
             if n_post != r["n_postings"]:
                 err(
                     f"{tag}: dictionary posting counts sum to {n_post}, "
                     f"manifest says {r['n_postings']}"
                 )
+            terms = t["term"].combine_chunks()
+            if pc.all(pc.less(terms[:-1], terms[1:])).as_py() is False:
+                err(f"{tag}: dictionary terms not strictly sorted")
         except Exception as e:  # noqa: BLE001
             err(f"{tag}: dictionary unreadable: {e}")
         total_docs += int(ids.size)

@@ -33,7 +33,9 @@ Design notes for 100 TB:
   of the strictly-worse JVM exchange path (BENCH/BASELINE.md).
 - resume: partitions whose manifest row exists are skipped entirely —
   re-running the same build command after a crash completes the index
-  (idempotent: segment content is a pure function of (corpus, P)).
+  (idempotent: segment content is a pure function of (corpus, P)). Once
+  a merge or compact has committed (a live row carries ``merged_from``)
+  a re-run builds nothing: the rewritten parts are served already.
 """
 
 from __future__ import annotations
@@ -50,28 +52,27 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from refimage_spark.index.segment import (
+    BUILD_METRICS_FILE,
+    DOCS_DIR,
     FORMAT_VERSION,
     STATS_FILE,
-    committed_pids,
-    manifest_dir,
+    TERM_STATS_FILE,
+    commit_file,
+    docs_part_dir,
+    docs_parts,
+    DICT_SCHEMA,
     read_manifest,
     read_stats,
+    row_path,
     seg_paths,
     write_segment,
+    write_stats,
 )
 from refimage_spark.tokenizer import spark_tokens
 
 # term_stats rollup: total dict-parquet bytes under this bound run as a
 # driver-side Arrow group_by
 _TERM_STATS_LOCAL_BYTES = 256 << 20
-
-
-def _docs_path(index_dir: str) -> str:
-    return os.path.join(index_dir, "docs.parquet")
-
-
-def _term_stats_path(index_dir: str) -> str:
-    return os.path.join(index_dir, "term_stats.parquet")
 
 
 def _part_col(num_parts: int):
@@ -92,23 +93,13 @@ def _corpus_totals(slim: DataFrame) -> tuple[int, float]:
     return n, (int(row["dl_sum"]) / n if n else 0.0)
 
 
-def write_stats(index_dir: str, stats: dict) -> None:
-    """stats.json lands by tmp + atomic rename: readers never see a
-    partial file."""
-    path = os.path.join(index_dir, STATS_FILE)
-    with open(path + ".tmp", "w") as f:
-        json.dump(stats, f)
-    os.replace(path + ".tmp", path)
-
-
 def _read_docs(spark: SparkSession, index_dir: str) -> DataFrame | None:
     """The docs table, or None when it holds no part: a compact that
     drops every doc leaves a directory without data files, from which
     Spark cannot infer a schema."""
-    path = _docs_path(index_dir)
-    if not any(n.startswith("part=") for n in os.listdir(path)):
+    if not docs_parts(index_dir):
         return None
-    return spark.read.parquet(path)
+    return spark.read.parquet(os.path.join(index_dir, DOCS_DIR))
 
 
 def _offsets_df(with_part: DataFrame) -> DataFrame:
@@ -249,11 +240,10 @@ def build_index(
     """Build (or resume) the index. Returns build metrics."""
     t0 = time.perf_counter()
     os.makedirs(index_dir, exist_ok=True)
-    stats_path = os.path.join(index_dir, STATS_FILE)
 
     # ---- pass A: docs + global stats (skipped on resume) --------------------
     t_pass_a = 0.0
-    if not os.path.exists(stats_path):
+    if not os.path.exists(os.path.join(index_dir, STATS_FILE)):
         # the persisted url-dedup intermediate feeds the content-dedup
         # prepass AND both downstream consumers (per-part counts for id
         # offsets + the partitioned write) — the corpus text is exchanged
@@ -271,7 +261,7 @@ def build_index(
             # so every part lives wholly in one task: the partitioned
             # write yields one file per part dir with NO extra shuffle
             docs.write.mode("overwrite").partitionBy("part").parquet(
-                _docs_path(index_dir)
+                os.path.join(index_dir, DOCS_DIR)
             )
         finally:
             for h in handles:
@@ -291,14 +281,18 @@ def build_index(
     stats = read_stats(index_dir)
 
     # ---- pass B: postings shuffle + segment write ---------------------------
+    # after a merge or compact, superseded parts have no live row but
+    # their docs are served: nothing to resume (append builds its own)
     t_b0 = time.perf_counter()
-    n_written = _write_segments_for(spark, index_dir)
+    rewritten = any(r.get("merged_from") for r in read_manifest(index_dir))
+    n_written = 0 if rewritten else _write_segments_for(spark, index_dir)
     t_pass_b = time.perf_counter() - t_b0
 
     # ---- term_stats: global df = sum of per-segment dict dfs ----------------
     # (docs live in exactly one segment, so the sum is exact). Reading the
     # dictionaries is ~1000x cheaper than re-tokenizing the corpus.
-    if n_written or not os.path.exists(_term_stats_path(index_dir)):
+    ts_path = os.path.join(index_dir, TERM_STATS_FILE)
+    if n_written or not os.path.exists(ts_path):
         write_term_stats(spark, index_dir)
 
     elapsed = time.perf_counter() - t0
@@ -318,31 +312,26 @@ def build_index(
         "postings_per_sec": round(n_postings / elapsed, 1),
         "segments_written_this_run": n_written,
     }
-    with open(os.path.join(index_dir, "build_metrics.json"), "w") as f:
-        json.dump(metrics, f)
+    commit_file(
+        os.path.join(index_dir, BUILD_METRICS_FILE),
+        lambda f: f.write(json.dumps(metrics).encode()),
+    )
     return metrics
 
 
 def write_term_stats(spark: SparkSession, index_dir: str) -> None:
-    """Global df = sum of per-segment dict dfs.
+    """Global df = sum of per-segment dict dfs, over the MANIFEST's dict
+    paths, not a directory glob: superseded-but-not-yet-cleaned segment
+    files (merge/compact crash window) must not double-count df.
 
-    ATOMIC for concurrent readers: spark's mode("overwrite") deletes
-    the target before writing — a serving query reading mid-refresh
-    would see a partial or schema-less table — so the aggregation lands
-    in a scratch dir and its single sorted part file is os.replace'd
-    over term_stats.parquet (now a plain file, not a spark directory).
-
-    Inputs come from the MANIFEST's dict paths, not a directory glob:
-    superseded-but-not-yet-cleaned segment files (merge/compact crash
-    window) must not double-count df.
-
-    SIZE-ADAPTIVE (guide §1.2 — fix the algorithm before the config):
-    the output is vocabulary-sized, so while the dict files together are
-    driver-sized (<= _TERM_STATS_LOCAL_BYTES of parquet — the final
-    table is smaller still) the rollup runs as ONE driver-side Arrow
-    group_by instead of a Spark job (scan + shuffle + single-writer
-    stage + scheduling ~0.4-0.6s per build, measured). A 100-TB-scale
-    vocabulary falls through to the distributed aggregation unchanged."""
+    SIZE-ADAPTIVE (guide §1.2): while the dict files together are
+    driver-sized (<= _TERM_STATS_LOCAL_BYTES of parquet) the rollup is
+    ONE driver-side Arrow group_by landed by ``commit_file`` — a Spark
+    job costs ~0.4-0.6s per build (measured). A larger vocabulary runs
+    the distributed aggregation into a scratch dir whose single sorted
+    part file is os.replace'd over term_stats.parquet: spark's
+    mode("overwrite") deletes the target first, and a serving query
+    mid-refresh would see a partial or schema-less table."""
     import glob as _glob
     import shutil
 
@@ -350,31 +339,18 @@ def write_term_stats(spark: SparkSession, index_dir: str) -> None:
         seg_paths(index_dir, r["partition_id"])[1]
         for r in read_manifest(index_dir)
     ]
-    dst = _term_stats_path(index_dir)
+    dst = os.path.join(index_dir, TERM_STATS_FILE)
     if sum(os.path.getsize(p) for p in dicts) <= _TERM_STATS_LOCAL_BYTES:
-        tables = [
-            pq.read_table(p, columns=["term", "df"]) for p in dicts
-        ]
+        tables = [pq.read_table(p, columns=["term", "df"]) for p in dicts]
+        empty = DICT_SCHEMA.empty_table().select(["term", "df"])
         agg = (
-            (
-                pa.concat_tables(tables)
-                if tables
-                else pa.table(
-                    {
-                        "term": pa.array([], pa.string()),
-                        "df": pa.array([], pa.int64()),
-                    }
-                )
-            )
+            pa.concat_tables(tables or [empty])
             .group_by("term")
             .aggregate([("df", "sum")])
             .rename_columns(["term", "df"])
             .sort_by("term")
         )
-        pq.write_table(agg, dst + ".tmp")
-        if os.path.isdir(dst):
-            shutil.rmtree(dst)  # one-time migration from the directory layout
-        os.replace(dst + ".tmp", dst)
+        commit_file(dst, lambda f: pq.write_table(agg, f))
         return
     scratch = dst + ".build"
     (
@@ -387,8 +363,6 @@ def write_term_stats(spark: SparkSession, index_dir: str) -> None:
         .parquet(scratch)
     )
     part = _glob.glob(os.path.join(scratch, "part-*.parquet"))[0]
-    if os.path.isdir(dst):
-        shutil.rmtree(dst)  # one-time migration from the directory layout
     os.replace(part, dst)
     shutil.rmtree(scratch)
 
@@ -407,9 +381,8 @@ def build_segment_from_part(index_dir: str, pid: int) -> dict:
 
     from refimage_spark.tokenizer import arrow_flat_tokens
 
-    part_dir = os.path.join(_docs_path(index_dir), f"part={pid}")
     t = pq.read_table(
-        part_dir, columns=["doc_id", "dl", "tags", "text"]
+        docs_part_dir(index_dir, pid), columns=["doc_id", "dl", "tags", "text"]
     ).sort_by("doc_id")
     ids = t["doc_id"].to_numpy()
     flat, row_of = arrow_flat_tokens(t["text"].combine_chunks())
@@ -441,28 +414,21 @@ def _write_segments_for(
     by part on disk, so segment building is embarrassingly parallel with
     zero exchange. Skips committed partitions (resume); ``part_filter``
     restricts to a subset (used by incremental append)."""
-    done = committed_pids(index_dir)
-    docs_path = _docs_path(index_dir)
-    pending = []
-    for name in sorted(os.listdir(docs_path)):
-        if not name.startswith("part="):
-            continue
-        pid = int(name.split("=", 1)[1])
-        if pid in done:
-            continue
-        if part_filter is not None and not part_filter(pid):
-            continue
-        pending.append(pid)
+    done = {r["partition_id"] for r in read_manifest(index_dir)}
+    pending = [
+        p
+        for p in docs_parts(index_dir)
+        if p not in done and (part_filter is None or part_filter(p))
+    ]
     if not pending:
         return 0
 
     def write_part(pid: int) -> pa.RecordBatch | None:
         # re-check THIS pid's commit row only (a retried/speculative task
         # racing another attempt is harmless — segment writes are
-        # idempotent). A full committed_pids() scan in every task would
+        # idempotent). A full manifest scan in every task would
         # re-read the whole manifest dir: O(P^2) file opens per build.
-        row = os.path.join(manifest_dir(index_dir), f"part-{pid:05d}.json")
-        if os.path.exists(row):
+        if os.path.exists(row_path(index_dir, pid)):
             return None
         build_segment_from_part(index_dir, pid)
         return pa.record_batch([pa.array([pid], pa.int32())], names=["pid"])

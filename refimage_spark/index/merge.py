@@ -31,12 +31,13 @@ decode in 3 vectorized passes (``SegmentReader.read_all_postings``) and
 per-term Python loop, no np.repeat re-expansion of tf runs. Segments
 and their manifest rows carry no corpus statistic, so a rewrite never
 reads stats.json: compact refreshes it afterwards from the docs table.
+Compact and tag updates share one docs-table rewrite, ``_rewrite_docs``;
+every other file lands by ``segment.commit_file``.
 """
 
 from __future__ import annotations
 
 import contextlib
-import glob as _glob
 import json
 import os
 import shutil
@@ -59,20 +60,28 @@ from refimage_spark.index.build import (
     _per_segment_job,
     _read_docs,
     _write_segments_for,
-    write_stats,
     write_term_stats,
 )
 from refimage_spark.index.segment import (
+    DOCS_DIR,
+    TAG_UPDATES_FILE,
+    TOMBSTONES_FILE,
     SegmentReader,
-    manifest_dir,
+    cleanup_merged_sources,
+    commit_file,
+    docs_part_dir,
     manifest_rows,
     read_manifest,
+    read_row,
     read_stats,
-    seg_paths,
+    read_tombstones,
+    retag_segment,
     write_segment,
+    write_stats,
 )
 
-TOMBSTONES = "tombstones.parquet"
+# size-tier floor of plan_merges: segments under 64 KB share one tier
+MERGE_FLOOR_BYTES = 1 << 16
 MAINT_LOCK = ".maintenance.lock"
 # 120s, not 30: NFS client attribute caching (acregmax, commonly up to
 # 60s) can serve a remote contender an mtime up to a minute stale even
@@ -319,17 +328,14 @@ def delete_docs(index_dir: str, doc_ids: list[int]) -> None:
     Takes the maintenance lock: the tombstone read-merge-write must not
     race another delete or compact's final tombstone swap."""
     with maintenance_lock(index_dir):
-        path = os.path.join(index_dir, TOMBSTONES)
-        old = (
-            pq.read_table(path)["doc_id"].to_numpy()
-            if os.path.exists(path)
-            else np.empty(0, np.int64)
+        old = read_tombstones(index_dir)
+        ids = np.asarray(doc_ids, np.int64)
+        merged = np.unique(ids if old is None else np.concatenate([old, ids]))
+        table = pa.table({"doc_id": merged})
+        commit_file(
+            os.path.join(index_dir, TOMBSTONES_FILE),
+            lambda f: pq.write_table(table, f),
         )
-        merged = np.unique(
-            np.concatenate([old, np.asarray(doc_ids, np.int64)])
-        )
-        pq.write_table(pa.table({"doc_id": merged}), path + ".tmp")
-        os.replace(path + ".tmp", path)
 
 
 def _recompute_global_stats(spark: SparkSession, index_dir: str) -> None:
@@ -366,13 +372,10 @@ def _rewrite_segments(
     Tags are cast to list<string>, so every rewritten sidecar has one
     schema."""
     pids = [int(p) for p in pids]
-    row_path = os.path.join(manifest_dir(index_dir), f"part-{new_pid:05d}.json")
-    if os.path.exists(row_path):
-        with open(row_path) as f:
-            row = json.load(f)
-        if sorted(row.get("merged_from") or []) == sorted(pids):
-            n_docs, n_postings = row["n_docs"], row["n_postings"]
-            return {"new_pid": new_pid, "n_docs": n_docs, "n_postings": n_postings}
+    row = read_row(index_dir, new_pid)
+    if row is not None and sorted(row.get("merged_from") or []) == sorted(pids):
+        n_docs, n_postings = row["n_docs"], row["n_postings"]
+        return {"new_pid": new_pid, "n_docs": n_docs, "n_postings": n_postings}
     readers = [SegmentReader(index_dir, p) for p in pids]
     norms = [rd.norms() for rd in readers]
     ids = np.concatenate([n[0] for n in norms])
@@ -415,28 +418,24 @@ def _rewrite_groups(
     spark: SparkSession | None,
     index_dir: str,
     groups: list[list[int]],
-    drop_path: str | None = None,
+    drop_tombstones: bool = False,
 ) -> None:
     """Rewrite each group of segments as one new segment. Output pids
     are pre-assigned from max+1 on the driver (tasks must not race on
     max(manifest)+1). One ``_per_segment_job`` runs the groups; a lone
     group, or no ``spark``, runs on the driver.
 
-    ``drop_path`` ships the drop set as a PATH, not a closure-captured
-    array: each rewrite side-reads it (shared storage at cluster scale),
-    which costs the same order as the rewrite's own membership mask —
-    millions of tombstones would otherwise be pickled into every task.
+    ``drop_tombstones`` drops the tombstoned docs; each rewrite side-reads
+    the tombstones itself (shared storage at cluster scale), which costs
+    the same order as the rewrite's own membership mask — millions of
+    tombstones would otherwise be pickled into every task.
     Source cleanup stays with the caller, deferred to the end of its run
     so readers face one flip window per run."""
     base = max(r["partition_id"] for r in read_manifest(index_dir)) + 1
     jobs = [(g, base + i) for i, g in enumerate(groups)]
 
     def rewrite(pids: list[int], new_pid: int) -> pa.RecordBatch:
-        drop = (
-            None
-            if drop_path is None
-            else pq.read_table(drop_path)["doc_id"].to_numpy()
-        )
+        drop = read_tombstones(index_dir) if drop_tombstones else None
         _rewrite_segments(index_dir, pids, new_pid, drop)
         return pa.record_batch([pa.array([new_pid], pa.int32())], names=["pid"])
 
@@ -462,47 +461,42 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
     delete-rebuild changes its index (SURVEY.md §2.3 K4).
     """
     with maintenance_lock(index_dir):
-        return _compact_locked(spark, index_dir)
+        sweep_orphans(index_dir)  # reclaim leftovers of any crashed prior run
+        tomb = read_tombstones(index_dir)
+        tomb_path = os.path.join(index_dir, TOMBSTONES_FILE)
+        if tomb is None:
+            return {"compacted": 0}
+        if tomb.size == 0:
+            os.remove(tomb_path)
+            return {"compacted": 0}
 
+        # 1. shrink the docs table (source of truth for stats): only the
+        # parts holding a tombstoned doc are rewritten — ANTI-JOIN against
+        # the tombstone table, never an IN-list literal in the plan
+        # (millions of tombstones would otherwise be embedded in the query)
+        _rewrite_docs(
+            spark,
+            index_dir,
+            tomb_path,
+            lambda rows, tomb_df: rows.join(
+                F.broadcast(tomb_df), "doc_id", "left_anti"
+            ),
+        )
 
-def _compact_locked(spark: SparkSession, index_dir: str) -> dict:
-    sweep_orphans(index_dir)  # reclaim leftovers of any crashed prior run
-    tomb_path = os.path.join(index_dir, TOMBSTONES)
-    if not os.path.exists(tomb_path):
-        return {"compacted": 0}
-    tomb = pq.read_table(tomb_path)["doc_id"].to_numpy()
-    if tomb.size == 0:
+        # 2. rewrite each segment without the tombstoned docs under a NEW
+        # pid (the supersession commit): a concurrent search always reads
+        # a complete generation of every segment, and a crash mid-compact
+        # leaves a correct, re-runnable index
+        pids = sorted(r["partition_id"] for r in read_manifest(index_dir))
+        _rewrite_groups(spark, index_dir, [[p] for p in pids], drop_tombstones=True)
+
+        # 3. drop superseded sources; tombstones go LAST — they keep
+        # masking the deleted docs in any old-generation segment a
+        # concurrent query may still be reading during the flip window
+        cleanup_merged_sources(index_dir, pids)
         os.remove(tomb_path)
-        return {"compacted": 0}
-
-    # 1. shrink the docs table (source of truth for stats) — ANTI-JOIN
-    # against the tombstone table, never an IN-list literal in the plan
-    # (millions of tombstones would otherwise be embedded in the query)
-    docs = _read_docs(spark, index_dir)
-    if docs is not None:
-        docs_path = os.path.join(index_dir, "docs.parquet")
-        tomb_df = F.broadcast(spark.read.parquet(tomb_path))
-        tmp_docs = docs_path + ".compact"
-        docs.join(tomb_df, "doc_id", "left_anti").write.mode(
-            "overwrite"
-        ).partitionBy("part").parquet(tmp_docs)
-        shutil.rmtree(docs_path)
-        os.replace(tmp_docs, docs_path)
-
-    # 2. rewrite each segment without the tombstoned docs under a NEW pid
-    # (the supersession commit): a concurrent search always reads a
-    # complete generation of every segment, and a crash mid-compact
-    # leaves a correct, re-runnable index
-    pids = sorted(r["partition_id"] for r in read_manifest(index_dir))
-    _rewrite_groups(spark, index_dir, [[p] for p in pids], tomb_path)
-
-    # 3. drop superseded sources; tombstones go LAST — they keep masking
-    # the deleted docs in any old-generation segment a concurrent query
-    # may still be reading during the flip window
-    _cleanup_merged_sources(index_dir, pids)
-    os.remove(tomb_path)
-    _recompute_global_stats(spark, index_dir)  # AFTER segments reflect removal
-    return {"compacted": int(tomb.size), "segments": len(pids)}
+        _recompute_global_stats(spark, index_dir)  # AFTER segments reflect removal
+        return {"compacted": int(tomb.size), "segments": len(pids)}
 
 
 def sweep_orphans(index_dir: str) -> int:
@@ -523,30 +517,11 @@ def sweep_orphans(index_dir: str) -> int:
         superseded.update(int(p) for p in (r.get("merged_from") or []))
     n_orphan_rows = sum(1 for r in rows if r["partition_id"] in superseded)
     if superseded:
-        _cleanup_merged_sources(index_dir, sorted(superseded))
+        cleanup_merged_sources(index_dir, sorted(superseded))
     return n_orphan_rows
 
 
-def _cleanup_merged_sources(index_dir: str, pids: list[int]) -> None:
-    """Remove superseded source rows/files; tolerant of a concurrent or
-    prior attempt having already removed any of them."""
-    for p in pids:
-        try:
-            os.remove(os.path.join(index_dir, "manifest", f"part-{p:05d}.json"))
-        except FileNotFoundError:
-            pass
-        for f in _glob.glob(os.path.join(index_dir, "segments", f"seg-{p:05d}.*")):
-            try:
-                os.remove(f)
-            except FileNotFoundError:
-                pass
-
-
-def merge_segments(
-    index_dir: str,
-    pids: list[int],
-    cleanup: bool = True,
-) -> dict:
+def merge_segments(index_dir: str, pids: list[int]) -> dict:
     """Log-structured merge: combine several (small) segments into one,
     under the maintenance lock.
 
@@ -557,9 +532,7 @@ def merge_segments(
     The output pid is max(live)+1. The commit is ``_rewrite_segments``'
     manifest row (see there): a retry of a committed merge finds that
     row (its sources are superseded), reuses its pid and goes straight
-    to cleanup.
-    ``cleanup=False`` leaves the superseded sources on disk, as a crash
-    before cleanup would."""
+    to cleanup."""
     assert len(pids) >= 2
     with maintenance_lock(index_dir):
         rows = read_manifest(index_dir)
@@ -574,8 +547,7 @@ def merge_segments(
                 assert p in live, f"segment {p} not in manifest"
             new_pid = max(live) + 1
         out = _rewrite_segments(index_dir, pids, new_pid)
-        if cleanup:
-            _cleanup_merged_sources(index_dir, pids)
+        cleanup_merged_sources(index_dir, pids)
     return {"merged": pids, **out}
 
 
@@ -584,7 +556,6 @@ def plan_merges(
     tier_factor: float = 4.0,
     min_merge: int = 4,
     max_merge: int = 16,
-    floor_bytes: int = 1 << 16,
 ) -> list[list[int]]:
     """Size-tiered merge plan: segments land in tiers by
     log_{tier_factor}(bytes); any tier holding >= min_merge segments
@@ -593,7 +564,7 @@ def plan_merges(
     rows = read_manifest(index_dir)
     tiers: dict[int, list[dict]] = {}
     for r in rows:
-        t = int(np.log(max(r["bytes"], floor_bytes)) / np.log(tier_factor))
+        t = int(np.log(max(r["bytes"], MERGE_FLOOR_BYTES)) / np.log(tier_factor))
         tiers.setdefault(t, []).append(r)
     plans = []
     for t in sorted(tiers):
@@ -638,7 +609,7 @@ def run_merge_policy(
         # window per policy run instead of one per merge group, and the
         # serving retry covers it.
         if merged_total:
-            _cleanup_merged_sources(
+            cleanup_merged_sources(
                 index_dir, sorted({p for grp in merged_total for p in grp})
             )
     return {"rounds": n_rounds, "merged_groups": merged_total}
@@ -656,11 +627,11 @@ def update_doc_tags(
     is a full rebuild.
 
     - segments FIRST: one ``_per_segment_job`` over the segments; each
-      side-reads the updates parquet, checks membership against its
-      sorted doc ids, and rewrites ONLY its docs sidecar (atomic
-      tmp+rename). The posting file is never opened.
-    - docs table second: the affected parts' rows are rewritten via
-      dynamic partition overwrite (untouched part dirs keep their files).
+      side-reads the updates parquet and ``segment.retag_segment``
+      rewrites ONLY its docs sidecar, if it holds an updated doc. The
+      posting file is never opened.
+    - docs table second: ``_rewrite_docs`` rewrites only the parts
+      holding an updated doc (untouched part dirs keep their files).
 
     CRASH SAFETY: runs under the maintenance lock (a concurrent compact
     rewriting sidecars would silently drop a just-applied tag update).
@@ -674,81 +645,74 @@ def update_doc_tags(
     if not updates:
         return {"updated_docs": 0, "segments_rewritten": 0}
     with maintenance_lock(index_dir):
-        return _update_doc_tags_locked(spark, index_dir, updates)
+        up_ids = np.sort(np.fromiter(updates.keys(), np.int64, len(updates)))
+        up_tags = pa.array(
+            [[str(t) for t in updates[int(i)]] for i in up_ids],
+            pa.list_(pa.string()),
+        )
+        up = pa.table({"doc_id": up_ids, "tags": up_tags})
+        up_path = os.path.join(index_dir, TAG_UPDATES_FILE)
+        commit_file(up_path, lambda f: pq.write_table(up, f))
+        try:
+            # 1. segment sidecars: membership-check + rewrite, per segment
+            def retag(pid: int) -> pa.RecordBatch:
+                n_hit = retag_segment(index_dir, pid, pq.read_table(up_path))
+                return pa.record_batch([pa.array([n_hit], pa.int32())], names=["n"])
+
+            segs = [(r["partition_id"],) for r in read_manifest(index_dir)]
+            hits = _per_segment_job(spark, segs, "pid int", retag, "n int").collect()
+            rewritten = sum(r["n"] > 0 for r in hits)
+
+            # 2. docs table: rewrite only the parts holding an updated doc
+            def retag_rows(rows: DataFrame, listed: DataFrame) -> DataFrame:
+                u = F.broadcast(listed.withColumnRenamed("tags", "_u_tags"))
+                return (
+                    rows.join(u, "doc_id", "left")
+                    .withColumn("tags", F.coalesce("_u_tags", "tags"))
+                    .drop("_u_tags")
+                )
+
+            n_updated = _rewrite_docs(spark, index_dir, up_path, retag_rows)
+        finally:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(up_path)
+        return {"updated_docs": n_updated, "segments_rewritten": int(rewritten)}
 
 
-def _update_doc_tags_locked(
-    spark: SparkSession, index_dir: str, updates: dict[int, list[str]]
-) -> dict:
-    up_ids = np.sort(np.fromiter(updates.keys(), np.int64, len(updates)))
-    up_tags = pa.array(
-        [[str(t) for t in updates[int(i)]] for i in up_ids],
-        pa.list_(pa.string()),
+def _rewrite_docs(
+    spark: SparkSession, index_dir: str, listed_path: str, patch
+) -> int:
+    """Rewrite the docs-table parts holding a doc id listed in the
+    parquet at ``listed_path`` as ``patch(rows, listed)``, by dynamic
+    partition overwrite (other parts keep their files, the table dir
+    never goes away); a part left with no rows is removed. Returns the
+    number of listed docs found. localCheckpoint materializes the rows
+    first: Spark refuses to overwrite a path its own plan still reads."""
+    docs = _read_docs(spark, index_dir)
+    if docs is None:  # a compact dropped every doc
+        return 0
+    listed = spark.read.parquet(listed_path)
+    hits = (
+        docs.join(F.broadcast(listed.select("doc_id")), "doc_id")
+        .groupBy("part")
+        .count()
+        .collect()
     )
-    up_path = os.path.join(index_dir, "tag_updates.parquet")
-    pq.write_table(pa.table({"doc_id": up_ids, "tags": up_tags}), up_path)
-    try:
-        # 1. segment sidecars: membership-check + rewrite, per segment
-        def retag(pid: int) -> pa.RecordBatch:
-            ut = pq.read_table(up_path)
-            uids = ut["doc_id"].to_numpy()
-            docs_p = seg_paths(index_dir, pid)[2]
-            t = pq.read_table(docs_p)
-            ids = t["doc_id"].to_numpy()
-            posc = np.minimum(np.searchsorted(uids, ids), uids.size - 1)
-            hit = uids[posc] == ids
-            n_hit = int(hit.sum())
-            if n_hit:
-                repl = ut["tags"].combine_chunks().take(pa.array(posc))
-                new_tags = pc.if_else(
-                    pa.array(hit), repl, t["tags"].combine_chunks()
-                )
-                out = t.set_column(
-                    t.schema.get_field_index("tags"), "tags", new_tags
-                )
-                pq.write_table(out, docs_p + ".tmp", compression="zstd")
-                os.replace(docs_p + ".tmp", docs_p)
-            return pa.record_batch([pa.array([n_hit], pa.int32())], names=["n"])
-
-        segs = [(r["partition_id"],) for r in read_manifest(index_dir)]
-        hits = _per_segment_job(spark, segs, "pid int", retag, "n int").collect()
-        rewritten = sum(r["n"] > 0 for r in hits)
-
-        # 2. docs table: rewrite only the affected part dirs (none when
-        # a compact dropped every doc)
-        docs_path = os.path.join(index_dir, "docs.parquet")
-        docs = _read_docs(spark, index_dir)
-        u = spark.read.parquet(up_path).withColumnRenamed("tags", "_u_tags")
-        affected = [] if docs is None else [
-            r["part"]
-            for r in docs.join(F.broadcast(u), "doc_id")
-            .select("part")
-            .distinct()
-            .collect()
-        ]
-        n_updated = 0
-        if affected:
-            n_updated = int(docs.join(F.broadcast(u), "doc_id").count())
-            # localCheckpoint materializes the new rows BEFORE the
-            # overwrite (Spark refuses to overwrite a path its own plan
-            # still reads, and the old files vanish under any lazy plan)
-            new_rows = (
-                docs.where(F.col("part").isin(affected))
-                .join(F.broadcast(u), "doc_id", "left")
-                .withColumn("tags", F.coalesce("_u_tags", "tags"))
-                .drop("_u_tags")
-                .localCheckpoint(eager=True)
-            )
+    parts = {r["part"] for r in hits}
+    if parts:
+        rows = patch(docs.where(F.col("part").isin(sorted(parts))), listed)
+        rows = rows.localCheckpoint(eager=True)
+        kept = {r["part"] for r in rows.select("part").distinct().collect()}
+        if kept:
             (
-                new_rows.write.mode("overwrite")
+                rows.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("part")
-                .parquet(docs_path)
+                .parquet(os.path.join(index_dir, DOCS_DIR))
             )
-    finally:
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(up_path)
-    return {"updated_docs": n_updated, "segments_rewritten": int(rewritten)}
+        for p in parts - kept:
+            shutil.rmtree(docs_part_dir(index_dir, p))
+    return sum(r["count"] for r in hits)
 
 
 def append_pages(
@@ -784,7 +748,7 @@ def _append_pages_locked(
     stats = read_stats(index_dir)
     num_parts = stats["num_parts"]
     tag_cols = tuple(stats.get("tag_cols", ["lang"]))
-    docs_path = os.path.join(index_dir, "docs.parquet")
+    docs_path = os.path.join(index_dir, DOCS_DIR)
     old_docs = _read_docs(spark, index_dir)
     base_id, fresh = 0, new_pages
     if old_docs is not None:

@@ -41,9 +41,13 @@ if TYPE_CHECKING:  # pyspark is imported lazily (inside search_index):
 from refimage_spark import dsl
 from refimage_spark.index.segment import (
     STATS_FILE,
+    TERM_STATS_FILE,
     SegmentReader,
+    manifest_dir,
     read_manifest,
     read_stats,
+    read_tombstones,
+    seg_paths,
 )
 from refimage_spark.tokenizer import BM25_B, BM25_K1, py_tokens
 
@@ -116,17 +120,20 @@ def load_stats(index_dir: str) -> dict:
     )
 
 
+_DF_PIN_LIMIT = 2_000_000  # global_df pins term_stats up to this size
+
+
 def global_df(index_dir: str, terms: list[str]) -> dict[str, int]:
     """df lookup for query terms. The whole dictionary is cached while it
     is serving-sized; a 10^12-doc vocabulary would be memory-mapped or
     filter-read per query instead (the cold branch below)."""
     if not terms:
         return {}
-    p = os.path.join(index_dir, "term_stats.parquet")
+    p = os.path.join(index_dir, TERM_STATS_FILE)
 
     def load():
         t = pq.read_table(p)
-        if t.num_rows > 2_000_000:
+        if t.num_rows > _DF_PIN_LIMIT:
             return None  # too big to pin — fall back to filtered reads
         return dict(zip(t["term"].to_pylist(), t["df"].to_pylist()))
 
@@ -402,8 +409,6 @@ def _reader(index_dir: str, pid: int) -> SegmentReader:
     keyed by the DOCS SIDECAR's mtime — every mutation that can change
     what a cached reader serves (compact, tag update) rewrites the
     sidecar, while the posting file alone never changes without it."""
-    from refimage_spark.index.segment import seg_paths
-
     docs_path = seg_paths(index_dir, pid)[2]
     return _cached(
         "reader", docs_path, lambda: SegmentReader(index_dir, int(pid))
@@ -447,9 +452,7 @@ def _segment_topk(
 def _manifest(index_dir: str) -> list[dict]:
     """The index's live manifest rows, cached by the manifest dir's mtime."""
     return _cached(
-        "manifest",
-        os.path.join(index_dir, "manifest"),
-        lambda: read_manifest(index_dir),
+        "manifest", manifest_dir(index_dir), lambda: read_manifest(index_dir)
     )
 
 
@@ -461,7 +464,7 @@ def _query_plan(index_dir: str, query: str):
     terms = list(dict.fromkeys(collect_terms(node)))
     idfs = make_idfs(index_dir, terms)
     pids = sorted(r["partition_id"] for r in _manifest(index_dir))
-    tomb = _load_tombstones(index_dir)
+    tomb = read_tombstones(index_dir)
     return node, avgdl, idfs, pids, tomb
 
 
@@ -752,7 +755,7 @@ def warm_serving_pool(index_dir: str | None = None) -> None:
         # would short-circuit before the dict/norms loads) — use the
         # head term
         ts = pq.read_table(
-            os.path.join(index_dir, "term_stats.parquet"), columns=["term", "df"]
+            os.path.join(index_dir, TERM_STATS_FILE), columns=["term", "df"]
         )
     if ts is None or ts.num_rows == 0:
         # no index, or an empty one (pc.index over zero rows returns -1
@@ -983,11 +986,3 @@ def index_stats(index_dir: str) -> dict:
         },
     }
 
-
-def _load_tombstones(index_dir: str) -> np.ndarray | None:
-    """Pending-delete doc ids, SORTED once here so the per-segment
-    ``np.isin`` masks never re-sort them."""
-    p = os.path.join(index_dir, "tombstones.parquet")
-    if not os.path.exists(p):
-        return None
-    return np.sort(pq.read_table(p)["doc_id"].to_numpy())

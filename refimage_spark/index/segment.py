@@ -1,18 +1,20 @@
-"""Segment file format: self-contained per-partition inverted index.
+"""The index directory's one owner: every index file is named, read and
+durably committed here.
 
-Files per segment (under ``{index_dir}/segments/``):
-- ``seg-{pid:05d}.post``         binary: per-term [docs_blob | tfs_blob |
-                                 block_last_doc int64[] | block_max_tf u32[] |
-                                 block_min_dl u32[] | block_doc_boff u32[] |
-                                 block_tf_boff u32[]]
-- ``seg-{pid:05d}.dict.parquet`` term dictionary, sorted by term:
-                                 (term, df, n, off_docs, len_docs, off_tfs,
-                                  len_tfs, off_bmax, n_blocks)
-- ``seg-{pid:05d}.docs.parquet`` doc norms: (doc_id, dl, tags), sorted by
-                                 doc_id (scoring looks dl up by searchsorted;
-                                 tags = the full tag set {lang, source, ...}
-                                 so segment-engine tag queries agree with
-                                 the DataFrame compiler)
+Files under ``{index_dir}`` (name constants and path helpers below):
+- ``segments/seg-{pid:05d}.post``: per term [docs_blob | tfs_blob |
+  block_last_doc i64[] | block_max_tf, block_min_dl, block_doc_boff,
+  block_tf_boff u32[] each]
+- ``segments/seg-{pid:05d}.dict.parquet``: term dictionary, sorted by
+  term (term, df, n, off_docs, len_docs, off_tfs, len_tfs, off_bmax,
+  n_blocks)
+- ``segments/seg-{pid:05d}.docs.parquet``: (doc_id, dl, tags) sorted by
+  doc_id; tags = the full tag set {lang, source, ...}
+- ``manifest/part-{pid:05d}.json``: one segment's commit row
+- ``stats.json`` (N, avgdl, build params), ``term_stats.parquet``
+  (global df), ``tombstones.parquet`` (pending deletes),
+  ``build_metrics.json``, ``tag_updates.parquet`` (a tag update's
+  scratch input) and the docs table ``docs.parquet/part={part}/``
 
 Doc-id gaps RESET at every BLOCK boundary (the first gap of a block is
 the absolute doc id) and per-block byte offsets into the docs/tfs blobs
@@ -30,11 +32,12 @@ function of the corpus partition — stats drift never changes checksums.
 No corpus statistic is stored per segment: avgdl lives in stats.json
 (``read_stats``) only.
 
-``write_segment`` is the one write path (build's pass B, every merge and
-compaction): it encodes the rows, writes the three files durably and
-commits the manifest row (``manifest/part-{pid:05d}.json``) last, by
-atomic rename. This module alone owns the block layout (``_block_map``)
-and the commit rule.
+THE COMMIT RULE: every index file lands by ``commit_file`` (tmp file,
+fsync, atomic rename) except Spark's own writes (the docs table and the
+distributed term_stats rollup). ``write_segment`` is the one segment
+write path (build's pass B, merges, compaction): the three segment
+files first, the manifest row last. This module alone owns the block
+layout (``_block_map``) and the commit rule.
 
 The reference persisted its whole index as one monolithic binary+pickle
 (/root/reference/src/refimage/search/__init__.py:322-396); segments give
@@ -44,6 +47,8 @@ partial load (only query terms' ranges are read), per-partition commit
 
 from __future__ import annotations
 
+import contextlib
+import glob
 import hashlib
 import json
 import os
@@ -83,6 +88,22 @@ def check_format_version(meta: dict, where: str) -> None:
 
 
 STATS_FILE = "stats.json"
+TERM_STATS_FILE = "term_stats.parquet"
+TOMBSTONES_FILE = "tombstones.parquet"
+DOCS_DIR = "docs.parquet"
+BUILD_METRICS_FILE = "build_metrics.json"
+TAG_UPDATES_FILE = "tag_updates.parquet"
+
+
+def commit_file(path: str, write) -> None:
+    """``write(f)`` into ``path``'s tmp file, fsync, then atomic rename:
+    nothing ever observes a half-written file, and the bytes are on disk
+    before the name is."""
+    with open(path + ".tmp", "wb") as f:
+        write(f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(path + ".tmp", path)
 
 
 def read_stats(index_dir: str) -> dict:
@@ -94,6 +115,32 @@ def read_stats(index_dir: str) -> dict:
         stats = json.load(f)
     check_format_version(stats, path)
     return stats
+
+
+def write_stats(index_dir: str, stats: dict) -> None:
+    commit_file(
+        os.path.join(index_dir, STATS_FILE),
+        lambda f: f.write(json.dumps(stats).encode()),
+    )
+
+
+def read_tombstones(index_dir: str) -> np.ndarray | None:
+    """Pending-delete doc ids, sorted (so per-segment ``np.isin`` masks
+    never re-sort them), or None when nothing is pending."""
+    path = os.path.join(index_dir, TOMBSTONES_FILE)
+    if not os.path.exists(path):
+        return None
+    return np.sort(pq.read_table(path)["doc_id"].to_numpy())
+
+
+def docs_part_dir(index_dir: str, part: int) -> str:
+    return os.path.join(index_dir, DOCS_DIR, f"part={part}")
+
+
+def docs_parts(index_dir: str) -> list[int]:
+    """The docs table's part ids on disk, in order."""
+    names = os.listdir(os.path.join(index_dir, DOCS_DIR))
+    return sorted(int(n[5:]) for n in names if n.startswith("part="))
 
 
 DICT_SCHEMA = pa.schema(
@@ -145,9 +192,7 @@ def _encode(
     vocabularies dominates the whole build (measured ~3x slower)."""
     n_rows = len(terms)
     if n_rows == 0:
-        return b"", pa.table(
-            {f.name: pa.array([], f.type) for f in DICT_SCHEMA}
-        )
+        return b"", DICT_SCHEMA.empty_table()
     assert docs.max() < (1 << 42), "doc_id exceeds 42-bit pair-key space"
     # term run boundaries via Arrow C++ string compare — no per-row
     # Python objects ever materialize (that conversion alone dominated
@@ -258,17 +303,6 @@ def _encode(
     return blob, dict_table
 
 
-def _commit_file(path: str, write) -> None:
-    """``write(f)`` into ``path``'s tmp file, fsync, then atomic rename:
-    nothing ever observes a half-written file, and the bytes are on disk
-    before the name is."""
-    with open(path + ".tmp", "wb") as f:
-        write(f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(path + ".tmp", path)
-
-
 def write_segment(
     index_dir: str,
     pid: int,
@@ -305,9 +339,9 @@ def write_segment(
     norms = pa.table({"doc_id": ids, "dl": dls.astype(np.int32), "tags": tags})
     post_path, dict_path, docs_path = seg_paths(index_dir, pid)
     os.makedirs(os.path.dirname(post_path), exist_ok=True)
-    _commit_file(post_path, lambda f: f.write(blob))
+    commit_file(post_path, lambda f: f.write(blob))
     for path, table in ((dict_path, dict_table), (docs_path, norms)):
-        _commit_file(path, lambda f: pq.write_table(table, f, compression="zstd"))
+        commit_file(path, lambda f: pq.write_table(table, f, compression="zstd"))
     row = {
         "segment_id": f"seg-{pid:05d}",
         "partition_id": pid,
@@ -321,9 +355,34 @@ def write_segment(
     if merged_from is not None:
         row["merged_from"] = merged_from
     os.makedirs(manifest_dir(index_dir), exist_ok=True)
-    row_path = os.path.join(manifest_dir(index_dir), f"part-{pid:05d}.json")
-    _commit_file(row_path, lambda f: f.write(json.dumps(row).encode()))
+    commit_file(
+        row_path(index_dir, pid), lambda f: f.write(json.dumps(row).encode())
+    )
     return row
+
+
+def retag_segment(index_dir: str, pid: int, updates: pa.Table) -> int:
+    """Set the tags of segment ``pid``'s docs listed in ``updates``
+    (doc_id-sorted (doc_id, tags) rows), rewriting only its docs
+    sidecar; the posting file is never opened. Returns the number of
+    docs retagged (0 = sidecar untouched)."""
+    uids = updates["doc_id"].to_numpy()
+    utags = updates["tags"].combine_chunks()
+    docs_path = seg_paths(index_dir, pid)[2]
+    t = pq.read_table(docs_path)
+    ids = t["doc_id"].to_numpy()
+    pos = np.minimum(np.searchsorted(uids, ids), uids.size - 1)
+    hit = uids[pos] == ids
+    n_hit = int(hit.sum())
+    if n_hit:
+        tags = pc.if_else(
+            pa.array(hit), utags.take(pa.array(pos)), t["tags"].combine_chunks()
+        )
+        out = t.set_column(t.schema.get_field_index("tags"), "tags", tags)
+        commit_file(
+            docs_path, lambda f: pq.write_table(out, f, compression="zstd")
+        )
+    return n_hit
 
 
 # ---- reader ------------------------------------------------------------------
@@ -376,21 +435,11 @@ class SegmentReader:
             full = pq.read_table(self.dict_path)
             if full.num_rows <= self.DICT_PIN_LIMIT:
                 # pin COLUMNAR, not as {term: row-dict}: a python dict of
-                # row dicts costs ~500-800 B/term (20-30 MB for a 40k-term
-                # segment), and a serving worker caching hundreds of
-                # readers multiplied that into gigabytes per process
-                # (found by the 2M-page / 1280-segment probe). The Arrow
-                # table is ~10x smaller; term lookup is a binary search
-                # over the sorted term column (the writer emits terms
-                # sorted; verified at pin time, sorted here if ever not).
-                term_arr = full["term"].combine_chunks()
-                tl = term_arr.to_pylist()  # transient, for the sort check
-                if any(tl[i] > tl[i + 1] for i in range(len(tl) - 1)):
-                    idx = sorted(range(len(tl)), key=tl.__getitem__)
-                    full = full.take(pa.array(idx, pa.int64()))
-                    term_arr = full["term"].combine_chunks()
-                del tl
-                self._dict = (term_arr, full)
+                # row dicts costs ~500-800 B/term, gigabytes per serving
+                # worker at 1280 segments. Term lookup is a binary search
+                # over the term column, which the writer emits sorted
+                # (``fsck_index`` checks it).
+                self._dict = (full["term"].combine_chunks(), full)
             else:
                 self._dict = ()  # sentinel: too big, use filtered reads
         if self._dict:
@@ -426,10 +475,10 @@ class SegmentReader:
         t = pq.read_table(
             self.dict_path, filters=pc.field("term").isin(terms)
         )
-        out = {}
-        for row in t.to_pylist():
-            out[row["term"]] = row
-        return out
+        rows = {row["term"]: row for row in t.to_pylist()}
+        # in query-term order, as the pinned path: scores sum per term in
+        # this order, and another order moves the last bit of a score
+        return {t: rows[t] for t in terms if t in rows}
 
     def read_postings(
         self, entry: dict, blocks: np.ndarray | None = None
@@ -561,24 +610,28 @@ def manifest_dir(index_dir: str) -> str:
     return os.path.join(index_dir, "manifest")
 
 
+def row_path(index_dir: str, pid: int) -> str:
+    return os.path.join(manifest_dir(index_dir), f"part-{pid:05d}.json")
+
+
+def read_row(index_dir: str, pid: int) -> dict | None:
+    """Segment ``pid``'s manifest row, or None if it has none (a
+    concurrent merge's cleanup may remove a superseded row any time)."""
+    try:
+        with open(row_path(index_dir, pid)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
 def manifest_rows(index_dir: str) -> list[dict]:
     """Every manifest row on disk, superseded ones included, in pid
     order — the raw listing under ``read_manifest`` and the orphan
     sweep."""
     d = manifest_dir(index_dir)
-    if not os.path.isdir(d):
-        return []
-    rows = []
-    for name in sorted(os.listdir(d)):
-        if name.endswith(".json"):
-            try:
-                with open(os.path.join(d, name)) as f:
-                    rows.append(json.load(f))
-            except FileNotFoundError:
-                # a concurrent merge's cleanup removed the row between
-                # listdir and open — it was superseded anyway; skip
-                continue
-    return rows
+    names = sorted(os.listdir(d)) if os.path.isdir(d) else []
+    rows = [read_row(index_dir, int(n[5:-5])) for n in names if n.endswith(".json")]
+    return [r for r in rows if r is not None]
 
 
 def read_manifest(index_dir: str) -> list[dict]:
@@ -596,5 +649,13 @@ def read_manifest(index_dir: str) -> list[dict]:
     return [r for r in rows if r["partition_id"] not in superseded]
 
 
-def committed_pids(index_dir: str) -> set[int]:
-    return {r["partition_id"] for r in read_manifest(index_dir)}
+def cleanup_merged_sources(index_dir: str, pids: list[int]) -> None:
+    """Remove superseded source rows and segment files, ``.tmp``
+    leftovers included; tolerant of a concurrent or prior attempt having
+    already removed any of them."""
+    for p in pids:
+        paths = [row_path(index_dir, p)]
+        paths += glob.glob(os.path.join(index_dir, "segments", f"seg-{p:05d}.*"))
+        for path in paths:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(path)

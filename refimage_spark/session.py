@@ -19,9 +19,9 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
-def spread_small_scan(df, min_fraction: float = 0.5):
+def spread_small_scan(df):
     """Round-robin repartition a DataFrame whose scan has fewer
-    partitions than the cluster has cores — the "one unsplittable file"
+    partitions than half the cluster's cores — the "one unsplittable file"
     input-skew case (optimization guide §2.5): a single-file parquet
     table scans as ONE partition, so every per-row UDF/expression stage
     upstream of the first exchange runs on one core.
@@ -34,7 +34,7 @@ def spread_small_scan(df, min_fraction: float = 0.5):
     single-core alternative costs seconds."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= max(1, int(target * min_fraction)):
+    if df.rdd.getNumPartitions() >= max(1, target // 2):
         return df
     return df.repartition(target)
 

@@ -4,6 +4,8 @@ the invariants survive a full maintenance cycle."""
 import glob
 import os
 
+import pyarrow.parquet as pq
+
 from refimage_spark.index.admin import fsck_index
 from refimage_spark.index.build import build_index
 from refimage_spark.sources.pages import generate_pages
@@ -66,7 +68,18 @@ def test_fsck_catches_corruption(spark, tmp_path):
     assert not out["ok"] and any("missing files" in e for e in out["errors"])
     os.rename(docs_p + ".hidden", docs_p)
 
-    # 4. stats drift (segments vs stats.json doc count)
+    # 4. unsorted dictionary: the serving lookup's binary search trusts
+    # the writer's term order, so fsck is where a bad order must show
+    dict_p = post.replace(".post", ".dict.parquet")
+    orig_dict = open(dict_p, "rb").read()
+    t = pq.read_table(dict_p)
+    pq.write_table(t.take(list(range(t.num_rows))[::-1]), dict_p)
+    out = fsck_index(d)
+    assert not out["ok"] and any("not strictly sorted" in e for e in out["errors"])
+    open(dict_p, "wb").write(orig_dict)
+    assert fsck_index(d)["ok"]
+
+    # 5. stats drift (segments vs stats.json doc count)
     import json
 
     sp = os.path.join(d, "stats.json")

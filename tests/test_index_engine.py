@@ -597,3 +597,31 @@ def test_reader_cache_lru_and_generations(tmp_path, monkeypatch):
 
     assert Q._cached("reader", p, slow_old_load) == "old"
     assert Q._cached("reader", p, lambda: "reloaded") == "new"
+
+
+def test_size_switched_forks_match_default_path(
+    spark, index_dir, tmp_path, monkeypatch
+):
+    """The three forks that only a large index selects — the Spark
+    term_stats rollup, the filtered dictionary read and the filtered df
+    read — give the default path's term_stats table and answers."""
+    import pyarrow.parquet as pq
+
+    from refimage_spark.index import build as B
+    from refimage_spark.index import query as Q
+
+    want = {q: Q.search_local(index_dir, q, k=10) for q in QUERY_SET}
+    d = str(tmp_path / "forked")
+    shutil.copytree(index_dir, d)
+    monkeypatch.setattr(B, "_TERM_STATS_LOCAL_BYTES", 0)
+    monkeypatch.setattr(SegmentReader, "DICT_PIN_LIMIT", 0)
+    monkeypatch.setattr(Q, "_DF_PIN_LIMIT", 0)
+    B.write_term_stats(spark, d)
+    assert not glob.glob(os.path.join(d, "term_stats.parquet.*"))
+    assert pq.read_table(os.path.join(d, "term_stats.parquet")).equals(
+        pq.read_table(os.path.join(index_dir, "term_stats.parquet"))
+    )
+    assert {q: Q.search_local(d, q, k=10) for q in QUERY_SET} == want
+    # the forks were taken: no pinned dictionary, no pinned df table
+    assert Q._reader(d, read_manifest(d)[0]["partition_id"])._dict == ()
+    assert Q._CACHE[("term_stats", os.path.join(d, "term_stats.parquet"))][1] is None

@@ -175,6 +175,27 @@ def test_merge_crash_between_commit_and_cleanup_is_safe(spark, small_index):
     assert after == before  # no doc served twice, scores unchanged
 
 
+def test_build_rerun_after_chained_merges_builds_nothing(spark, small_index):
+    """Re-running build_index after maintenance must not rebuild docs
+    parts a merge superseded: once the second merge's cleanup removes
+    the row that named parts 0 and 1, they have no row at all, and
+    rebuilding them would serve their docs twice."""
+    from refimage_spark.index.admin import fsck_index
+    from refimage_spark.index.merge import merge_segments
+    from refimage_spark.index.query import search_local
+
+    merge_segments(small_index, [0, 1])
+    merge_segments(small_index, [2, 3, 4])
+    queries = ["red car", "car", "beach sunset NOT person"]
+    before = {q: search_local(small_index, q, k=20) for q in queries}
+    pages = generate_pages(spark, 300, seed=42, partitions=3)
+    metrics = build_index(spark, pages, small_index, num_parts=4)
+    assert metrics["segments_written_this_run"] == 0
+    fsck = fsck_index(small_index)
+    assert fsck["ok"], fsck["errors"]
+    assert {q: search_local(small_index, q, k=20) for q in queries} == before
+
+
 def test_size_tiered_merge_policy(spark, small_index):
     """Many small streaming appends -> the policy folds same-tier
     segments together; queries identical before/after."""
@@ -445,13 +466,14 @@ def test_maintenance_lock_contender_race(spark, small_index):
     assert not os.path.exists(lock_path)
 
 
-def test_sweep_orphans_reclaims_crashed_merge(spark, tmp_path):
+def test_sweep_orphans_reclaims_crashed_merge(spark, tmp_path, monkeypatch):
     """A crash between a merge commit and the deferred source cleanup
     leaks superseded rows/files; sweep_orphans (run at compact/policy
     start) reclaims them without changing query results."""
     import glob
     import os
 
+    from refimage_spark.index import merge as M
     from refimage_spark.index.merge import merge_segments, sweep_orphans
     from refimage_spark.index.query import search_local
 
@@ -461,10 +483,12 @@ def test_sweep_orphans_reclaims_crashed_merge(spark, tmp_path):
         num_parts=8,
     )
     before = search_local(d, "red car", k=10)
-    # simulate the crash: merge with cleanup=False leaves the superseded
-    # sources on disk exactly like a policy run dying before its final
-    # _cleanup_merged_sources
-    merge_segments(d, [0, 1, 2], cleanup=False)
+    # simulate the crash: a merge whose cleanup never runs leaves the
+    # superseded sources on disk exactly like a policy run dying before
+    # its final cleanup_merged_sources
+    with monkeypatch.context() as m:
+        m.setattr(M, "cleanup_merged_sources", lambda *a: None)
+        merge_segments(d, [0, 1, 2])
     leaked_rows = [
         p
         for p in glob.glob(os.path.join(d, "manifest", "part-*.json"))

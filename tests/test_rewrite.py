@@ -13,7 +13,6 @@ import pytest
 from refimage_spark.index.admin import fsck_index
 from refimage_spark.index.build import build_index
 from refimage_spark.index.merge import (
-    _cleanup_merged_sources,
     _rewrite_segments,
     append_pages,
     compact,
@@ -21,7 +20,12 @@ from refimage_spark.index.merge import (
     update_doc_tags,
 )
 from refimage_spark.index.query import search_local
-from refimage_spark.index.segment import SegmentReader, read_manifest, seg_paths
+from refimage_spark.index.segment import (
+    SegmentReader,
+    cleanup_merged_sources,
+    read_manifest,
+    seg_paths,
+)
 from refimage_spark.sources.pages import generate_pages
 
 
@@ -65,7 +69,7 @@ def test_compact_rerun_after_commit_is_detected(index):
     post = seg_paths(index, 10)[0]
     st = os.stat(post)
     # the committed run's deferred cleanup already removed the source
-    _cleanup_merged_sources(index, [2])
+    cleanup_merged_sources(index, [2])
     again = _rewrite_segments(index, [2], 10, drop_ids=drop)
     assert again == first
     assert os.stat(post).st_mtime_ns == st.st_mtime_ns
