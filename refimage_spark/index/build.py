@@ -435,34 +435,38 @@ def _write_segments_for(
 
     return len(
         _per_segment_job(
-            spark, [(p,) for p in pending], "pid int", write_part, "pid int"
+            spark, [(p,) for p in pending], write_part, "pid int"
         ).collect()
     )
 
 
 def _per_segment_job(
-    spark: SparkSession, rows: list[tuple], row_schema: str, fn, schema: str
+    spark: SparkSession, rows: list[tuple], fn, schema: str
 ) -> DataFrame:
     """The one per-segment Spark job: the driver-side ``rows`` (tuples
-    of ``row_schema``) become ``fn(*row)`` in the tasks, each a
-    RecordBatch of ``schema`` or None for no output. Returns the
-    ``mapInArrow`` DataFrame; callers that need the results collect it.
+    of ints or int lists, shipped in the task closure) become
+    ``fn(*row)`` in the tasks, each a RecordBatch of ``schema`` or None
+    for no output. Returns the ``mapInArrow`` DataFrame; callers that
+    need the results collect it.
 
     A few rows per task, not one: per-task Spark overhead is ~5ms and
     segment builds are ~50ms, so one task per pid spent ~25% of pass B
     on scheduling at P=320. 4 waves per core keeps the tail short
-    (segments are near-equal by the hash partitioner)."""
+    (segments are near-equal by the hash partitioner). ``spark.range``
+    hands each task an even, contiguous slice of row indexes with no
+    shuffle and no Python-side DataFrame conversion."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            for row in zip(*(c.to_pylist() for c in rb.columns)):
-                out = fn(*row)
+            for i in rb.column(0).to_pylist():
+                out = fn(*rows[i])
                 if out is not None:
                     yield out
 
-    n_tasks = min(len(rows), spark.sparkContext.defaultParallelism * 4)
-    return (
-        spark.createDataFrame(rows, row_schema)
-        .repartition(max(n_tasks, 1))
-        .mapInArrow(run, schema=schema)
-    )
+    n_tasks = max(spark_tasks(spark, len(rows)), 1)
+    return spark.range(0, len(rows), 1, n_tasks).mapInArrow(run, schema)
+
+
+def spark_tasks(spark: SparkSession, n_rows: int) -> int:
+    """Tasks of a ``_per_segment_job`` over ``n_rows`` rows."""
+    return min(n_rows, spark.sparkContext.defaultParallelism * 4)

@@ -20,7 +20,7 @@ delete) and growth by in-memory append with a monolithic save. Here:
   double-serves a doc; a retry that finds its row skips the rewrite.
 - ``plan_merges``/``run_merge_policy``: size-tiered policy — streaming
   appends create many small segments; once a size tier accumulates
-  ``min_merge`` of them they merge into the next tier (cascading), so
+  ``MERGE_MIN`` of them they merge into the next tier (cascading), so
   segment count stays O(log corpus) under continuous ingest.
 
 Scale notes: compact and each policy round are one ``_rewrite_groups``
@@ -80,8 +80,12 @@ from refimage_spark.index.segment import (
     write_stats,
 )
 
-# size-tier floor of plan_merges: segments under 64 KB share one tier
+# plan_merges: segments land in tiers by log_4(bytes), those under 64 KB
+# in one tier; a tier of >= 4 segments merges its smallest <= 16
 MERGE_FLOOR_BYTES = 1 << 16
+MERGE_TIER_FACTOR = 4.0
+MERGE_MIN = 4
+MERGE_MAX = 16
 MAINT_LOCK = ".maintenance.lock"
 # 120s, not 30: NFS client attribute caching (acregmax, commonly up to
 # 60s) can serve a remote contender an mtime up to a minute stale even
@@ -171,8 +175,9 @@ def maintenance_lock(
     ``blocking=False`` (default) raises RuntimeError on live contention
     — a serving-tier caller should retry, not block behind a long
     compaction. ``blocking=True`` retries with backoff up to ``timeout``
-    seconds (streaming ingest uses this: a micro-batch append must wait
-    out a concurrent merge, not kill the stream).
+    seconds (streaming ingest's append and the merge policy use this: a
+    micro-batch append must wait out a concurrent merge, not kill the
+    stream, and a policy run waits out the append).
 
     Each judge/steal/link attempt runs under a same-host ``flock`` guard
     (``.maintenance.guard``) — two local contenders can therefore never
@@ -443,9 +448,7 @@ def _rewrite_groups(
         for job in jobs:
             rewrite(*job)
         return
-    done = _per_segment_job(
-        spark, jobs, "pids array<int>, new_pid int", rewrite, "pid int"
-    ).collect()
+    done = _per_segment_job(spark, jobs, rewrite, "pid int").collect()
     assert len(done) == len(jobs)
 
 
@@ -551,35 +554,28 @@ def merge_segments(index_dir: str, pids: list[int]) -> dict:
     return {"merged": pids, **out}
 
 
-def plan_merges(
-    index_dir: str,
-    tier_factor: float = 4.0,
-    min_merge: int = 4,
-    max_merge: int = 16,
-) -> list[list[int]]:
+def plan_merges(index_dir: str) -> list[list[int]]:
     """Size-tiered merge plan: segments land in tiers by
-    log_{tier_factor}(bytes); any tier holding >= min_merge segments
-    yields one merge of its smallest <= max_merge members. Disjoint
-    groups — safe to execute in parallel (one task per output segment)."""
+    log_{MERGE_TIER_FACTOR}(bytes); any tier holding >= MERGE_MIN
+    segments yields one merge of its smallest <= MERGE_MAX members.
+    Disjoint groups — safe to execute in parallel (one task per output
+    segment)."""
     rows = read_manifest(index_dir)
     tiers: dict[int, list[dict]] = {}
     for r in rows:
-        t = int(np.log(max(r["bytes"], MERGE_FLOOR_BYTES)) / np.log(tier_factor))
-        tiers.setdefault(t, []).append(r)
+        b = max(r["bytes"], MERGE_FLOOR_BYTES)
+        tiers.setdefault(int(np.log(b) / np.log(MERGE_TIER_FACTOR)), []).append(r)
     plans = []
     for t in sorted(tiers):
         group = sorted(tiers[t], key=lambda r: r["bytes"])
-        if len(group) >= min_merge:
-            plans.append([r["partition_id"] for r in group[:max_merge]])
+        if len(group) >= MERGE_MIN:
+            plans.append([r["partition_id"] for r in group[:MERGE_MAX]])
     return plans
 
 
 def run_merge_policy(
     index_dir: str,
     spark: SparkSession | None = None,
-    tier_factor: float = 4.0,
-    min_merge: int = 4,
-    max_merge: int = 16,
     max_rounds: int = 10,
 ) -> dict:
     """Apply the size-tiered policy until no tier overflows (merged
@@ -590,13 +586,14 @@ def run_merge_policy(
     driver. Query results are identical before/after (stats and df
     never change under merge). Holds the maintenance lock for the whole
     policy run (the groups of a round run as Spark tasks UNDER that one
-    driver-held lock)."""
+    driver-held lock), taken blocking as the streaming append takes it:
+    a live holder is waited out, up to the lock's timeout."""
     merged_total: list[list[int]] = []
     n_rounds = 0
-    with maintenance_lock(index_dir):
+    with maintenance_lock(index_dir, blocking=True):
         sweep_orphans(index_dir)  # reclaim leftovers of any crashed prior run
         for _ in range(max_rounds):
-            plans = plan_merges(index_dir, tier_factor, min_merge, max_merge)
+            plans = plan_merges(index_dir)
             if not plans:
                 break
             n_rounds += 1
@@ -660,7 +657,7 @@ def update_doc_tags(
                 return pa.record_batch([pa.array([n_hit], pa.int32())], names=["n"])
 
             segs = [(r["partition_id"],) for r in read_manifest(index_dir)]
-            hits = _per_segment_job(spark, segs, "pid int", retag, "n int").collect()
+            hits = _per_segment_job(spark, segs, retag, "n int").collect()
             rewritten = sum(r["n"] > 0 for r in hits)
 
             # 2. docs table: rewrite only the parts holding an updated doc
@@ -720,7 +717,6 @@ def append_pages(
     new_pages: DataFrame,
     index_dir: str,
     lock_blocking: bool = False,
-    lock_timeout: float = 600.0,
 ) -> dict:
     """Log-structured append: index new pages as ADDITIONAL segments.
 
@@ -736,47 +732,39 @@ def append_pages(
     of raising — streaming ingest passes it so a micro-batch landing
     during a merge retries rather than killing the whole stream.
     """
-    with maintenance_lock(
-        index_dir, blocking=lock_blocking, timeout=lock_timeout
-    ):
-        return _append_pages_locked(spark, new_pages, index_dir)
+    with maintenance_lock(index_dir, blocking=lock_blocking):
+        stats = read_stats(index_dir)
+        num_parts = stats["num_parts"]
+        tag_cols = tuple(stats.get("tag_cols", ["lang"]))
+        docs_path = os.path.join(index_dir, DOCS_DIR)
+        old_docs = _read_docs(spark, index_dir)
+        base_id, fresh = 0, new_pages
+        if old_docs is not None:
+            base_id = old_docs.agg(F.max("doc_id")).head()[0] + 1
+            # drop urls we already have (recrawl -> keep existing, matching S10)
+            fresh = new_pages.join(old_docs.select("url"), "url", "left_anti")
+        base_pid = max(r["partition_id"] for r in read_manifest(index_dir)) + 1
 
+        deduped, handles = _dedup_slim_build(fresh, tag_cols=tag_cols)
+        try:
+            # count BEFORE the write: it fills the cache the write reads, and
+            # the write re-caches every plan over docs_path with a refreshed
+            # listing, under which the anti-join would drop the new urls
+            n_appended = int(deduped.count())
+            new_docs = _assign_and_project(
+                deduped, num_parts, tag_cols
+            ).withColumn(
+                "doc_id", (F.col("doc_id") + F.lit(int(base_id))).cast("long")
+            ).withColumn("part", (F.col("part") + F.lit(int(base_pid))).cast("int"))
+            new_docs.write.mode("append").partitionBy("part").parquet(docs_path)
+        finally:
+            for h in handles:
+                h.unpersist()
 
-def _append_pages_locked(
-    spark: SparkSession, new_pages: DataFrame, index_dir: str
-) -> dict:
-    stats = read_stats(index_dir)
-    num_parts = stats["num_parts"]
-    tag_cols = tuple(stats.get("tag_cols", ["lang"]))
-    docs_path = os.path.join(index_dir, DOCS_DIR)
-    old_docs = _read_docs(spark, index_dir)
-    base_id, fresh = 0, new_pages
-    if old_docs is not None:
-        base_id = old_docs.agg(F.max("doc_id")).head()[0] + 1
-        # drop urls we already have (recrawl -> keep existing, matching S10)
-        fresh = new_pages.join(old_docs.select("url"), "url", "left_anti")
-    base_pid = max(r["partition_id"] for r in read_manifest(index_dir)) + 1
-
-    deduped, handles = _dedup_slim_build(fresh, tag_cols=tag_cols)
-    try:
-        # count BEFORE the write: it fills the cache the write reads, and
-        # the write re-caches every plan over docs_path with a refreshed
-        # listing, under which the anti-join would drop the new urls
-        n_appended = int(deduped.count())
-        new_docs = _assign_and_project(
-            deduped, num_parts, tag_cols
-        ).withColumn(
-            "doc_id", (F.col("doc_id") + F.lit(int(base_id))).cast("long")
-        ).withColumn("part", (F.col("part") + F.lit(int(base_pid))).cast("int"))
-        new_docs.write.mode("append").partitionBy("part").parquet(docs_path)
-    finally:
-        for h in handles:
-            h.unpersist()
-
-    # build segments for the new parts only (same writer machinery),
-    # THEN refresh global stats from the updated dictionaries
-    n_new = _write_segments_for(
-        spark, index_dir, part_filter=lambda p: p >= base_pid
-    )
-    _recompute_global_stats(spark, index_dir)
-    return {"appended_docs": n_appended, "new_segments": n_new}
+        # build segments for the new parts only (same writer machinery),
+        # THEN refresh global stats from the updated dictionaries
+        n_new = _write_segments_for(
+            spark, index_dir, part_filter=lambda p: p >= base_pid
+        )
+        _recompute_global_stats(spark, index_dir)
+        return {"appended_docs": n_appended, "new_segments": n_new}

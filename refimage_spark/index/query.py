@@ -5,10 +5,10 @@ Rebuild of the reference's query path (exact FAISS scan + set algebra,
 /root/reference/src/refimage/dsl.py) as:
 
   parse DSL (driver) -> global idf lookup (term_stats.parquet, filter
-  pushdown on query terms) -> ONE Spark stage: every segment evaluates
-  the whole query tree locally (docs live in exactly one segment, so
-  per-segment results are disjoint and exact) with a bounded top-k ->
-  global TakeOrdered merge of <= P*k candidate rows.
+  pushdown on query terms) -> per-segment top-k of the whole query tree
+  (docs live in exactly one segment, so per-segment results are
+  disjoint and exact) -> exact top-k merge. ``_serve_chunk`` sweeps a
+  chunk of segments to <= k rows: inline, on a pool worker or in a task.
 
 One scorer, exact and rank-identical to the DataFrame oracle: the
 vectorized term-at-a-time scan (numpy union-sum). A text query first
@@ -42,6 +42,7 @@ from refimage_spark import dsl
 from refimage_spark.index.segment import (
     STATS_FILE,
     TERM_STATS_FILE,
+    TOMBSTONES_FILE,
     SegmentReader,
     manifest_dir,
     read_manifest,
@@ -54,9 +55,9 @@ from refimage_spark.tokenizer import BM25_B, BM25_K1, py_tokens
 K1P1 = BM25_K1 + 1.0
 
 
-# ---- serving caches (mtime-keyed: append/compact/delete invalidate) -------
+# ---- serving caches (generation-keyed: append/compact/delete invalidate) ---
 
-# (kind, path) -> (mtime, value): one entry per file, holding the newest
+# (kind, path) -> (_sig, value): one entry per file, holding the newest
 # generation seen. A loader may legitimately return None (global_df's
 # too-big-to-pin vocabulary) and that None is a HIT — treating it as a
 # miss re-read the multi-million-row term_stats parquet on every query.
@@ -73,11 +74,14 @@ _READER_CACHE_CAP = 1024
 _READER_LRU: OrderedDict = OrderedDict()  # reader keys, least recent first
 
 
-def _mtime(path: str) -> float:
+def _sig(path: str) -> tuple[int, int] | None:
+    """A file's generation, (mtime ns, inode), or None if missing: a
+    commit renames in a new inode, even within one mtime tick."""
     try:
-        return os.path.getmtime(path)
+        st = os.stat(path)
     except OSError:
-        return -1.0
+        return None
+    return st.st_mtime_ns, st.st_ino
 
 
 def _touch_reader(key: tuple) -> None:
@@ -94,21 +98,29 @@ def _cached(kind: str, path: str, loader):
     is locked; loaders run OUTSIDE the lock (they do IO), so two threads
     may race the same load — the first insert wins and both use it. A
     slow load of an OLDER generation returns its value but never
-    replaces a newer cached one (that would force a pointless reload)."""
+    replaces a newer cached one (that would force a pointless reload).
+    A missing file drops its entry and is never cached."""
     key = (kind, path)
-    mtime = _mtime(path)
+    sig = _sig(path)
     with _CACHE_LOCK:
         hit = _CACHE.get(key)
-        if hit is not None and hit[0] == mtime:
+        if sig is None:
+            _CACHE.pop(key, None)
+            _READER_LRU.pop(key, None)
+        elif hit is not None and hit[0] == sig:
             if kind == "reader":
                 _touch_reader(key)
             return hit[1]
     value = loader()
+    if sig is None:
+        return value
     with _CACHE_LOCK:
         hit = _CACHE.get(key)
-        if hit is not None and hit[0] >= mtime:
-            return hit[1] if hit[0] == mtime else value
-        _CACHE[key] = (mtime, value)
+        if hit is not None and hit[0] == sig:
+            return hit[1]
+        if hit is not None and hit[0][0] > sig[0]:
+            return value  # a newer generation is cached: keep it
+        _CACHE[key] = (sig, value)
         if kind == "reader":
             _touch_reader(key)
     return value
@@ -406,7 +418,7 @@ RESULT_SCHEMA = "doc_id long, score double"
 
 def _reader(index_dir: str, pid: int) -> SegmentReader:
     """Serving cache: readers (and their lazily-loaded norms/tag maps)
-    keyed by the DOCS SIDECAR's mtime — every mutation that can change
+    keyed by the DOCS SIDECAR's generation — every mutation that can change
     what a cached reader serves (compact, tag update) rewrites the
     sidecar, while the posting file alone never changes without it."""
     docs_path = seg_paths(index_dir, pid)[2]
@@ -424,11 +436,10 @@ def _segment_topk(
     k: int,
     threshold: float,
     tomb: np.ndarray | None,
-    counters: dict | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """One segment's exact top-k — the shared kernel for both the Spark
-    and the local serving path (rank-identical by construction). A root
-    text query takes the block-pruned scan, a boolean tree eval_node."""
+    """One segment's exact top-k, the kernel ``_sweep`` runs per segment.
+    A root text query takes the block-pruned scan, a boolean tree
+    eval_node."""
     reader = _reader(index_dir, int(pid))
     if isinstance(node, dsl.TextQuery):
         return wand_topk_segment(
@@ -439,7 +450,6 @@ def _segment_topk(
             k,
             weight=node.weight,
             threshold=threshold,
-            counters=counters,
             tomb=tomb,
         )
     ids, sc = eval_node(reader, node, idfs, avgdl, threshold)
@@ -456,6 +466,12 @@ def _manifest(index_dir: str) -> list[dict]:
     )
 
 
+def _generation(index_dir: str) -> tuple:
+    """The ``_sig`` of the files a plan reads besides the segments."""
+    files = (STATS_FILE, TERM_STATS_FILE, TOMBSTONES_FILE)
+    return tuple(_sig(os.path.join(index_dir, f)) for f in files)
+
+
 def _query_plan(index_dir: str, query: str):
     """Shared per-query prep: parse, stats, idf, manifest, tombstones."""
     node = dsl.parse(query)
@@ -464,19 +480,18 @@ def _query_plan(index_dir: str, query: str):
     terms = list(dict.fromkeys(collect_terms(node)))
     idfs = make_idfs(index_dir, terms)
     pids = sorted(r["partition_id"] for r in _manifest(index_dir))
-    tomb = read_tombstones(index_dir)
+    tomb_path = os.path.join(index_dir, TOMBSTONES_FILE)
+    tomb = _cached("tombstones", tomb_path, lambda: read_tombstones(index_dir))
     return node, avgdl, idfs, pids, tomb
 
 
-def _sweep(index_dir, plan, pids, k, threshold, counters=None):
+def _sweep(index_dir, plan, pids, k, threshold):
     """Exact top-k over ``pids`` of a ``_query_plan``, one segment after
-    another: the inline path and every pool chunk run this one loop."""
+    another: the inline path and every ``_serve_chunk`` run this loop."""
     node, avgdl, idfs, _, tomb = plan
     return _merge_parts(
         [
-            _segment_topk(
-                index_dir, p, node, idfs, avgdl, k, threshold, tomb, counters
-            )
+            _segment_topk(index_dir, p, node, idfs, avgdl, k, threshold, tomb)
             for p in pids
         ],
         k,
@@ -528,6 +543,7 @@ _SHARD_BLOCK = 16
 # every node and sharding a big one.
 _REPLICATE_MAX_BYTES = 256 << 20
 _SERVE_POOL = None  # shared free-scheduling pool (replicate mode)
+_WORKERS = os.cpu_count() or 4  # shared-pool workers = shard count
 
 
 def _replicated(index_dir: str) -> bool:
@@ -566,7 +582,7 @@ def _serve_pool():
     if _SERVE_POOL is None:
         with _SERVE_POOL_LOCK:
             if _SERVE_POOL is None:
-                _SERVE_POOL = _new_executor(os.cpu_count() or 4)
+                _SERVE_POOL = _new_executor(_WORKERS)
     return _SERVE_POOL
 
 
@@ -601,8 +617,7 @@ def _serve_shards():
         with _SERVE_POOL_LOCK:
             if _SERVE_SHARDS is None:
                 _SERVE_SHARDS = [
-                    _ShardDispatcher(_new_executor(1))
-                    for _ in range(os.cpu_count() or 4)
+                    _ShardDispatcher(_new_executor(1)) for _ in range(_WORKERS)
                 ]
     return _SERVE_SHARDS
 
@@ -702,10 +717,11 @@ def _serve_chunk(
     threshold: float,
     pids: list[int] | None,
 ):
-    """Process-pool worker: ``_sweep`` over a slice of segments
-    (``pids=None`` = the whole index, replicate-mode's one-task query).
-    Re-plans from the query string (worker-local mtime-keyed caches make
-    that ~0.1 ms warm) so only tiny picklables cross the IPC boundary."""
+    """The unit of work of every pool worker and Spark task: ``_sweep``
+    over a slice of segments (``pids=None`` = the whole index,
+    replicate-mode's one-task query). Re-plans from the query string
+    (worker-local generation-keyed caches make that ~0.1 ms warm) so only
+    strings and ints cross the process boundary."""
     plan = _query_plan(index_dir, query)
     return _sweep(index_dir, plan, plan[3] if pids is None else pids, k, threshold)
 
@@ -744,8 +760,6 @@ def warm_serving_pool(index_dir: str | None = None) -> None:
     them — the replica-loads-its-shard startup a distributed serving
     tier performs. Optional; the first queries on a cold shard pay the
     same cost lazily otherwise."""
-    shards = _serve_shards()
-    n_sh = len(shards)
     pids = [] if index_dir is None else sorted(
         r["partition_id"] for r in _manifest(index_dir)
     )
@@ -761,9 +775,9 @@ def warm_serving_pool(index_dir: str | None = None) -> None:
         # no index, or an empty one (pc.index over zero rows returns -1
         # and the head-term lookup would die with an opaque IndexError
         # during tier startup): import-only warmup
-        list(_serve_pool().map(_mtime, ["/"] * (n_sh * 4), chunksize=1))
-        for sh in shards:
-            sh.ex.submit(_mtime, "/").result()
+        list(_serve_pool().map(_sig, ["/"] * (_WORKERS * 4), chunksize=1))
+        for sh in _serve_shards():
+            sh.ex.submit(_sig, "/").result()
         return
     head = str(ts["term"][int(pc.index(ts["df"], pc.max(ts["df"])).as_py())])
     if _replicated(index_dir):
@@ -774,14 +788,15 @@ def warm_serving_pool(index_dir: str | None = None) -> None:
         pool = _serve_pool()
         futs = [
             pool.submit(_serve_chunk, index_dir, head, 1, 0.0, None)
-            for _ in range(n_sh * 2)
+            for _ in range(_WORKERS * 2)
         ]
     else:
         # SHARD startup: each worker loads exactly its owned blocks —
         # the same block->shard map the serving path uses.
+        shards = _serve_shards()
         futs = [
             shards[s].submit(index_dir, head, 1, 0.0, ps)
-            for s, ps in _by_shard(pids, n_sh).items()
+            for s, ps in _by_shard(pids, len(shards)).items()
         ]
     for f in futs:
         f.result()
@@ -792,24 +807,22 @@ def search_local(
     query: str,
     k: int = 10,
     threshold: float = 0.0,
-    workers: int | None = None,
-    counters: dict | None = None,
 ) -> list[tuple[int, float]]:
     """The SERVING path: evaluate the query against the segment files
     directly — no Spark session, no job dispatch, no driver roundtrip.
-    Rank-identical to the Spark path (same per-segment kernel, same
-    global merge). Returns [(doc_id, score)] in (score desc, doc_id
-    asc) order.
+    Rank-identical to the Spark path (same unit of work, same exact
+    merge). Returns [(doc_id, score)] in (score desc, doc_id asc)
+    order.
 
     Load-adaptive execution, each unit of work one ``_sweep`` (the
     kernel is GIL-bound, so all parallelism is process-based):
     - a lone query over <= _INLINE_MAX_SEGMENTS segments sweeps inline:
       lowest latency, zero IPC;
     - otherwise a replicated index (``_replicated``) is swept in pid
-      chunks on the shared pool, with the per-query chunk budget shrunk
-      by the number of in-flight queries (floor 1), so under load each
-      query tends to ONE task and qps scales with cores; ``workers``
-      caps this fan-out;
+      chunks (``_serve_chunk``) on the shared pool, with the per-query
+      chunk budget shrunk by the number of in-flight queries (floor 1),
+      so under load each query tends to ONE task and qps scales with
+      cores;
     - a bigger index fans out to the sticky shards that own its pids.
 
     Failures are classified, with at most 4 attempts: DSLParseError (a
@@ -817,11 +830,7 @@ def search_local(
     pools, then backs off; OSError, KeyError, IndexError and ValueError
     (a query racing a compact/merge flip) back off and re-plan. The
     back-offs are 0.02, 0.04 and 0.06 s, and the 4th failure raises.
-    Any other error raises at once.
-
-    ``counters`` receives decoded_blocks/total_blocks of the block-
-    pruned text scan on the inline path (pool chunks run in worker
-    processes, which can't fill a caller-side dict)."""
+    Any other error raises at once."""
     from concurrent.futures import BrokenExecutor
 
     global _ACTIVE_QUERIES
@@ -837,13 +846,9 @@ def search_local(
         plan = _query_plan(index_dir, query)
         pids = plan[3]
         if active == 1 and len(pids) <= _INLINE_MAX_SEGMENTS:
-            return _sweep(index_dir, plan, pids, k, threshold, counters)
-        shards = _serve_shards()
-        n_sh = len(shards)
+            return _sweep(index_dir, plan, pids, k, threshold)
         if _replicated(index_dir):
-            budget = max(1, (_BUDGET_MULT * n_sh) // active)
-            if workers is not None:
-                budget = max(1, min(budget, workers))
+            budget = max(1, (_BUDGET_MULT * _WORKERS) // active)
             n_chunks = max(
                 1,
                 min(budget, (len(pids) + _CHUNK_TARGET - 1) // _CHUNK_TARGET),
@@ -856,13 +861,10 @@ def search_local(
                 for i in range(n_chunks)
             ]
         else:
-            # ``workers`` deliberately does NOT apply here: merging pid
-            # sets onto fewer shards routes segments to non-owning
-            # workers, churning their LRU caches toward the whole index
-            # — the reload storm sticky affinity exists to prevent.
+            shards = _serve_shards()
             futs = [
                 shards[s].submit(index_dir, query, k, threshold, ps)
-                for s, ps in _by_shard(pids, n_sh).items()
+                for s, ps in _by_shard(pids, len(shards)).items()
             ]
         return _merge_parts([f.result() for f in futs], k)
 
@@ -899,8 +901,11 @@ def search_index(
     query takes the one block-pruned scorer.
 
     mode:
-    - "spark": one task per segment batch, TakeOrdered merge — the
-      cluster path (segments on shared storage, 10^4+ of them).
+    - "spark": one ``_serve_chunk`` task per stride chunk of the pids,
+      then one TakeOrdered merge — the cluster path (segments on shared
+      storage, 10^4+ of them). Tasks re-plan from strings and ints and
+      raise if the index changed (``_generation``) since this call, so
+      an append, delete or compact before collect fails the query.
     - "local": the SERVING path — search_local's load-adaptive
       execution (inline sweep for a lone serving-sized query, chunked
       process-pool fan-out under load or at huge segment counts).
@@ -920,23 +925,22 @@ def search_index(
     """
     from pyspark.sql import functions as F
 
-    from refimage_spark.index.build import _per_segment_job
+    from refimage_spark.index.build import _per_segment_job, spark_tasks
 
-    node, avgdl, idfs, pids, tomb = _query_plan(index_dir, query)
+    pids = _query_plan(index_dir, query)[3]  # parses: user errors fail here
     if mode == "auto":
         mode = "local" if len(pids) <= 2048 else "spark"
 
     if mode == "local":
-        rows = search_local(
-            index_dir, query, k, threshold,
-            workers=spark.sparkContext.defaultParallelism,
-        )
+        rows = search_local(index_dir, query, k, threshold)
         return spark.createDataFrame(rows, RESULT_SCHEMA)
 
-    def run(pid: int) -> pa.RecordBatch | None:
-        ids, sc = _segment_topk(
-            index_dir, pid, node, idfs, avgdl, k, threshold, tomb
-        )
+    gen = _generation(index_dir)
+
+    def run(chunk: list[int]) -> pa.RecordBatch | None:
+        ids, sc = _serve_chunk(index_dir, query, k, threshold, chunk)
+        if _generation(index_dir) != gen:  # a generation never returns
+            raise RuntimeError(f"{index_dir} changed during a spark-mode query")
         if not ids.size:
             return None
         return pa.record_batch(
@@ -944,8 +948,9 @@ def search_index(
             names=["doc_id", "score"],
         )
 
+    n = spark_tasks(spark, len(pids))  # one chunk per task
     cand = _per_segment_job(
-        spark, [(p,) for p in pids], "pid int", run, RESULT_SCHEMA
+        spark, [(pids[i::n],) for i in range(n)], run, RESULT_SCHEMA
     )
     return cand.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -962,7 +967,7 @@ def index_stats(index_dir: str) -> dict:
     # the pool that serves this index: the index's bytes pick the mode
     if _replicated(index_dir):
         pool_started = _SERVE_POOL is not None
-        pool_workers = (os.cpu_count() or 4) if pool_started else 0
+        pool_workers = _WORKERS if pool_started else 0
     else:
         pool_started = _SERVE_SHARDS is not None
         pool_workers = len(_SERVE_SHARDS) if pool_started else 0

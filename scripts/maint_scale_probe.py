@@ -50,7 +50,7 @@ def main():
     assert not (set(victims) & {d for d, _ in post})
 
     t0 = time.perf_counter()
-    pol = run_merge_policy(idx, spark=spark, min_merge=4)
+    pol = run_merge_policy(idx, spark=spark)
     n_now = len(read_manifest(idx))
     print(f"merge policy: {len(pol['merged_groups'])} groups, "
           f"{time.perf_counter()-t0:.0f}s -> {n_now} segments")

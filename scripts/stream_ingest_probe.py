@@ -55,13 +55,8 @@ def main() -> None:
 
     def churn() -> None:
         while not stop.is_set():
-            try:
-                out = run_merge_policy(
-                    idx, spark=None, min_merge=4, max_rounds=1
-                )
-                merge_rounds.append(out)
-            except RuntimeError:
-                pass  # lock contention with an append: expected, retry later
+            # waits out an append holding the maintenance lock
+            merge_rounds.append(run_merge_policy(idx, spark=None, max_rounds=1))
             stop.wait(5.0)
 
     churner = threading.Thread(target=churn, daemon=True)

@@ -501,16 +501,18 @@ class _FakeExecutor:
 
 def test_search_local_routing(index_dir, monkeypatch):
     """Routing without processes, on the serve_wide shape (160 segments,
-    4 shards): the inline choice, the replicate pid chunks per in-flight
-    query count with and without ``workers``, and shard mode's by-shard
-    pid sets."""
+    4 workers): the inline choice, the replicate pid chunks per in-flight
+    query count (with no shard executors built), and shard mode's
+    by-shard pid sets."""
     from refimage_spark.index import query as Q
 
     log: list = []
     pool = _FakeExecutor(log)
     shards = [_FakeExecutor(log, s) for s in range(4)]
+    monkeypatch.setattr(Q, "_WORKERS", 4)
     monkeypatch.setattr(Q, "_serve_pool", lambda: pool)
-    monkeypatch.setattr(Q, "_serve_shards", lambda: shards)
+    built: list[int] = []
+    monkeypatch.setattr(Q, "_serve_shards", lambda: built.append(1) or shards)
     swept: list[int] = []
 
     def fake_topk(index_dir, pid, *a, **kw):
@@ -520,14 +522,14 @@ def test_search_local_routing(index_dir, monkeypatch):
     monkeypatch.setattr(Q, "_segment_topk", fake_topk)
     plan = Q._query_plan(index_dir, "red car")
 
-    def route(n_pids, active=1, workers=None):
+    def route(n_pids, active=1):
         monkeypatch.setattr(
             Q, "_query_plan", lambda *a: (*plan[:3], list(range(n_pids)), None)
         )
         monkeypatch.setattr(Q, "_ACTIVE_QUERIES", active - 1)
         log.clear()
         swept.clear()
-        assert Q.search_local(index_dir, "red car", k=10, workers=workers) == []
+        assert Q.search_local(index_dir, "red car", k=10) == []
         assert Q._ACTIVE_QUERIES == active - 1
         return list(log)
 
@@ -537,26 +539,36 @@ def test_search_local_routing(index_dir, monkeypatch):
 
     monkeypatch.setattr(Q, "_REPLICATE_MAX_BYTES", 1 << 60)
     pids = list(range(160))
-    for workers, want in [
-        (None, {1: 5, 2: 4, 4: 2, 8: 1}),
-        (2, {1: 2, 2: 2, 4: 2, 8: 1}),
-    ]:
-        for active, n in want.items():
-            got = route(160, active, workers)
-            assert got == [
-                (None, (Q._serve_chunk, index_dir, "red car", 10, 0.0, pids[i::n]))
-                for i in range(n)
-            ], (workers, active)
+    for active, n in {1: 5, 2: 4, 4: 2, 8: 1}.items():
+        got = route(160, active)
+        assert got == [
+            (None, (Q._serve_chunk, index_dir, "red car", 10, 0.0, pids[i::n]))
+            for i in range(n)
+        ], active
+    assert not built
 
     monkeypatch.setattr(Q, "_REPLICATE_MAX_BYTES", 0)
     owned = {
         s: [p for p in pids if (p // 16) % 4 == s] for s in range(4)
     }
-    for workers in (None, 2):
-        got = route(160, 2, workers)
-        assert sorted(got) == [
-            (s, (index_dir, "red car", 10, 0.0, owned[s])) for s in range(4)
-        ]
+    assert sorted(route(160, 2)) == [
+        (s, (index_dir, "red car", 10, 0.0, owned[s])) for s in range(4)
+    ]
+
+
+def test_broken_flag_fallback():
+    """``_broken`` is the one read of ProcessPoolExecutor's private flag:
+    an executor without it counts as healthy, and the flag set to True
+    or to the reason string the stdlib stores counts as broken."""
+    from types import SimpleNamespace
+
+    from refimage_spark.index import query as Q
+
+    assert Q._broken(object()) is False
+    assert Q._broken(SimpleNamespace(_broken=True)) is True
+    assert Q._broken(
+        SimpleNamespace(_broken="A child process terminated abruptly")
+    ) is True
 
 
 def test_reader_cache_lru_and_generations(tmp_path, monkeypatch):

@@ -34,6 +34,62 @@ def test_delete_masks_immediately(spark, small_index):
     assert after[0].score == pytest.approx(before[1].score, rel=1e-12)
 
 
+def test_tombstones_cached_until_the_file_changes(spark, small_index, monkeypatch):
+    """The serving plan reads the tombstone file once per generation
+    (keyed by mtime and inode, as stats and the manifest are): two
+    queries with deletes pending read it once, a later delete is masked
+    on the next query even when its file carries the same mtime, and
+    after compact queries see no tombstones and nothing stays cached."""
+    from refimage_spark.index import query as Q
+    from refimage_spark.index.segment import TOMBSTONES_FILE
+
+    tomb_path = os.path.join(small_index, TOMBSTONES_FILE)
+
+    reads: list = []
+    real = Q.read_tombstones
+
+    def spy(index_dir):
+        reads.append(index_dir)
+        return real(index_dir)
+
+    monkeypatch.setattr(Q, "read_tombstones", spy)
+    top = Q.search_local(small_index, "red car", k=5)
+    delete_docs(small_index, [top[0][0]])
+    n0 = len(reads)
+    first = Q.search_local(small_index, "red car", k=5)
+    assert Q.search_local(small_index, "red car", k=5) == first
+    assert len(reads) == n0 + 1
+    assert first[0] == top[1]
+
+    mtime_ns = os.stat(tomb_path).st_mtime_ns
+    delete_docs(small_index, [first[0][0]])
+    os.utime(tomb_path, ns=(mtime_ns, mtime_ns))  # one timestamp tick
+    after = Q.search_local(small_index, "red car", k=5)
+    assert len(reads) == n0 + 2
+    assert after[0] == top[2]
+    assert not {top[0][0], first[0][0]} & {d for d, _ in after}
+
+    compact(spark, small_index)  # refreshes stats, so scores shift
+    assert Q._query_plan(small_index, "red car")[4] is None
+    assert ("tombstones", tomb_path) not in Q._CACHE
+    got = Q.search_local(small_index, "red car", k=5)
+    assert len(got) == 5
+    assert not {top[0][0], first[0][0]} & {d for d, _ in got}
+
+
+def test_spark_query_refuses_a_changed_index(spark, small_index):
+    """Spark-mode tasks re-plan on the executors; a delete that lands
+    between planning and collect fails the query instead of mixing
+    tombstone generations in one answer, and a new call sees it."""
+    df = search_index(spark, small_index, "red car", k=5, mode="spark")
+    want = df.collect()
+    delete_docs(small_index, [want[0].doc_id])
+    with pytest.raises(Exception, match="changed during a spark-mode query"):
+        df.collect()
+    got = search_index(spark, small_index, "red car", k=5, mode="spark")
+    assert got.collect()[0] == want[1]
+
+
 def test_compact_drops_docs_physically(spark, small_index):
     top = search_index(spark, small_index, "red car", k=3).collect()
     victims = [r.doc_id for r in top[:2]]
@@ -108,13 +164,13 @@ def test_wand_rank_safe_after_stats_drift(spark, small_index):
         assert a.score == pytest.approx(b, rel=1e-12)
 
 
-def test_wand_rank_identity_under_tombstones(spark, small_index):
+def test_wand_rank_identity_under_tombstones(spark, small_index, monkeypatch):
     """Tombstone-aware WAND: with deletes pending compaction, the WAND
     path must (a) run at all (it used to force the full-eval fallback),
     (b) exclude tombstoned docs, and (c) free their top-k slots — rank-
     and score-identical to the unpruned masked reference, on BOTH the
     spark-mode search and the serving path."""
-    from refimage_spark.index.query import search_local
+    from refimage_spark.index import query as Q
 
     # tombstone half of the current top-10 so slots must be refilled
     base = search_index(spark, small_index, "red car", k=10,
@@ -129,11 +185,17 @@ def test_wand_rank_identity_under_tombstones(spark, small_index):
     assert [r.doc_id for r in wand] == full_ids.tolist()
     for a, b in zip(wand, full_sc):
         assert a.score == pytest.approx(b, rel=1e-12)
-    # serving path: counters prove the block-pruned scorer actually ran
-    ctr: dict = {}
-    local = search_local(small_index, "red car", k=10,
-                         counters=ctr)
-    assert ctr.get("total_blocks", 0) > 0
+    # serving path: a spy proves the block-pruned scorer actually ran
+    pruned = Q.wand_topk_segment
+    calls: list = []
+
+    def spy(*a, **kw):
+        calls.append(kw["tomb"])
+        return pruned(*a, **kw)
+
+    monkeypatch.setattr(Q, "wand_topk_segment", spy)
+    local = Q.search_local(small_index, "red car", k=10)
+    assert calls and all(t is not None for t in calls)
     assert [d for d, _ in local] == full_ids.tolist()
 
 
@@ -210,15 +272,44 @@ def test_size_tiered_merge_policy(spark, small_index):
             search_index(spark, small_index, q, k=20).collect()]
         for q in ["red car", "car", "beach sunset NOT person"]
     }
-    assert plan_merges(small_index, min_merge=4), "appends must overflow a tier"
-    out = run_merge_policy(small_index, min_merge=4)
+    assert plan_merges(small_index), "appends must overflow a tier"
+    out = run_merge_policy(small_index)
     assert out["merged_groups"]
     assert len(read_manifest(small_index)) < n_before
-    assert not plan_merges(small_index, min_merge=4)  # converged
+    assert not plan_merges(small_index)  # converged
     for q, want in before.items():
         got = [(r.doc_id, r.score) for r in
                search_index(spark, small_index, q, k=20).collect()]
         assert got == want, q
+
+
+def test_merge_policy_waits_out_live_holder(small_index):
+    """A policy run that meets a live maintenance holder (a streaming
+    append, a compact) waits for its release instead of raising "index
+    maintenance already running"."""
+    import threading
+    import time
+
+    from refimage_spark.index.merge import maintenance_lock, run_merge_policy
+
+    entered = threading.Event()
+    released: list[float] = []
+
+    def holder():
+        with maintenance_lock(small_index):
+            entered.set()
+            time.sleep(1.0)
+            released.append(time.monotonic())
+
+    t = threading.Thread(target=holder)
+    t.start()
+    try:
+        assert entered.wait(5.0)
+        run_merge_policy(small_index)
+        assert released and time.monotonic() >= released[0]
+    finally:
+        t.join(10.0)
+    assert not t.is_alive()
 
 
 def test_merge_segments_preserves_results(spark, small_index):

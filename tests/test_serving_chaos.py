@@ -57,7 +57,7 @@ def _kill_worker_mid_storm(chaos_index, monkeypatch, mode):
         )
         victim = shards[owning[0]].ex
     # make sure its worker exists, then storm + kill
-    victim.submit(Q._mtime, "/").result()
+    victim.submit(Q._sig, "/").result()
     errors: list = []
     results: list = []
 

@@ -196,11 +196,12 @@ def test_stream_ingest_during_maintenance_equals_batch_twin(spark, tmp_path):
     h.start()
     q = stream_ingest_pages(spark, inbox, idx, str(tmp_path / "ckpt"), True)
     # merge policy runs CONCURRENTLY with the streaming appends — each
-    # contends for the maintenance lock; the blocking append waits it out
+    # contends for the maintenance lock, and both take it blocking: the
+    # append waits out a policy run and a policy run waits out an append
     for _ in range(3):
-        run_merge_policy(idx, spark=None, min_merge=4)
+        run_merge_policy(idx, spark=None)
     assert q.awaitTermination(600), "streaming ingest did not drain"
-    run_merge_policy(idx, spark=None, min_merge=4)  # settle remaining tiers
+    run_merge_policy(idx, spark=None)  # settle remaining tiers
     stop.set()
     h.join(30.0)
     assert not errors, errors
