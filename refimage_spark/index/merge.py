@@ -11,8 +11,8 @@ delete) and growth by in-memory append with a monolithic save. Here:
 - ``delete_docs``   : tombstone rows only; queries mask them (O(1)).
 - ``compact`` / ``merge_segments``: ONE rewriter, ``_rewrite_segments``,
   writes the docs of a group of segments, minus an optional drop set,
-  as one new segment: compact is it on each ``[pid]`` with the
-  tombstones, a merge on a group. Scores depend only on (tf, dl,
+  as one new segment: compact is it on each ``[pid]`` that holds a
+  tombstoned doc, a merge on a group. Scores depend only on (tf, dl,
   global stats), so exactness holds. ONE COMMIT: the new segment's
   atomic manifest row carries ``merged_from`` and ``read_manifest``
   drops superseded rows, so a concurrent query reads a complete
@@ -360,11 +360,12 @@ def _rewrite_segments(
     pids: list[int],
     new_pid: int,
     drop_ids: np.ndarray | None = None,
-) -> dict:
+) -> dict | None:
     """Write the docs of segments ``pids``, minus ``drop_ids``, as
     segment ``new_pid``, and commit it with one atomic manifest row
     carrying ``merged_from=pids`` (the supersession commit). Returns
-    {"new_pid", "n_docs", "n_postings"}.
+    {"new_pid", "n_docs", "n_postings"}, or None, writing nothing, when
+    ``drop_ids`` holds none of their docs.
 
     IDEMPOTENT: a retry (Spark task re-run, crash-then-rerun) whose row
     for ``new_pid`` already supersedes ``pids`` returns that row and
@@ -386,6 +387,8 @@ def _rewrite_segments(
     ids = np.concatenate([n[0] for n in norms])
     order = np.argsort(ids)
     keep = order if drop_ids is None else order[~np.isin(ids[order], drop_ids)]
+    if drop_ids is not None and keep.size == ids.size:
+        return None  # the copy would be identical
     tags = pa.concat_arrays([n[2].cast(pa.list_(pa.string())) for n in norms])
     parts = [rd.read_all_postings() for rd in readers]
     vocab = pc.unique(pa.chunked_array([p[0] for p in parts], pa.string()))
@@ -424,36 +427,40 @@ def _rewrite_groups(
     index_dir: str,
     groups: list[list[int]],
     drop_tombstones: bool = False,
-) -> None:
-    """Rewrite each group of segments as one new segment. Output pids
-    are pre-assigned from max+1 on the driver (tasks must not race on
-    max(manifest)+1). One ``_per_segment_job`` runs the groups; a lone
-    group, or no ``spark``, runs on the driver.
+) -> list[list[int]]:
+    """Rewrite each group of segments as one new segment; returns the
+    groups rewritten. Output pids are pre-assigned from max+1 on the
+    driver (tasks must not race on max(manifest)+1). One
+    ``_per_segment_job`` runs the groups; a lone group, or no ``spark``,
+    runs on the driver.
 
-    ``drop_tombstones`` drops the tombstoned docs; each rewrite side-reads
-    the tombstones itself (shared storage at cluster scale), which costs
-    the same order as the rewrite's own membership mask — millions of
-    tombstones would otherwise be pickled into every task.
-    Source cleanup stays with the caller, deferred to the end of its run
-    so readers face one flip window per run."""
+    ``drop_tombstones`` drops the tombstoned docs, and skips a group that
+    holds none; each rewrite side-reads the tombstones itself (shared
+    storage at cluster scale), which costs the same order as the
+    rewrite's own membership mask — millions of tombstones would
+    otherwise be pickled into every task. Source cleanup stays with the
+    caller, deferred to the end of its run so readers face one flip
+    window per run."""
     base = max(r["partition_id"] for r in read_manifest(index_dir)) + 1
     jobs = [(g, base + i) for i, g in enumerate(groups)]
 
-    def rewrite(pids: list[int], new_pid: int) -> pa.RecordBatch:
+    def rewrite(pids: list[int], new_pid: int) -> pa.RecordBatch | None:
         drop = read_tombstones(index_dir) if drop_tombstones else None
-        _rewrite_segments(index_dir, pids, new_pid, drop)
+        if _rewrite_segments(index_dir, pids, new_pid, drop) is None:
+            return None
         return pa.record_batch([pa.array([new_pid], pa.int32())], names=["pid"])
 
     if spark is None or len(jobs) == 1:
-        for job in jobs:
-            rewrite(*job)
-        return
-    done = _per_segment_job(spark, jobs, rewrite, "pid int").collect()
-    assert len(done) == len(jobs)
+        done = {p for g, p in jobs if rewrite(g, p) is not None}
+    else:
+        rows = _per_segment_job(spark, jobs, rewrite, "pid int").collect()
+        done = {r.pid for r in rows}
+    assert drop_tombstones or len(done) == len(jobs)
+    return [g for g, p in jobs if p in done]
 
 
 def compact(spark: SparkSession, index_dir: str) -> dict:
-    """Drop tombstoned docs physically; rewrite segments + stats.
+    """Drop tombstoned docs physically; rewrite their segments + stats.
 
     Holds the maintenance lock end-to-end, which is what makes the
     final unconditional tombstone removal correct: no delete_docs can
@@ -486,20 +493,21 @@ def compact(spark: SparkSession, index_dir: str) -> dict:
             ),
         )
 
-        # 2. rewrite each segment without the tombstoned docs under a NEW
-        # pid (the supersession commit): a concurrent search always reads
-        # a complete generation of every segment, and a crash mid-compact
-        # leaves a correct, re-runnable index
+        # 2. rewrite each segment holding a tombstoned doc without those
+        # docs under a NEW pid (the supersession commit): a concurrent
+        # search always reads a complete generation of every segment, and
+        # a crash mid-compact leaves a correct, re-runnable index
         pids = sorted(r["partition_id"] for r in read_manifest(index_dir))
-        _rewrite_groups(spark, index_dir, [[p] for p in pids], drop_tombstones=True)
+        groups = [[p] for p in pids]
+        done = _rewrite_groups(spark, index_dir, groups, drop_tombstones=True)
 
         # 3. drop superseded sources; tombstones go LAST — they keep
         # masking the deleted docs in any old-generation segment a
         # concurrent query may still be reading during the flip window
-        cleanup_merged_sources(index_dir, pids)
+        cleanup_merged_sources(index_dir, [p for (p,) in done])
         os.remove(tomb_path)
         _recompute_global_stats(spark, index_dir)  # AFTER segments reflect removal
-        return {"compacted": int(tomb.size), "segments": len(pids)}
+        return {"compacted": int(tomb.size), "segments": len(done)}
 
 
 def sweep_orphans(index_dir: str) -> int:

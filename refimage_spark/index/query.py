@@ -510,21 +510,10 @@ _ACTIVE_LOCK = threading.Lock()
 # at 32 segments — futures overhead + GIL convoy), and process fan-out
 # only pays off once a query sweeps enough segments to amortize
 # ~2 ms/task of IPC (measured crossover: inline p50 0.17s at 256
-# segments vs 0.06s pooled at 512 — BENCH/BASELINE.md).
+# segments vs 0.06s pooled at 512 — BENCH/BASELINE.md). Past it, or
+# under load, a replicated query takes its share of the pool's workers
+# (search_local).
 _INLINE_MAX_SEGMENTS = 128
-# replicate-mode segments per chunk. Measured at 320 segments / 98 MB,
-# local[32]: chunk 16 -> p50 14ms / 8-client-to-1-client ratio 2.8-3.5;
-# chunk 32 -> p50 21ms / ratio 4.1-4.4 with IDENTICAL loaded throughput
-# (qps_8 is budget-bound). Under load the budget below caps the chunk
-# count, so this mainly sets LONE-query fan-out.
-_CHUNK_TARGET = 32
-# replicate-mode per-query chunk budget = _BUDGET_MULT * workers /
-# active. 2 (not 1) measured best at 320 segments: active=8 then yields
-# 8 chunks/query of ~40 segments — small enough units that the shared
-# pool load-balances across all 32 workers instead of convoying behind
-# 4 big chunks (qps_8 198 -> 228-233, qps_16 277 -> 300, lone-query
-# latency unchanged); 4 regresses (IPC per wave dominates again).
-_BUDGET_MULT = 2
 # affinity unit: segment pid p belongs to shard (p // _SHARD_BLOCK) % n.
 # Small enough that mid-size indexes spread across many shards (320
 # segments -> 20 active shards), large enough that one block is a
@@ -533,8 +522,8 @@ _BUDGET_MULT = 2
 _SHARD_BLOCK = 16
 # REPLICATE vs SHARD: while the whole index's reader state fits any one
 # worker comfortably (keyed on posting BYTES, the proxy for pinned dict/
-# norm memory — NOT segment count, which says nothing about size), every
-# query runs as ONE task on any worker: each worker replicates the full
+# norm memory — NOT segment count, which says nothing about size), any
+# chunk of any query runs on any worker: each worker replicates the full
 # cache set and throughput reaches cores/(CPU-per-query) with no cross-
 # shard convoy. Past the bound, workers cannot all hold everything —
 # queries fan out across STICKY shards that own disjoint slices
@@ -543,7 +532,12 @@ _SHARD_BLOCK = 16
 # every node and sharding a big one.
 _REPLICATE_MAX_BYTES = 256 << 20
 _SERVE_POOL = None  # shared free-scheduling pool (replicate mode)
-_WORKERS = os.cpu_count() or 4  # shared-pool workers = shard count
+# shared-pool workers = shard count: the cores this process may run on
+_WORKERS = (
+    len(os.sched_getaffinity(0))
+    if hasattr(os, "sched_getaffinity")
+    else os.cpu_count() or 4
+)
 
 
 def _replicated(index_dir: str) -> bool:
@@ -752,17 +746,17 @@ def _heal_pools() -> None:
             sh.heal_if_broken()
 
 
-def warm_serving_pool(index_dir: str | None = None) -> None:
-    """Serving-tier startup warmup: pre-import the kernel modules in
-    every shard (one-time ~0.3 s/worker of numpy/pyarrow) and, given an
-    ``index_dir``, have each shard load the caches for EXACTLY the
-    segments it owns (block -> shard map) by scoring one head-term query over
-    them — the replica-loads-its-shard startup a distributed serving
-    tier performs. Optional; the first queries on a cold shard pay the
-    same cost lazily otherwise."""
-    pids = [] if index_dir is None else sorted(
-        r["partition_id"] for r in _manifest(index_dir)
-    )
+def warm_serving_pool(index_dir: str) -> None:
+    """Serving-tier startup warmup: start the pool kind that serves
+    ``index_dir`` (``_replicated``), pre-import the kernel modules in its
+    workers (one-time ~0.3 s/worker of numpy/pyarrow) and have them load
+    the index's caches by scoring one head-term query: every shared-pool
+    worker the whole index, each shard EXACTLY the segments it owns
+    (block -> shard map) — the replica-loads-its-shard startup a
+    distributed serving tier performs. An empty index warms the imports
+    of the shared pool only. Optional; the first queries on a cold pool
+    pay the same cost lazily otherwise."""
+    pids = sorted(r["partition_id"] for r in _manifest(index_dir))
     ts = None
     if pids:
         # the warm query must actually score postings (an absent term
@@ -772,12 +766,10 @@ def warm_serving_pool(index_dir: str | None = None) -> None:
             os.path.join(index_dir, TERM_STATS_FILE), columns=["term", "df"]
         )
     if ts is None or ts.num_rows == 0:
-        # no index, or an empty one (pc.index over zero rows returns -1
-        # and the head-term lookup would die with an opaque IndexError
-        # during tier startup): import-only warmup
+        # an empty index (pc.index over zero rows returns -1 and the
+        # head-term lookup would die with an opaque IndexError during
+        # tier startup): import-only warmup of the pool it routes to
         list(_serve_pool().map(_sig, ["/"] * (_WORKERS * 4), chunksize=1))
-        for sh in _serve_shards():
-            sh.ex.submit(_sig, "/").result()
         return
     head = str(ts["term"][int(pc.index(ts["df"], pc.max(ts["df"])).as_py())])
     if _replicated(index_dir):
@@ -818,11 +810,12 @@ def search_local(
     kernel is GIL-bound, so all parallelism is process-based):
     - a lone query over <= _INLINE_MAX_SEGMENTS segments sweeps inline:
       lowest latency, zero IPC;
-    - otherwise a replicated index (``_replicated``) is swept in pid
-      chunks (``_serve_chunk``) on the shared pool, with the per-query
-      chunk budget shrunk by the number of in-flight queries (floor 1),
-      so under load each query tends to ONE task and qps scales with
-      cores;
+    - otherwise a replicated index (``_replicated``) is swept on the
+      shared pool in stride pid chunks (``_serve_chunk``), one per
+      worker of the query's share: ``_WORKERS // active`` (floor 1, at
+      most one chunk per segment). A lone query spreads over every
+      worker; under load each query tends to ONE task and qps scales
+      with cores;
     - a bigger index fans out to the sticky shards that own its pids.
 
     Failures are classified, with at most 4 attempts: DSLParseError (a
@@ -839,7 +832,7 @@ def search_local(
 
     def attempt():
         # admission snapshot taken PER ATTEMPT: a self-heal retry during a
-        # load spike must see current load, not the budget captured at
+        # load spike must see current load, not the share captured at
         # query entry (a stale too-generous fan-out under-admits everyone)
         with _ACTIVE_LOCK:
             active = _ACTIVE_QUERIES
@@ -848,11 +841,7 @@ def search_local(
         if active == 1 and len(pids) <= _INLINE_MAX_SEGMENTS:
             return _sweep(index_dir, plan, pids, k, threshold)
         if _replicated(index_dir):
-            budget = max(1, (_BUDGET_MULT * _WORKERS) // active)
-            n_chunks = max(
-                1,
-                min(budget, (len(pids) + _CHUNK_TARGET - 1) // _CHUNK_TARGET),
-            )
+            n_chunks = max(1, min(len(pids), _WORKERS // active))
             pool = _serve_pool()
             futs = [
                 pool.submit(

@@ -1,8 +1,9 @@
 """Maintenance certification at 10x bench scale: 2M docs / 1280 segments.
 
 Builds the corpus, tombstones ~20k docs, compacts (one rewrite task per
-segment), runs the size-tiered merge policy with Spark fan-out, then
-deep-fscks every byte and asserts query rank-safety end-to-end.
+segment that holds a tombstoned doc), runs the size-tiered merge policy
+with Spark fan-out, then deep-fscks every byte and asserts query
+rank-safety end-to-end.
 
 Usage (needs executor-scale heap — the 2g/core rule):
   SPARK_GRAFT_DRIVER_MEM=64g python scripts/maint_scale_probe.py

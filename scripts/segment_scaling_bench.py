@@ -12,12 +12,14 @@ from /proc, so Linux only) while those queries run.
 
 Usage: python scripts/segment_scaling_bench.py [n_pages]
 Prints one JSON line per P, then a markdown table for BENCH/BASELINE.md.
+Each P's index is built in a temp dir and removed once its row is printed.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import tempfile
 import threading
@@ -104,32 +106,35 @@ def main() -> None:
     rows = []
     for P in PARTS:
         d = tempfile.mkdtemp(prefix=f"segscale_{P}_")
-        build_index(spark, pages, d, num_parts=P)
-        search_local(d, QUERIES[0], k=10)  # warm readers/dicts/stats
-        warm_serving_pool(d)  # tier startup: warm pool-worker caches
-        lat = []
-        for _ in range(REPS):
-            for q in QUERIES:
-                t0 = time.perf_counter()
-                search_local(d, q, k=10)
-                lat.append(time.perf_counter() - t0)
-        t0 = time.perf_counter()
-        search_index(spark, d, QUERIES[0], k=10, mode="spark").collect()
-        spark_cold = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        search_index(spark, d, QUERIES[0], k=10, mode="spark").collect()
-        spark_warm = time.perf_counter() - t0
-        spark_lat, pss = spark_queries(spark, d)
-        row = {
-            "segments": P,
-            "local_p50_sec": round(pctl(lat, 0.5), 4),
-            "local_p95_sec": round(pctl(lat, 0.95), 4),
-            "spark_dispatch_sec": round(min(spark_cold, spark_warm), 4),
-            "spark_p50_sec": round(pctl(spark_lat, 0.5), 4),
-            "executor_pss_mb": round(pss, 1),
-        }
-        rows.append(row)
-        print(json.dumps(row), flush=True)
+        try:
+            build_index(spark, pages, d, num_parts=P)
+            search_local(d, QUERIES[0], k=10)  # warm readers/dicts/stats
+            warm_serving_pool(d)  # tier startup: warm pool-worker caches
+            lat = []
+            for _ in range(REPS):
+                for q in QUERIES:
+                    t0 = time.perf_counter()
+                    search_local(d, q, k=10)
+                    lat.append(time.perf_counter() - t0)
+            t0 = time.perf_counter()
+            search_index(spark, d, QUERIES[0], k=10, mode="spark").collect()
+            spark_cold = time.perf_counter() - t0
+            t0 = time.perf_counter()
+            search_index(spark, d, QUERIES[0], k=10, mode="spark").collect()
+            spark_warm = time.perf_counter() - t0
+            spark_lat, pss = spark_queries(spark, d)
+            row = {
+                "segments": P,
+                "local_p50_sec": round(pctl(lat, 0.5), 4),
+                "local_p95_sec": round(pctl(lat, 0.95), 4),
+                "spark_dispatch_sec": round(min(spark_cold, spark_warm), 4),
+                "spark_p50_sec": round(pctl(spark_lat, 0.5), 4),
+                "executor_pss_mb": round(pss, 1),
+            }
+            rows.append(row)
+            print(json.dumps(row), flush=True)
+        finally:
+            shutil.rmtree(d, ignore_errors=True)
     print(
         "\n| segments | local p50 | local p95 | spark-dispatch "
         "| spark p50 | executor PSS |"

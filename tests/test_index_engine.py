@@ -306,9 +306,9 @@ def test_index_stats_serving_observability(spark, index_dir, monkeypatch):
         s = Q.index_stats(index_dir)["serving"]
         return s["pool_started"], s["pool_workers"]
 
-    Q.warm_serving_pool()  # starts the shared pool and the shards
+    Q._serve_pool(), Q._serve_shards()  # start both pool kinds
     monkeypatch.setattr(Q, "_REPLICATE_MAX_BYTES", 1 << 60)  # replicate
-    assert pool_keys() == (True, os.cpu_count() or 4)
+    assert pool_keys() == (True, Q._WORKERS)
     monkeypatch.setattr(Q, "_SERVE_POOL", None)  # shards alone don't serve
     assert pool_keys() == (False, 0)
     monkeypatch.setattr(Q, "_REPLICATE_MAX_BYTES", 0)  # shard
@@ -502,8 +502,9 @@ class _FakeExecutor:
 def test_search_local_routing(index_dir, monkeypatch):
     """Routing without processes, on the serve_wide shape (160 segments,
     4 workers): the inline choice, the replicate pid chunks per in-flight
-    query count (with no shard executors built), and shard mode's
-    by-shard pid sets."""
+    query count — each query's share of the workers, at most one chunk
+    per pid, with no shard executors built — and shard mode's by-shard
+    pid sets."""
     from refimage_spark.index import query as Q
 
     log: list = []
@@ -539,12 +540,19 @@ def test_search_local_routing(index_dir, monkeypatch):
 
     monkeypatch.setattr(Q, "_REPLICATE_MAX_BYTES", 1 << 60)
     pids = list(range(160))
-    for active, n in {1: 5, 2: 4, 4: 2, 8: 1}.items():
+    for active, n in {1: 4, 2: 2, 4: 1, 8: 1}.items():
         got = route(160, active)
         assert got == [
             (None, (Q._serve_chunk, index_dir, "red car", 10, 0.0, pids[i::n]))
             for i in range(n)
         ], active
+        assert len(got) <= Q._WORKERS
+    # fewer pids than the query's share: one chunk per pid
+    monkeypatch.setattr(Q, "_WORKERS", 8)
+    assert route(3, active=2) == [
+        (None, (Q._serve_chunk, index_dir, "red car", 10, 0.0, [p]))
+        for p in range(3)
+    ]
     assert not built
 
     monkeypatch.setattr(Q, "_REPLICATE_MAX_BYTES", 0)

@@ -107,6 +107,33 @@ def test_compact_drops_docs_physically(spark, small_index):
     assert len(res) == 5
 
 
+def test_compact_rewrites_only_segments_with_tombstones(spark, small_index):
+    """Compact supersedes only the segment holding the deleted docs; the
+    others keep their pid and bytes."""
+    from refimage_spark.index.admin import fsck_index
+    from refimage_spark.index.query import search_local
+
+    rows0 = {r["partition_id"]: r["checksum"] for r in read_manifest(small_index)}
+    ids1 = SegmentReader(small_index, 1).doc_lengths()[0]
+    victims = ids1[:2].tolist()
+    n0 = read_stats(small_index)["n_docs"]
+    delete_docs(small_index, victims)
+    out = compact(spark, small_index)
+    assert out == {"compacted": 2, "segments": 1}
+    rows1 = {r["partition_id"]: r for r in read_manifest(small_index)}
+    kept = {p: c for p, c in rows0.items() if p != 1}
+    assert {p: rows1[p]["checksum"] for p in rows1 if p in kept} == kept
+    (new,) = set(rows1) - set(kept)
+    assert rows1[new]["merged_from"] == [1]
+    new_ids = SegmentReader(small_index, new).doc_lengths()[0]
+    assert new_ids.tolist() == ids1[2:].tolist()
+    assert read_stats(small_index)["n_docs"] == n0 - 2
+    for q in ["red car", "car", "beach sunset NOT person"]:
+        assert not set(victims) & {d for d, _ in search_local(small_index, q, k=50)}
+    fsck = fsck_index(small_index, deep=True)
+    assert fsck["ok"], fsck["errors"]
+
+
 def test_append_grows_index(spark, small_index):
     stats0 = json.load(open(f"{small_index}/stats.json"))
     segs0 = len(read_manifest(small_index))
